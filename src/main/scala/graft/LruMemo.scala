@@ -1,8 +1,7 @@
 package graft
 
 /** Bounded access-ordered memo for staged intermediates (checkpointed
-  * DataFrames, corpus indexes). Same LRU shape as the service plan cache
-  * (FlightSqlService.planCache): inserting past capacity evicts the
+  * DataFrames, corpus indexes): inserting past capacity evicts the
   * least-recently-used entry only, so a long-running multi-tenant server
   * keeps the other sessions' staged signatures warm instead of
   * clear()-ing the world. Evicted entries just recompute; dropping the
@@ -54,14 +53,4 @@ private[graft] final class LruMemo[K, V](capacity: Int) {
   /** Test probes. */
   private[graft] def contains(key: K): Boolean = map.synchronized(map.containsKey(key))
   private[graft] def size: Int = map.synchronized(map.size())
-
-  /** Count of entries whose (computed) value satisfies p — forces the
-    * snapshot's cells OUTSIDE the map lock, like any reader.
-    */
-  private[graft] def countValues(p: V => Boolean): Int = {
-    val cells = map.synchronized(new java.util.ArrayList(map.values()))
-    var n = 0
-    cells.forEach(c => if (p(c.value)) n += 1)
-    n
-  }
 }

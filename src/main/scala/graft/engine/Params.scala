@@ -5,7 +5,6 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.NamedParameter
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -202,73 +201,6 @@ object Params {
         Positional(entries.sortBy(_._2.get).map(_._3))
       else
         Named(entries.map(e => e._1 -> e._3).toMap))
-  }
-
-  /** Count of template builds (parse + gate + inference + analysis), for
-    * the FlightSqlServiceSpec assertion that N executions of one prepared
-    * statement pay exactly one analysis.
-    */
-  private[graft] val templateBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Build the ANALYZED parameter template for a parameterized SQL text:
-    * one parse, one gate verification, one type-inference pass, one
-    * analysis — after which [[bindIntoTemplate]] executes arbitrarily many
-    * value bindings with none of those. Placeholders become typed
-    * [[org.apache.spark.sql.graftbridge.ParamHole]] leaves that survive
-    * analysis. Returns None for parameter-free SQL (the plain plan cache's
-    * job); throws UninferableParameter when a placeholder's type cannot be
-    * determined (callers fall back to the uncached [[bind]] path, which
-    * lets Spark bind untyped values directly).
-    */
-  def prepareTemplate(
-      spark: SparkSession,
-      sql: String,
-      options: SqlOptions = SqlOptions()): Option[LogicalPlan] = {
-    val (rewritten, mapping) = rewrite(sql)
-    if (mapping.isEmpty) return None
-    templateBuilds.incrementAndGet()
-    val types = parameterTypes(spark, sql)
-      .map { case (name, t) => name.stripPrefix("$") -> t }.toMap
-    val parsed = spark.sessionState.sqlParser.parsePlan(rewritten)
-    SqlGate.verify(parsed, options)
-    val substituted = parsed.transformAllExpressionsWithSubqueries {
-      case NamedParameter(marker) =>
-        val original = marker.stripPrefix(markerPrefix)
-        types.get(original) match {
-          case Some(t) => org.apache.spark.sql.graftbridge.ParamHole(original, t)
-          case None => throw UninferableParameter(original)
-        }
-    }
-    Some(spark.sessionState.analyzer.executeAndCheck(
-      substituted, new org.apache.spark.sql.catalyst.QueryPlanningTracker))
-  }
-
-  /** Execute a cached template with concrete values: swap each hole for a
-    * same-type Literal (the tree stays analyzed — no parse, no gate, no
-    * re-inference) and hand the plan to the session. Throws if a hole has
-    * no value or a value does not fit the inferred type; callers fall back
-    * to [[bind]] so error behavior stays canonical.
-    */
-  def bindIntoTemplate(
-      spark: SparkSession,
-      template: LogicalPlan,
-      parameters: Option[Array[Byte]]): Option[DataFrame] = {
-    val params = parameters.filter(_.nonEmpty).flatMap(decodeParamValues)
-    params.map { p =>
-      val args: Map[String, Any] = p match {
-        case Positional(values) =>
-          values.zipWithIndex.map { case (v, i) => (i + 1).toString -> v }.toMap
-        case Named(values) => values
-      }
-      val bound = template.transformAllExpressionsWithSubqueries {
-        case h: org.apache.spark.sql.graftbridge.ParamHole =>
-          Literal.create(
-            args.getOrElse(h.name,
-              throw new IllegalArgumentException(s"no value bound for $$${h.name}")),
-            h.dataType)
-      }
-      org.apache.spark.sql.graftbridge.SparkArrowBridge.ofRows(spark, bound)
-    }
   }
 
   /** Plan a SQL text with bound parameters: rewrite `$x` → `:gp_x`, verify

@@ -202,11 +202,6 @@ object ArrowCodec {
     case other => other
   }
 
-  /** Number of data-bearing rows in an IPC stream without materializing
-    * values (for the ≤1-row parameter enforcement, service.rs:849-853).
-    */
-  def countRows(bytes: Array[Byte]): Int = decode(bytes).rows.size
-
   // ---- standalone schema message codec (A24) ----
 
   def encodeSchema(schema: ArrowSchema): Array[Byte] = {

@@ -31,18 +31,10 @@ object Status {
   def unauthenticated(msg: String): Status = Status(Unauthenticated, msg)
 }
 
-/** Mirrors config.rs:1-14 (`schemaWithMetadata`), plus one engine-side
-  * knob the reference doesn't have: `planCacheSize` bounds an optional LRU
-  * of analyzed statement plans. The reference deliberately re-plans every
-  * request from SQL text (statelessness invariant, SURVEY §3.4); that
-  * costs a parse+analyze on DoGet for a statement GetFlightInfo already
-  * planned. OFF by default (0 = reference behavior); when enabled, only
-  * parameter-free statements are cached (parameterized text must keep its
-  * per-path semantics), keyed per session so per-user isolation holds.
+/** Mirrors config.rs:1-14: `schemaWithMetadata` adds each field's source
+  * `table_name` to result schemas.
   */
-final case class FlightSqlServiceConfig(
-    schemaWithMetadata: Boolean = false,
-    planCacheSize: Int = 0)
+final case class FlightSqlServiceConfig(schemaWithMetadata: Boolean = false)
 
 /** FlightInfo: result schema (known BEFORE execution) + the opaque ticket
   * the client passes back to doGet — possibly on a different instance
@@ -100,13 +92,7 @@ class FlightSqlService(
     val base = SparkArrowBridge.toArrowSchema(
       df.schema, df.sparkSession.sessionState.conf.sessionLocalTimeZone)
     if (!config.schemaWithMetadata) base
-    else {
-      val meta = SparkArrowBridge.outputQualifiers(df).map {
-        case (_, Some(q)) => Map("table_name" -> q)
-        case _ => Map.empty[String, String]
-      }
-      ArrowCodec.withFieldMetadata(base, meta)
-    }
+    else ArrowCodec.withFieldMetadata(base, fieldMetadata(df))
   }
 
   private def fieldMetadata(df: DataFrame): Seq[Map[String, String]] =
@@ -114,122 +100,6 @@ class FlightSqlService(
     else SparkArrowBridge.outputQualifiers(df).map {
       case (_, Some(q)) => Map("table_name" -> q)
       case _ => Map.empty[String, String]
-    }
-
-  /** Opt-in LRU of analyzed plans for parameter-free statements (see
-    * FlightSqlServiceConfig.planCacheSize). A GetFlightInfo/DoGet pair for
-    * the same statement then parses + analyzes once, not twice; DataFrames
-    * are immutable and lazy, so reuse across calls on the same session is
-    * safe. Parameterized SQL never enters (its two paths differ: schema
-    * planning substitutes typed NULLs, execution must reject unbound
-    * markers exactly as without the cache).
-    */
-  private val planCache =
-    new java.util.LinkedHashMap[(Int, String), DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String), DataFrame]): Boolean =
-        size() > config.planCacheSize
-    }
-
-  /** Test probe: current number of cached plans. */
-  private[service] def planCacheEntries: Int = planCache.synchronized(planCache.size)
-
-  /** LRU of ANALYZED parameter templates for parameterized prepared
-    * statements (same bound and keying as [[planCache]]): the template —
-    * parse + gate + type inference + analysis, with typed ParamHole
-    * leaves where values go — is built once per (session, SQL text), at
-    * create_prepared_statement or first execution, and every execution
-    * after that only swaps same-type literals into the analyzed tree.
-    * Anything template-ineligible (parameter-free text, uninferable
-    * placeholder types) is NEGATIVE-cached as None so repeat executions
-    * skip straight to the uncached [[Params.bind]] path instead of
-    * re-running the parse + inference probes every time; the entries are
-    * graft.LruMemo lazy cells, so a cold template build never blocks
-    * other sessions' lookups.
-    */
-  private val paramTemplateCache = new graft.LruMemo[
-    (Int, String), Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]](
-    math.max(1, config.planCacheSize))
-
-  /** Test probe: number of POSITIVE cached templates. */
-  private[service] def paramTemplateEntries: Int =
-    paramTemplateCache.countValues(_.isDefined)
-
-  /** Count of silent NonFatal→fallback drops on the template path (build
-    * OR bind). The canonical Params.bind path makes the fallback
-    * correctness-safe, but a regression that made every template throw
-    * would otherwise degrade all prepared statements to triple planning
-    * with no signal — the same observability rule as
-    * Params.templateBuilds, and FlightSqlServiceSpec pins it at ZERO on
-    * the happy path.
-    */
-  private[service] val templateFallbacks =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Template for (session, sql), building + caching on miss; None when
-    * caching is off, the SQL is parameter-free, or the template cannot be
-    * built (uninferable types) — the None is cached too.
-    */
-  private def cachedTemplate(
-      spark: SparkSession,
-      sql: String): Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
-    if (config.planCacheSize <= 0) None
-    else paramTemplateCache.getOrElseUpdate((System.identityHashCode(spark), sql)) {
-      try Params.prepareTemplate(spark, sql, sqlOptions)
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          templateFallbacks.incrementAndGet(); None
-      }
-    }
-
-  /** Prepared-statement execution: bind into the cached analyzed template
-    * when possible, else the canonical uncached path. A fallback re-plan
-    * names unaliased parameter projections from the BOUND literal
-    * (`(id + 2)`) while the prepare-time schema named them from the
-    * template's `$n` marker — so when a template exists, the fallback's
-    * output is renamed positionally to the template's field names and a
-    * client never sees a DoGet schema that disagrees with what prepare
-    * promised. (No template at all — caching off or build failed — means
-    * prepare-time schema came from the same planForSchema/bind pipeline,
-    * so there is nothing to reconcile.)
-    */
-  private def boundPrepared(
-      spark: SparkSession,
-      sql: String,
-      parameters: Option[Array[Byte]]): DataFrame = {
-    val template =
-      try cachedTemplate(spark, sql)
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          templateFallbacks.incrementAndGet(); None
-      }
-    val viaTemplate =
-      try template.flatMap(t => Params.bindIntoTemplate(spark, t, parameters))
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          templateFallbacks.incrementAndGet(); None
-      }
-    viaTemplate.getOrElse {
-      val df = Params.bind(spark, sql, parameters, sqlOptions)
-      // Rename only when the fallback's shape still matches the template:
-      // if the catalog changed under the cached template (view re-registered
-      // with different columns), the fresh re-plan is the truth and forcing
-      // the stale names would mislabel or break it.
-      template
-        .filter(_.output.length == df.columns.length)
-        .map(t => df.toDF(t.output.map(_.name): _*))
-        .getOrElse(df)
-    }
-  }
-
-  private def plannedStatement(spark: SparkSession, sql: String)(
-      plan: => DataFrame): DataFrame =
-    if (config.planCacheSize <= 0 || Params.rewrite(sql)._2.nonEmpty) plan
-    else planCache.synchronized {
-      val key = (System.identityHashCode(spark), sql)
-      val hit = planCache.get(key)
-      if (hit != null) hit
-      else { val df = plan; planCache.put(key, df); df }
     }
 
   // ---- handshake (A5): auth belongs to transport middleware ----
@@ -240,7 +110,7 @@ class FlightSqlService(
 
   def getFlightInfoStatement(sql: String, meta: Meta = noMeta): FlightInfo = wrap {
     val spark = provider.session(meta)
-    val df = plannedStatement(spark, sql)(Params.planForSchema(spark, sql, sqlOptions))
+    val df = Params.planForSchema(spark, sql, sqlOptions)
     FlightInfo(
       ArrowCodec.encodeSchema(schemaForPlan(df)),
       CommandTicket(CommandStatementQuery(sql)).encode)
@@ -301,11 +171,11 @@ class FlightSqlService(
     val spark = provider.session(meta)
     CommandTicket.decode(ticketBytes).command match {
       case CommandStatementQuery(sql) =>
-        val df = plannedStatement(spark, sql)(SqlGate.plan(spark, sql, sqlOptions))
+        val df = SqlGate.plan(spark, sql, sqlOptions)
         ArrowCodec.encodeStream(df, fieldMetadata(df))
       case CommandPreparedStatementQuery(handleBytes) =>
         val handle = QueryHandle.decode(handleBytes)
-        val df = boundPrepared(spark, handle.query, handle.parameters)
+        val df = Params.bind(spark, handle.query, handle.parameters, sqlOptions)
         ArrowCodec.encodeStream(df, fieldMetadata(df))
       case CommandStatementSubstraitPlan(plan) =>
         // service.rs:274-303: deserialize → logical plan → execute stream
@@ -325,14 +195,7 @@ class FlightSqlService(
   def createPreparedStatement(sql: String, meta: Meta = noMeta): PreparedStatementResult =
     wrap {
       val spark = provider.session(meta)
-      // warm the parameter-template cache AND reuse the analyzed template
-      // for the dataset schema — the holes are typed, so the schema equals
-      // the NULL-substituted probe's without a second parse+analysis
-      // (falls back to planForSchema when caching is off or the text is
-      // parameter-free / template-ineligible)
-      val df = cachedTemplate(spark, sql)
-        .map(t => SparkArrowBridge.ofRows(spark, t))
-        .getOrElse(Params.planForSchema(spark, sql, sqlOptions))
+      val df = Params.planForSchema(spark, sql, sqlOptions)
       val paramFields = Params.parameterTypes(spark, sql)
         .map { case (name, t) => StructField(name, t, nullable = false) }
       val paramSchema = SparkArrowBridge.toArrowSchema(

@@ -177,7 +177,7 @@ final class SocketClient(host: String, port: Int) {
 
   /** Concatenated Arrow IPC stream bytes. */
   def doGet(ticket: Array[Byte]): Array[Byte] =
-    call(OpDoGet, ticket).foldLeft(Array.emptyByteArray)(_ ++ _)
+    Array.concat(call(OpDoGet, ticket): _*)
 
   def close(): Unit = socket.close()
 }

@@ -38,30 +38,6 @@ class FlightSqlServiceSpec extends AnyFunSuite {
     assert(result.rows.map(_(1)).toSet == Set("Alice", "Bob", "Charlie"))
   }
 
-  test("opt-in plan cache: GetFlightInfo + DoGet plan once, params bypass, LRU bounds") {
-    val cached = new FlightSqlService(
-      new StaticSessionProvider(spark), FlightSqlServiceConfig(planCacheSize = 2))
-    assert(cached.planCacheEntries == 0)
-    val info = cached.getFlightInfoStatement("SELECT * FROM users")
-    assert(cached.planCacheEntries == 1)
-    // DoGet reuses the cached analyzed plan (no second entry) and the
-    // results are identical to the uncached service
-    val result = ArrowCodec.decode(cached.doGet(info.ticket).toBytes)
-    assert(cached.planCacheEntries == 1)
-    assert(result.rows.size == 3)
-    assert(result.rows.map(_(1)).toSet == Set("Alice", "Bob", "Charlie"))
-    // parameterized text never enters the cache
-    cached.getFlightInfoStatement("SELECT * FROM users WHERE id = $1")
-    assert(cached.planCacheEntries == 1)
-    // LRU bound: a third distinct statement evicts the eldest
-    cached.getFlightInfoStatement("SELECT name FROM users")
-    cached.getFlightInfoStatement("SELECT id FROM users")
-    assert(cached.planCacheEntries == 2)
-    // default config stays reference-faithful: nothing is cached
-    service.getFlightInfoStatement("SELECT * FROM users")
-    assert(service.planCacheEntries == 0)
-  }
-
   test("filtered SELECT name WHERE id > 1: 2 rows (integration_test.rs:116-146)") {
     val result = fetch(service, "SELECT name FROM users WHERE id > 1")
     assert(result.schema.getFields.size == 1)
@@ -137,9 +113,7 @@ class FlightSqlServiceSpec extends AnyFunSuite {
     assert(result.rows == Seq(Seq("Bob")))
   }
 
-  test("parameterized plan cache: one analysis serves executions with different values") {
-    val cached = new FlightSqlService(
-      new StaticSessionProvider(spark), FlightSqlServiceConfig(planCacheSize = 2))
+  test("prepared statement: one handle executes with different bound values") {
     def paramBytes(id: Int): Array[Byte] = {
       import org.apache.spark.sql.types._
       import org.apache.spark.sql.Row
@@ -148,62 +122,16 @@ class FlightSqlServiceSpec extends AnyFunSuite {
         StructType(Seq(StructField("$1", IntegerType, nullable = false))))).toBytes
     }
     def run(created: PreparedStatementResult, id: Int): Seq[Seq[Any]] = {
-      val handle = cached.doPutPreparedStatementQuery(created.handle, paramBytes(id))
-      ArrowCodec.decode(cached.doGet(
+      val handle = service.doPutPreparedStatementQuery(created.handle, paramBytes(id))
+      ArrowCodec.decode(service.doGet(
         CommandTicket(CommandPreparedStatementQuery(handle)).encode).toBytes).rows
     }
-    val before = graft.engine.Params.templateBuilds.get()
-    val created = cached.createPreparedStatement("SELECT name FROM users WHERE id = $1")
-    assert(cached.paramTemplateEntries == 1, "create must warm the template cache")
+    val created = service.createPreparedStatement("SELECT name FROM users WHERE id = $1")
     assert(run(created, 2) == Seq(Seq("Bob")))
     assert(run(created, 3) == Seq(Seq("Charlie")))
-    assert(graft.engine.Params.templateBuilds.get() - before == 1,
-      "two executions with different $1 values must share ONE parse+gate+analysis")
-    assert(cached.paramTemplateEntries == 1)
-    assert(cached.templateFallbacks.get() == 0,
-      "the happy path must never take the silent NonFatal->canonical fallback")
-    // default config never builds templates (reference-faithful re-plan)
-    service.createPreparedStatement("SELECT name FROM users WHERE id = $1")
-    assert(service.paramTemplateEntries == 0)
   }
 
-  test("unaliased parameter projections keep one stable field name on every path") {
-    val cached = new FlightSqlService(
-      new StaticSessionProvider(spark), FlightSqlServiceConfig(planCacheSize = 2))
-    def paramBytes(v: Any, t: org.apache.spark.sql.types.DataType): Array[Byte] = {
-      import org.apache.spark.sql.types._
-      import org.apache.spark.sql.Row
-      ArrowCodec.encodeStream(spark.createDataFrame(
-        java.util.Arrays.asList(Row(v)),
-        StructType(Seq(StructField("$1", t, nullable = false))))).toBytes
-    }
-    // prepare-time dataset schema: named from the template's $1 marker,
-    // not the internal ParamHole token and not a bound value
-    val created = cached.createPreparedStatement("SELECT id + $1 FROM users")
-    val prepName = ArrowCodec.decodeSchema(created.datasetSchema).getFields.get(0).getName
-    assert(prepName == "(id + $1)", s"prepare-time field name was $prepName")
-    // template execution: same name
-    import org.apache.spark.sql.types.{IntegerType, StringType}
-    val viaTemplate = cached.doGet(CommandTicket(CommandPreparedStatementQuery(
-      cached.doPutPreparedStatementQuery(created.handle, paramBytes(1, IntegerType))))
-      .encode)
-    assert(ArrowCodec.decode(viaTemplate.toBytes).schema.getFields.get(0).getName == prepName,
-      "template execution must serve the prepare-time field name")
-    // type-mismatch fallback: a string value cannot enter the INT hole, so
-    // execution re-plans through Params.bind (which would name the column
-    // from the coerced literal) — the service must rename it back
-    val before = cached.templateFallbacks.get()
-    val viaFallback = cached.doGet(CommandTicket(CommandPreparedStatementQuery(
-      cached.doPutPreparedStatementQuery(created.handle, paramBytes("1", StringType))))
-      .encode)
-    assert(cached.templateFallbacks.get() > before, "the string value must take the fallback")
-    assert(ArrowCodec.decode(viaFallback.toBytes).schema.getFields.get(0).getName == prepName,
-      "the fallback re-plan must not leak a bound-value-derived field name")
-  }
-
-  test("parameterized plan cache: named params bind; uninferable types fall back") {
-    val cached = new FlightSqlService(
-      new StaticSessionProvider(spark), FlightSqlServiceConfig(planCacheSize = 2))
+  test("prepared statement: named params bind; uninferable types still execute") {
     def bytesFor(field: String, v: Int): Array[Byte] = {
       import org.apache.spark.sql.types._
       import org.apache.spark.sql.Row
@@ -211,34 +139,29 @@ class FlightSqlServiceSpec extends AnyFunSuite {
         java.util.Arrays.asList(Row(v)),
         StructType(Seq(StructField(field, IntegerType, nullable = false))))).toBytes
     }
-    // named parameter goes through the template (field name "uid", not $n)
-    val named = cached.createPreparedStatement("SELECT name FROM users WHERE id = $uid")
-    assert(cached.paramTemplateEntries == 1)
-    val h1 = cached.doPutPreparedStatementQuery(named.handle, bytesFor("uid", 3))
-    val r1 = ArrowCodec.decode(cached.doGet(
+    // named parameter (field name "uid", not $n)
+    val named = service.createPreparedStatement("SELECT name FROM users WHERE id = $uid")
+    val h1 = service.doPutPreparedStatementQuery(named.handle, bytesFor("uid", 3))
+    val r1 = ArrowCodec.decode(service.doGet(
       CommandTicket(CommandPreparedStatementQuery(h1)).encode).toBytes).rows
     assert(r1 == Seq(Seq("Charlie")))
     // uninferable placeholder type (bare projection): create rejects it
     // with the reference's UninferableParameter, but tickets are
     // STATELESS — a client can hand-construct the handle and execute
-    // anyway. The template build fails for it, so execution must route
-    // through the uncached Params.bind path and still produce the value.
+    // anyway, and Spark binds the untyped value directly.
     val e = intercept[Status] {
-      cached.createPreparedStatement("SELECT $1 AS x FROM users WHERE id = 1")
+      service.createPreparedStatement("SELECT $1 AS x FROM users WHERE id = 1")
     }
     assert(e.message.contains("unable to determine type of query parameter"))
     val handMade = QueryHandle(
       "SELECT $1 AS x FROM users WHERE id = 1", Some(bytesFor("$1", 42))).encode
-    val r2 = ArrowCodec.decode(cached.doGet(
+    val r2 = ArrowCodec.decode(service.doGet(
       CommandTicket(CommandPreparedStatementQuery(handMade)).encode).toBytes).rows
     assert(r2 == Seq(Seq(42)))
-    assert(cached.paramTemplateEntries == 1, "uninferable SQL must not enter the cache")
   }
 
-  test("parameterized plan cache: NULL parameter values bind through the template") {
-    val cached = new FlightSqlService(
-      new StaticSessionProvider(spark), FlightSqlServiceConfig(planCacheSize = 2))
-    val created = cached.createPreparedStatement("SELECT name FROM users WHERE id = $1")
+  test("prepared statement: a NULL parameter value matches nothing") {
+    val created = service.createPreparedStatement("SELECT name FROM users WHERE id = $1")
     val nullParam = {
       import org.apache.spark.sql.types._
       import org.apache.spark.sql.Row
@@ -246,8 +169,8 @@ class FlightSqlServiceSpec extends AnyFunSuite {
         java.util.Arrays.asList(Row(null)),
         StructType(Seq(StructField("$1", IntegerType, nullable = true))))).toBytes
     }
-    val handle = cached.doPutPreparedStatementQuery(created.handle, nullParam)
-    val rows = ArrowCodec.decode(cached.doGet(
+    val handle = service.doPutPreparedStatementQuery(created.handle, nullParam)
+    val rows = ArrowCodec.decode(service.doGet(
       CommandTicket(CommandPreparedStatementQuery(handle)).encode).toBytes).rows
     assert(rows.isEmpty, s"id = NULL must match nothing, got $rows")
   }
@@ -501,5 +424,16 @@ class FlightSqlServiceSpec extends AnyFunSuite {
     val other = new FlightSqlService(new StaticSessionProvider(spark))
     val result = ArrowCodec.decode(other.doGet(info.ticket).toBytes)
     assert(result.rows == Seq(Seq(4L)))
+  }
+
+  test("DoGet re-plans from SQL text: a view re-registered after GetFlightInfo serves its new rows") {
+    spark.sql("SELECT 1 AS a").createOrReplaceTempView("replan_probe")
+    try {
+      val info = service.getFlightInfoStatement("SELECT * FROM replan_probe")
+      spark.sql("SELECT 2 AS a, 'x' AS b").createOrReplaceTempView("replan_probe")
+      val result = ArrowCodec.decode(service.doGet(info.ticket).toBytes)
+      assert(result.schema.getFields.size == 2)
+      assert(result.rows == Seq(Seq(2, "x")))
+    } finally spark.catalog.dropTempView("replan_probe")
   }
 }

@@ -12,22 +12,20 @@ import graft.ipc.ArrowCodec
 import graft.protocol.Commands._
 
 /** Concurrency pin for the service layer: a long-running server fields
-  * many clients at once, and the shared mutable state — the plan cache,
-  * the parameter-template cache, Spark's own session state — must stay
-  * consistent under contention. 8 threads × mixed workload (ad-hoc
-  * statements, prepared statements with different bound values, catalog
-  * metadata), every result checked for the exact expected rows; any
-  * cross-request bleed (a value bound by one thread surfacing in
-  * another's result) or cache corruption fails the assertion, not just
-  * the absence of exceptions.
+  * many clients at once, and the shared mutable state — Spark's own
+  * session state — must stay consistent under contention. 8 threads ×
+  * mixed workload (ad-hoc statements, prepared statements with different
+  * bound values, catalog metadata), every result checked for the exact
+  * expected rows; any cross-request bleed (a value bound by one thread
+  * surfacing in another's result) fails the assertion, not just the
+  * absence of exceptions.
   */
 class ServiceConcurrencySpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.fixtures()
 
   test("mixed statement/prepared/metadata workload is linearizable under 8 threads") {
-    val service = new FlightSqlService(
-      new StaticSessionProvider(spark), FlightSqlServiceConfig(planCacheSize = 4))
+    val service = new FlightSqlService(new StaticSessionProvider(spark))
     val users = Map(1 -> "Alice", 2 -> "Bob", 3 -> "Charlie")
 
     def paramBytes(id: Int): Array[Byte] = {

@@ -95,4 +95,23 @@ class SocketTransportSpec extends AnyFunSuite {
       assert(results == Seq(4L, 5L, 6L, 7L))
     } finally server.stop()
   }
+
+  test("a multi-frame result crosses the socket byte-identical to the in-process stream") {
+    val spark = TestSpark.fixtures()
+    val service = new FlightSqlService(new StaticSessionProvider(spark))
+    val server = new SocketServer(service)
+    val port = server.start()
+    try {
+      val client = new SocketClient("127.0.0.1", port)
+      try {
+        // 10,000 rows span several 4096-row record batches
+        val (_, ticket) = client.getFlightInfoStatement("SELECT id FROM range(10000) ORDER BY id")
+        val overSocket = client.doGet(ticket)
+        assert(overSocket.sameElements(service.doGet(ticket).toBytes))
+        val rows = ArrowCodec.decode(overSocket).rows
+        assert(rows.size == 10000)
+        assert(rows.map(_.head) == (0L until 10000L))
+      } finally client.close()
+    } finally server.stop()
+  }
 }
