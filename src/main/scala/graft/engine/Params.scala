@@ -157,24 +157,24 @@ object Params {
   }
 
   /** Analyzed-but-unexecuted plan for a (possibly parameterized) SQL text:
-    * placeholders are substituted with typed NULLs so analysis can produce
-    * the result schema without bound parameters (the reference plans
-    * placeholder queries the same way for GetFlightInfo, service.rs:388-425).
+    * placeholders are substituted with NULLs of their `parameterTypes` so
+    * analysis can produce the result schema without bound parameters (the
+    * reference plans placeholder queries the same way for GetFlightInfo,
+    * service.rs:388-425).
     */
   def planForSchema(
       spark: SparkSession,
       sql: String,
-      options: SqlOptions = SqlOptions()): DataFrame = {
+      types: Seq[(String, DataType)],
+      options: SqlOptions): DataFrame = {
     val (rewritten, mapping) = rewrite(sql)
     if (mapping.isEmpty) return SqlGate.plan(spark, sql, options)
-    val types = parameterTypes(spark, sql)
-      .map { case (name, t) => name.stripPrefix("$") -> t }.toMap
+    val typeOf = types.toMap
     val parsed = spark.sessionState.sqlParser.parsePlan(rewritten)
     SqlGate.verify(parsed, options)
     val substituted = parsed.transformAllExpressionsWithSubqueries {
       case NamedParameter(marker) =>
-        val original = marker.stripPrefix(markerPrefix)
-        Literal.create(null, types.getOrElse(original, StringType))
+        Literal.create(null, typeOf("$" + marker.stripPrefix(markerPrefix)))
     }
     org.apache.spark.sql.graftbridge.SparkArrowBridge.ofRows(spark, substituted)
   }

@@ -7,9 +7,8 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter, ReadChannel, WriteChannel}
-import org.apache.arrow.vector.ipc.message.MessageSerializer
+import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
 import org.apache.arrow.vector.types.pojo.{Field, FieldType, Schema => ArrowSchema}
 import org.apache.arrow.vector.util.Text
 
@@ -22,33 +21,28 @@ import org.apache.spark.sql.graftbridge.SparkArrowBridge
   * results (mirrors encode_schema/decode_schema,
   * datafusion-flight-sql-server/src/service.rs:1032-1041, 1123-1141).
   *
-  * Encoding is streaming: the result iterator is pulled partition-at-a-time
-  * (executeToIterator), each batch flushed as its own IPC frame — no
-  * server-side buffering of the full result (mirrors service.rs:230-236).
+  * Encoding is streaming: each partition is encoded into record batches
+  * inside its own Spark task (SparkArrowBridge.arrowBatches) and the Spark driver
+  * pulls the encoded partitions one job at a time, in partition order,
+  * forwarding each batch as its own IPC frame — no driver-side row writing
+  * and no buffering of the full result (mirrors service.rs:230-236).
   */
 object ArrowCodec {
 
-  val defaultBatchSize = 4096
+  /** Rows per record batch. Batches never span partitions, so a partition
+    * of n rows yields ceil(n / batchSize) frames.
+    */
+  private val batchSize = 4096
 
   /** One encoded result stream: the concatenation of `frames` is a complete
     * Arrow IPC stream (schema message, N record batches, EOS).
     */
-  final case class EncodedStream(
-      arrowSchema: ArrowSchema,
-      frames: Iterator[Array[Byte]],
-      private val closer: () => Unit = () => ()) {
+  final case class EncodedStream(arrowSchema: ArrowSchema, frames: Iterator[Array[Byte]]) {
     def toBytes: Array[Byte] = {
       val out = new ByteArrayOutputStream()
       frames.foreach(out.write)
       out.toByteArray
     }
-
-    /** Idempotent. Releases the stream's Arrow direct-memory buffers when
-      * the frame iterator is abandoned before natural completion (execution
-      * error mid-stream, client disconnect) — without this, every failed
-      * DoGet leaks a RootAllocator in a long-running server.
-      */
-    def close(): Unit = closer()
   }
 
   /** Attach per-field metadata (e.g. table_name qualifiers, A23) to an
@@ -69,79 +63,27 @@ object ArrowCodec {
     new ArrowSchema(fields.asJava)
   }
 
-  /** Lazily encode a DataFrame as an Arrow IPC stream. */
+  /** Lazily encode a DataFrame as an Arrow IPC stream: the schema frame
+    * first, then one frame per record batch as the caller pulls it, then
+    * the end-of-stream marker. Nothing executes until the first batch is
+    * pulled.
+    */
   def encodeStream(
       df: DataFrame,
-      fieldMetadata: Seq[Map[String, String]] = Seq.empty,
-      batchSize: Int = defaultBatchSize): EncodedStream = {
+      fieldMetadata: Seq[Map[String, String]] = Seq.empty): EncodedStream = {
     val arrowSchema = withFieldMetadata(
       SparkArrowBridge.toArrowSchema(df.schema, df.sparkSession.sessionState.conf.sessionLocalTimeZone),
       fieldMetadata)
+    val frames = Iterator.single(encodeSchema(arrowSchema)) ++
+      SparkArrowBridge.arrowBatches(df, batchSize) ++
+      Iterator.single(endOfStream)
+    EncodedStream(arrowSchema, frames)
+  }
 
-    abstract class CloseableFrames extends Iterator[Array[Byte]] {
-      def close(): Unit
-    }
-    val frames = new CloseableFrames {
-      private val allocator = new RootAllocator(Long.MaxValue)
-      private val root = VectorSchemaRoot.create(arrowSchema, allocator)
-      private val writer = SparkArrowBridge.createWriter(root)
-      private val out = new ByteArrayOutputStream()
-      private val streamWriter = new ArrowStreamWriter(root, null, Channels.newChannel(out))
-      private var rows: Iterator[org.apache.spark.sql.catalyst.InternalRow] = _
-      private var started = false
-      private var finished = false
-      private var closed = false
-
-      override def close(): Unit = if (!closed) {
-        closed = true
-        finished = true
-        root.close()
-        allocator.close()
-      }
-
-      private def takeChunk(): Array[Byte] = {
-        val chunk = out.toByteArray
-        out.reset()
-        chunk
-      }
-
-      override def hasNext: Boolean = !finished
-
-      // Any failure (executor error surfacing through the row iterator,
-      // vector write error) closes the direct-memory buffers before the
-      // exception escapes to the transport.
-      override def next(): Array[Byte] = try {
-        if (!started) {
-          started = true
-          streamWriter.start() // schema message
-          rows = SparkArrowBridge.internalRowIterator(df)
-          return takeChunk()
-        }
-        if (rows.hasNext) {
-          var n = 0
-          while (rows.hasNext && n < batchSize) {
-            writer.write(rows.next())
-            n += 1
-          }
-          writer.finish()
-          streamWriter.writeBatch()
-          writer.reset()
-          takeChunk()
-        } else {
-          streamWriter.end() // EOS marker
-          val chunk = takeChunk()
-          close()
-          chunk
-        }
-      } catch {
-        case t: Throwable =>
-          // cleanup must never mask the execution error (allocator.close
-          // itself throws on outstanding buffers)
-          try close() catch { case c: Throwable => t.addSuppressed(c) }
-          throw t
-      }
-    }
-    EncodedStream(arrowSchema, frames, () => frames.close())
+  private def endOfStream: Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    ArrowStreamWriter.writeEndOfStream(new WriteChannel(Channels.newChannel(out)), IpcOption.DEFAULT)
+    out.toByteArray
   }
 
   /** Decoded IPC stream: schema + row-major values (Arrow `Text` → String).

@@ -110,7 +110,7 @@ class FlightSqlService(
 
   def getFlightInfoStatement(sql: String, meta: Meta = noMeta): FlightInfo = wrap {
     val spark = provider.session(meta)
-    val df = Params.planForSchema(spark, sql, sqlOptions)
+    val df = Params.planForSchema(spark, sql, Params.parameterTypes(spark, sql), sqlOptions)
     FlightInfo(
       ArrowCodec.encodeSchema(schemaForPlan(df)),
       CommandTicket(CommandStatementQuery(sql)).encode)
@@ -120,7 +120,8 @@ class FlightSqlService(
     wrap {
       val spark = provider.session(meta)
       val handle = QueryHandle.decode(handleBytes)
-      val df = Params.planForSchema(spark, handle.query, sqlOptions)
+      val df = Params.planForSchema(
+        spark, handle.query, Params.parameterTypes(spark, handle.query), sqlOptions)
       FlightInfo(
         ArrowCodec.encodeSchema(schemaForPlan(df)),
         CommandTicket(CommandPreparedStatementQuery(handleBytes)).encode)
@@ -195,9 +196,9 @@ class FlightSqlService(
   def createPreparedStatement(sql: String, meta: Meta = noMeta): PreparedStatementResult =
     wrap {
       val spark = provider.session(meta)
-      val df = Params.planForSchema(spark, sql, sqlOptions)
-      val paramFields = Params.parameterTypes(spark, sql)
-        .map { case (name, t) => StructField(name, t, nullable = false) }
+      val paramTypes = Params.parameterTypes(spark, sql)
+      val df = Params.planForSchema(spark, sql, paramTypes, sqlOptions)
+      val paramFields = paramTypes.map { case (name, t) => StructField(name, t, nullable = false) }
       val paramSchema = SparkArrowBridge.toArrowSchema(
         StructType(paramFields), spark.sessionState.conf.sessionLocalTimeZone)
       PreparedStatementResult(

@@ -92,8 +92,6 @@ final class SocketServer(service: FlightSqlService, host: String = "127.0.0.1") 
                     out.writeInt(-2)
                     writeFrame(out,
                       String.valueOf(e.getMessage).getBytes(StandardCharsets.UTF_8))
-                } finally {
-                  stream.close() // release Arrow buffers on error/disconnect (no-op after natural EOS)
                 }
               case OpCreatePreparedStatement =>
                 val res = service.createPreparedStatement(

@@ -1,21 +1,20 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.types.pojo.{Schema => ArrowSchema}
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.arrow.ArrowWriter
+import org.apache.spark.sql.execution.arrow.ArrowConverters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.ArrowUtils
 
-/** Bridge into Spark's `private[sql]` Arrow machinery (SURVEY §7.4: the
-  * supported alternative would be hand-rolled row→vector population; Spark's
-  * own ArrowWriter already handles every type in our surface — lists,
-  * decimals, timestamps — identically to what Spark's Python/R interop
-  * emits, so we expose exactly the three entry points the IPC layer needs).
+/** Bridge into Spark's `private[sql]` Arrow and plan machinery (SURVEY
+  * §7.4): Spark's own schema converter and batch encoder handle every type
+  * in our surface — lists, decimals, timestamps — identically to what
+  * Spark's Python/R interop emits, so the IPC layer never writes vectors
+  * itself.
   */
 object SparkArrowBridge {
 
@@ -28,14 +27,22 @@ object SparkArrowBridge {
   def fromArrowSchema(schema: ArrowSchema): StructType =
     ArrowUtils.fromArrowSchema(schema)
 
-  def createWriter(root: VectorSchemaRoot): ArrowWriterHandle =
-    new ArrowWriterHandle(ArrowWriter.create(root))
-
-  /** Lazy executor→driver iterator of the query result's InternalRows
-    * (partition-at-a-time, never a full collect).
+  /** The query result as serialized Arrow record-batch messages of at most
+    * `maxRowsPerBatch` rows. Each partition is encoded inside its own task
+    * (`ArrowConverters.toBatchIterator`, on a child of Spark's shared
+    * allocator that the task frees on completion); the driver pulls the
+    * encoded partitions lazily, one job each, in partition order — never a
+    * full collect. Physical planning happens on this call.
     */
-  def internalRowIterator(df: DataFrame): Iterator[InternalRow] =
-    df.asInstanceOf[ClassicDataset[_]].queryExecution.executedPlan.executeToIterator()
+  def arrowBatches(df: DataFrame, maxRowsPerBatch: Long): Iterator[Array[Byte]] = {
+    val schema = df.schema
+    val timeZoneId = df.sparkSession.sessionState.conf.sessionLocalTimeZone
+    df.asInstanceOf[ClassicDataset[_]].queryExecution.executedPlan.execute()
+      .mapPartitionsInternal(rows => ArrowConverters.toBatchIterator(rows, schema,
+        maxRowsPerBatch, timeZoneId, errorOnDuplicatedFieldNames = false,
+        largeVarTypes = false, TaskContext.get()))
+      .toLocalIterator
+  }
 
   /** Output column name → table qualifier (alias or table name) from the
     * analyzed plan, for the table_name field-metadata decoration (mirrors
@@ -50,10 +57,4 @@ object SparkArrowBridge {
     */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
-
-  final class ArrowWriterHandle(private val writer: ArrowWriter) {
-    def write(row: InternalRow): Unit = writer.write(row)
-    def finish(): Unit = writer.finish()
-    def reset(): Unit = writer.reset()
-  }
 }

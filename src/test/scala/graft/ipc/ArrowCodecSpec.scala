@@ -1,11 +1,16 @@
 package graft.ipc
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.graftbridge.SharedArrowMemory
 import org.apache.spark.sql.types._
 
 import graft.TestSpark
+import graft.engine.StaticSessionProvider
+import graft.service.{FlightSqlService, FlightSqlServiceConfig}
 
 /** Arrow IPC data-plane round-trips (SURVEY §2.A A4/A24): every fixture
   * type crosses the encode/decode boundary; schema messages round-trip
@@ -43,12 +48,50 @@ class ArrowCodecSpec extends AnyFunSuite {
   test("multi-batch streaming: frames arrive incrementally, concatenation decodes") {
     import spark.implicits._
     val df = spark.range(0, 10000).select($"id")
-    val stream = ArrowCodec.encodeStream(df, batchSize = 1024)
+    val stream = ArrowCodec.encodeStream(df)
     val frames = stream.frames.toSeq
     assert(frames.size >= 3) // schema + several batches + EOS
     val decoded = ArrowCodec.decode(frames.reduce(_ ++ _))
     assert(decoded.rows.size == 10000)
     assert(decoded.rows.map(_.head.asInstanceOf[Long]).sum == (0L until 10000L).sum)
+  }
+
+  test("an ORDER BY result spread over 8 partitions decodes in exact order") {
+    import org.apache.spark.sql.functions.desc
+    val df = spark.range(0, 10000, 1, 8).toDF("id").orderBy(desc("id"))
+    val rows = ArrowCodec.decode(ArrowCodec.encodeStream(df).toBytes).rows
+    assert(rows.map(_.head) == (9999L to 0L by -1L))
+  }
+
+  test("an empty result encodes as schema + EOS and decodes to zero rows") {
+    val df = spark.sql("SELECT id, CAST(id AS STRING) AS s FROM range(10) WHERE id < 0")
+    val frames = ArrowCodec.encodeStream(df).frames.toSeq
+    assert(frames.size == 2)
+    val decoded = ArrowCodec.decode(frames.reduce(_ ++ _))
+    assert(decoded.rows.isEmpty)
+    assert(decoded.schema.getFields.asScala.map(_.getName) == Seq("id", "s"))
+  }
+
+  test("duplicate output names encode and decode positionally") {
+    val decoded = ArrowCodec.decode(
+      ArrowCodec.encodeStream(spark.sql("SELECT 1 AS a, 2 AS a")).toBytes)
+    assert(decoded.schema.getFields.asScala.map(_.getName) == Seq("a", "a"))
+    assert(decoded.rows == Seq(Seq(1, 2)))
+  }
+
+  test("first frame is the encoded schema with table_name metadata; last is EOS") {
+    val fixtures = TestSpark.fixtures()
+    val service = new FlightSqlService(
+      new StaticSessionProvider(fixtures), FlightSqlServiceConfig(schemaWithMetadata = true))
+    val info = service.getFlightInfoStatement("SELECT id, name FROM users ORDER BY id")
+    val stream = service.doGet(info.ticket)
+    assert(stream.arrowSchema.getFields.asScala.map(_.getMetadata.get("table_name")) ==
+      Seq("users", "users"))
+    val frames = stream.frames.toSeq
+    assert(frames.head.sameElements(ArrowCodec.encodeSchema(stream.arrowSchema)))
+    assert(frames.head.sameElements(info.schemaBytes))
+    assert(frames.last.sameElements(Array[Byte](-1, -1, -1, -1, 0, 0, 0, 0)))
+    assert(ArrowCodec.decode(frames.reduce(_ ++ _)).rows.map(_.head) == Seq(1, 2, 3))
   }
 
   test("schema message round-trips standalone (encode_schema/decode_schema, A24)") {
@@ -68,27 +111,40 @@ class ArrowCodecSpec extends AnyFunSuite {
     assert(decoded.getFields.get(0).getMetadata.get("table_name") == "users")
   }
 
-  test("abandoned/failed streams release Arrow buffers (close is idempotent)") {
-    // Execution error mid-stream: the iterator's own catch must close the
-    // RootAllocator (allocator.close() throws if buffers leak, so a leak
-    // fails this test), and the transport's finally-close must be a no-op.
-    val failing = spark.sql("SELECT raise_error('boom') AS x FROM range(10)")
-    val stream = ArrowCodec.encodeStream(failing)
-    intercept[Throwable] { stream.frames.foreach(_ => ()) }
-    stream.close() // already closed by the error path — must not throw
-    stream.close() // idempotent
+  test("every stream outcome frees Spark's shared Arrow memory") {
+    // Batches are encoded in Spark tasks on children of the shared
+    // allocator; whatever way a stream ends, its memory must come back.
+    val shared = SharedArrowMemory.allocator
+    val start = shared.getAllocatedMemory
+    // the probe sees direct memory held anywhere under the shared allocator
+    val child = shared.newChildAllocator("leak-probe", 0, Long.MaxValue)
+    val leaked = child.buffer(1024)
+    assert(shared.getAllocatedMemory > start)
+    leaked.close()
+    child.close()
+    assert(shared.getAllocatedMemory == start)
 
-    // Abandonment without error: client disconnects after the first frame.
-    val ok = spark.range(5).toDF("id")
+    // Execution error mid-stream: the failing task frees its allocator.
+    val failing = ArrowCodec.encodeStream(
+      spark.sql("SELECT raise_error('boom') AS x FROM range(10)"))
+    intercept[Exception] { failing.frames.foreach(_ => ()) }
+    assert(shared.getAllocatedMemory == start)
+
+    // Abandonment: the client disconnects after the schema frame.
+    val ok = spark.range(0, 10000, 1, 4).toDF("id")
     val abandoned = ArrowCodec.encodeStream(ok)
-    abandoned.frames.next() // schema frame only, batches never pulled
-    abandoned.close() // must release root + allocator without throwing
-    abandoned.close()
+    abandoned.frames.next()
+    assert(shared.getAllocatedMemory == start)
 
-    // Natural completion: close after EOS is a no-op.
-    val complete = ArrowCodec.encodeStream(ok)
-    complete.toBytes
-    complete.close()
+    // ... or after the first batch, with partitions left unpulled.
+    val partial = ArrowCodec.encodeStream(ok).frames
+    partial.next()
+    partial.next()
+    assert(shared.getAllocatedMemory == start)
+
+    // Natural completion.
+    assert(ArrowCodec.decode(ArrowCodec.encodeStream(ok).toBytes).rows.size == 10000)
+    assert(shared.getAllocatedMemory == start)
   }
 
   test("junk bytes fail decode cleanly and release their allocator (no leak, no hang)") {

@@ -104,7 +104,7 @@ class SocketTransportSpec extends AnyFunSuite {
     try {
       val client = new SocketClient("127.0.0.1", port)
       try {
-        // 10,000 rows span several 4096-row record batches
+        // 10,000 rows span several record batches
         val (_, ticket) = client.getFlightInfoStatement("SELECT id FROM range(10000) ORDER BY id")
         val overSocket = client.doGet(ticket)
         assert(overSocket.sameElements(service.doGet(ticket).toBytes))
