@@ -2,12 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence trail (plans/rNN/<query>_<tag>.txt). Runs
-  * under the same session shape as Bench (same master/width conventions)
-  * so the captured plans are the ones the bench actually executes.
+  * under Bench's session ([[Sessions.local]]) so the captured plans are
+  * the ones the bench actually executes.
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> <query> [<query> ...]
   */
@@ -19,14 +17,7 @@ object PlanDump {
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val txt = df.queryExecution.explainString(

@@ -89,13 +89,13 @@ object Staging {
     * call. Safe only when no consumer of those frames can run again —
     * i.e. between queries of a sequential driver loop (localCheckpoint
     * truncates lineage, so a released frame cannot be recomputed).
-    * Non-blocking: block removal is async, costing the caller only the
-    * enqueue.
+    * Blocking: the blocks are gone when this returns, so their teardown
+    * cannot land in the next query's timed window.
     */
   def releaseTransient(): Unit = {
     var rdd = transientRdds.poll()
     while (rdd != null) {
-      try rdd.unpersist(blocking = false) catch { case _: Throwable => () }
+      try rdd.unpersist(blocking = true) catch { case _: Throwable => () }
       rdd = transientRdds.poll()
     }
   }

@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,14 +12,7 @@ object Verify {
     // driver's 2-arg invocation dumps everything.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     val unknown = only.diff(SparkEntry.queries.keySet)
     if (unknown.nonEmpty) {
@@ -38,25 +34,16 @@ object Verify {
         errs ::= name -> s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonMap(SparkEntry.oracleSql))
     // Per-query error record (round-6 lesson: dropped entries hide the root
     // cause — a failed dump must leave machine-readable evidence behind).
-    Files.writeString(Paths.get(s"$outDir/errors.json"),
-      errs.reverse.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), jsonMap(errs.reverse))
     spark.stop()
   }
+
+  /** A JSON object of string values; every character Python's
+    * `json.load` rejects raw (quotes, backslashes, control chars) is escaped.
+    */
+  private[graft] def jsonMap(entries: Iterable[(String, String)]): String =
+    compact(render(JObject(entries.map { case (k, v) => k -> JString(v) }.toList)))
 }

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Sessions.withConf
 import graft.Staging.StagedDataFrame
 
 /** Near-duplicate clustering: connected components over the pair graph,
@@ -34,11 +35,7 @@ object DedupCluster {
     // default. A production run sizes this to |nodes| / target-partition
     // rows. Each round's single action materializes inside the loop, so
     // the narrowed width is captured by every round's plan.
-    val spark = pairs.sparkSession
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try clustersLoop(p)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+    withConf(pairs.sparkSession, "spark.sql.shuffle.partitions" -> "8")(clustersLoop(p))
   }
 
   /** Fixpoint actions the last [[clusters]] run took — the r12 evidence

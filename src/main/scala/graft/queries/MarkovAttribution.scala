@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Sessions.withConf
 import graft.Staging.StagedDataFrame
 
 /** Markov-chain (removal-effect) marketing attribution (Anderl, Becker,
@@ -116,11 +117,7 @@ object MarkovAttribution {
     // task-count floor / §1.2 config after algorithm; r11 verdict #6).
     // Neither knob can change results: every round is a deterministic
     // integer fold + division, order-independent under any partitioning.
-    val prevWidth = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "1")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(s, "spark.sql.shuffle.partitions" -> "1", "spark.sql.adaptive.enabled" -> "false") {
       var p = s.sql(
         "SELECT scn, s, CAST(0 AS BIGINT) AS v FROM graft_mk_m WHERE 1 = 0")
       for (_ <- 1 to K) {
@@ -128,9 +125,6 @@ object MarkovAttribution {
         p = s.sql(iterSql("graft_mk_m", "graft_mk_p", "DIV")).staged()
       }
       p.createOrReplaceTempView("graft_mk_p")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevWidth)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
     s.sql(finalSql("graft_mk_p", "DIV"))
   }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions.withConf
 import graft.queries.{QuerySpec, Tables}
 
 /** Structured Streaming over the events table (SURVEY §2.B.10 extension:
@@ -382,6 +383,12 @@ object EventStream {
   private def streamShufflePartitions(spark: SparkSession): String =
     spark.conf.get("spark.graft.stream.shufflePartitions", "4")
 
+  /** transformWithState requires the RocksDB state store; set it only for
+    * the stream's session capture.
+    */
+  private val rocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** JVM-global streaming-activity sweep: StateStore.stop() is JVM-global,
     * but StreamingQueryManager (spark.streams) is per-SESSION — an active
     * stream on a sibling session (newSession() multi-tenancy, exactly the
@@ -438,9 +445,7 @@ object EventStream {
     // query starts; hold it until the replay drains, then restore the
     // session default (runners execute streams synchronously, so the
     // mutation window is contained).
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(spark))
-    try {
+    withConf(spark, "spark.sql.shuffle.partitions" -> streamShufflePartitions(spark)) {
       val query = stream.writeStream
         .outputMode(mode)
         .format("memory")
@@ -448,7 +453,7 @@ object EventStream {
         .start()
       try query.processAllAvailable()
       finally { query.stop(); releaseStateStores(spark) }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+    }
     // Drop the sink's temp view: each run registers a fresh UUID-named
     // view which would otherwise accumulate for the life of the session (a
     // leak per streaming query in a long-running server). spark.table()
@@ -542,9 +547,7 @@ object EventStream {
     // same state-width sizing as runToTable: one state store per shuffle
     // partition PER micro-batch; hold the narrowed width until the replay
     // drains (the cloned session captures it at start())
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(spark))
-    try {
+    withConf(spark, "spark.sql.shuffle.partitions" -> streamShufflePartitions(spark)) {
       val query = stream.writeStream
         .outputMode("append")
         .format("memory")
@@ -553,7 +556,7 @@ object EventStream {
         .start()
       try query.awaitTermination()
       finally { if (query.isActive) query.stop(); releaseStateStores(spark) }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+    }
 
     // same sink-view cleanup as runToTable (eager analysis survives the drop)
     val sunk = spark.table(queryName)
@@ -1022,11 +1025,7 @@ object EventStream {
     import spark.implicits._
     val staged = stageOrders(spark, dir)
     val schema = spark.read.parquet(staged).schema
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, rocksDbProvider) {
       val reader = spark.readStream.schema(schema)
       val src = maxFilesPerTrigger
         .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
@@ -1048,9 +1047,6 @@ object EventStream {
           s"CASE WHEN vto_us = ${Long.MinValue}L THEN CAST(NULL AS BIGINT) ELSE vto_us END AS vto_us",
           "CAST(is_current AS INT) AS is_current")
         .orderBy("key", "vfrom_us")
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 
@@ -1064,11 +1060,7 @@ object EventStream {
     import spark.implicits._
     val staged = stage(spark, dir)
     val schema = spark.read.parquet(staged).schema
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, rocksDbProvider) {
       val tops = spark.readStream
         .schema(schema)
         .parquet(staged)
@@ -1086,9 +1078,6 @@ object EventStream {
         .agg(max(struct(col("n_seen"), col("cents"))).as("x"))
         .selectExpr("user_id", "CAST(rk AS INT) AS rk", "x.cents AS cents")
         .orderBy("user_id", "rk")
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 

@@ -3,9 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.sql.graftbridge.{InternalFrames, RddBlocks}
 
 /** Pins the single staging definition (round-10 verdict #6): stats reset
-  * vs stats carry-through, and the local/reliable backend switch.
+  * vs stats carry-through, the local/reliable backend switch, and the
+  * transient-frame release.
   */
 class StagingSpec extends AnyFunSuite {
 
@@ -65,5 +67,21 @@ class StagingSpec extends AnyFunSuite {
     assert(spark.conf.getOption(Staging.BackendKey).isEmpty)
     val df = Staging.checkpoint((1 to 5).toDF("v"))
     assert(df.count() == 5)
+  }
+
+  test("releaseTransient removes transient blocks before it returns; pinned frames keep theirs") {
+    import spark.implicits._
+    def blocks(df: org.apache.spark.sql.DataFrame): Int =
+      RddBlocks.count(InternalFrames.checkpointRdd(df).get)
+    val kept = Staging.pinned(Staging.checkpoint((1 to 100).toDF("v").repartition(4)))
+    val transient = Staging.checkpoint((1 to 100).toDF("v").repartition(4))
+    try {
+      val keptBlocks = blocks(kept)
+      assert(blocks(transient) > 0 && keptBlocks > 0)
+      Staging.releaseTransient()
+      assert(blocks(transient) == 0, "a transient frame's blocks must be gone on return")
+      assert(blocks(kept) == keptBlocks, "a frame staged inside pinned must keep its blocks")
+      assert(kept.count() == 100)
+    } finally InternalFrames.checkpointRdd(kept).get.unpersist(blocking = true)
   }
 }

@@ -60,8 +60,12 @@ class MarkovAttributionSpec extends AnyFunSuite {
     val eff = states.map(x => x -> math.max(0L, base - absorb(Some(x)))).toMap
     val effSum = math.max(1L, eff.values.sum)
 
+    val scoped = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val confBefore = scoped.map(spark.conf.getOption)
     val got = SparkEntry.queries("q_events_markov_attribution")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    assert(scoped.map(spark.conf.getOption) == confBefore,
+      "the absorption loop's width and AQE settings must not outlive it")
     assert(got.map(_._1).toSeq == states, "state set/order")
     got.foreach { case (x, vb, vr, e, bp) =>
       assert(vb == base, s"$x base conversion")
