@@ -52,10 +52,10 @@ object Staging {
     * the previous query's action is complete by construction.
     *
     * Memoized build-once-serve-many artifacts (signatures, posting
-    * lists, kNN edges, cluster labels) must NOT be released: every memo
-    * build goes through [[LruMemo.getOrElseUpdate]], which wraps its
-    * compute in [[pinned]], so frames checkpointed during a memo build
-    * are never registered.
+    * lists, kNN edges, cluster labels) must NOT be released: every
+    * [[Artifacts]] build goes through [[LruMemo.getOrElseUpdate]], which
+    * wraps its compute in [[pinned]], so frames checkpointed during a memo
+    * build are never registered.
     */
   private val transientRdds =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()

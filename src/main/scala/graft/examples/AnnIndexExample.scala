@@ -30,7 +30,6 @@ object AnnIndexExample {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.queries.Tables.registerAll(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
 
     println("== 1. sampled k-means training step (bounded Lloyd budget) ==")
     val train = spark.sql(AnnSql.kmeansSampledSpark()).collect()

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.{CosineSimilarity, DotProduct, DotProductDD, ExpMicro, LnScaledMicro, SortedOverlap, WordNgrams}
 
 /** Registration hook for the engine's custom functions — an embedding
@@ -8,34 +9,21 @@ import org.apache.spark.sql.graftbridge.{CosineSimilarity, DotProduct, DotProduc
   * function registration, examples/bearer_auth_flight_sql.rs:95-114).
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
-      exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_d",
-      exprs => DotProductDD(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_overlap",
-      exprs => SortedOverlap(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams",
-      exprs => WordNgrams(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ln_scaled",
-      exprs => LnScaledMicro(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_exp_micro",
-      exprs => ExpMicro(exprs(0)),
-      "built-in")
-  }
+
+  /** (name, builder) of every engine function: the one list both this
+    * imperative path and `graft.plans.GraftSparkSessionExtension` install.
+    */
+  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("graft_cosine", e => CosineSimilarity(e(0), e(1))),
+    ("graft_dot", e => DotProduct(e(0), e(1))),
+    ("graft_dot_d", e => DotProductDD(e(0), e(1))),
+    ("graft_overlap", e => SortedOverlap(e(0), e(1))),
+    ("graft_ngrams", e => WordNgrams(e(0), e(1))),
+    ("graft_ln_scaled", e => LnScaledMicro(e(0), e(1), e(2))),
+    ("graft_exp_micro", e => ExpMicro(e(0))))
+
+  def register(spark: SparkSession): Unit =
+    all.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+    }
 }

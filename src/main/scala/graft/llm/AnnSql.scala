@@ -917,17 +917,14 @@ object AnnSql {
     * the oracle re-derives the bit-identical table), so correctness still
     * pins staged == derived every round.
     */
-  private val hierIndexCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](8)
+  private val hierIndex = new graft.Artifacts.Views
 
   private[graft] def stageHierIndex(
       s: org.apache.spark.sql.SparkSession, d: String, p1: Int = 2): Unit = {
     graft.queries.Tables.registerAll(s, d)
-    graft.functions.GraftFunctions.register(s)
     val chain = hierAsnCtes(
       "embeddings", "embedding", (a, b) => s"graft_cosine($a, $b)", desc = true, p1)
-    val (c1, a21, asn) = hierIndexCache.getOrElseUpdate((s, d)) {
+    hierIndex(s, d) {
       // unreferenced CTEs are pruned, so the two small extracts never run
       // the N-sized v1 window — only the asn build pays it, once
       val c1 = s.sql(s"WITH $chain SELECT c1_id, c1e FROM c1").staged()
@@ -940,11 +937,8 @@ object AnnSql {
            |           ORDER BY graft_cosine(v.v, a.cv) DESC, a.cent_id) AS rn
            |  FROM v1 v JOIN a21 a ON v.c1_id = a.c1_id) t WHERE rn = 1)
            |SELECT vec_id, v, cent_id FROM asn""".stripMargin).staged()
-      (c1, a21, asn)
+      Seq("hier_c1" -> c1, "hier_a21" -> a21, "hier_asn" -> asn)
     }
-    c1.createOrReplaceTempView("hier_c1")
-    a21.createOrReplaceTempView("hier_a21")
-    asn.createOrReplaceTempView("hier_asn")
   }
 
   /** BATCH probe chain over the derived quantizer — the multi-query

@@ -61,9 +61,9 @@ object DataSelect {
     * Round-9 staging note: the round-8 driver measured the feature-count
     * pass running FIVE times, not once — the bigram CTE `g` had five SQL
     * consumers (tc/rc/nt/nr/wdoc) and Catalyst re-inlines a SQL-text CTE
-    * per consumer (the same hazard already staged away for BPE's wtCache
-    * and BM25's bm25Cache). The per-(bucket, is-target) count table is
-    * now materialized ONCE per (session, dir, pool) via [[dsirBcCache]]
+    * per consumer (the same hazard already staged away for BPE's `bpe_wt`
+    * and BM25's `bm25_tf`). The per-(bucket, is-target) count table is
+    * now materialized ONCE per (session, dir, pool) via [[dsirBucketCounts]]
     * (a <= 2·B-row localCheckpoint) and tc/rc/nt/nr all derive from it,
     * leaving the scoring pass (`wdoc`) as the single remaining corpus
     * consumer — DsirPlanSpec pins exactly one documents scan in the
@@ -131,22 +131,18 @@ object DataSelect {
     * and registered as a temp view for tc/rc/nt/nr to read (4 reads of
     * 256 checkpointed rows instead of 4 re-inlined corpus explodes).
     */
-  private val dsirBcCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String, String),
-    org.apache.spark.sql.DataFrame](8)
+  private val dsirBucketCounts = new graft.Artifacts.Views
 
   private[llm] def stageDsirBc(s: org.apache.spark.sql.SparkSession, d: String,
-      pool: String, viewName: String): Unit = {
-    val bc = dsirBcCache.getOrElseUpdate((s, d, viewName)) {
-      s.sql(
+      pool: String, viewName: String): Unit =
+    dsirBucketCounts(s, d, viewName) {
+      Seq(viewName -> s.sql(
         s"""WITH ${gHeadSpark(pool)}
            |SELECT b, CASE WHEN source IN $targetSrc THEN 1 ELSE 0 END AS t,
            |       CAST(COUNT(*) AS BIGINT) AS c
            |FROM g GROUP BY b, CASE WHEN source IN $targetSrc THEN 1 ELSE 0 END""".stripMargin)
-        .staged()
+        .staged())
     }
-    bc.createOrReplaceTempView(viewName)
-  }
 
   /** DSIR Spark text over an arbitrary document pool (a table or temp-view
     * name exposing doc_id/source/text). The pool parameter is what lets the
@@ -405,15 +401,13 @@ object DataSelect {
     * pass is a single equi-join; the single-row total joins broadcast
     * (GlobalPlanSweepSpec allowlist); top-20 is a TakeOrdered.
     */
-  private val rhoBgCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame](8)
+  private val rhoBigrams = new graft.Artifacts.Views
 
   private[llm] def stageRhoBg(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    rhoBgCache.getOrElseUpdate((s, d)) {
-      s.sql(s"WITH $bgHeadSpark SELECT doc_id, source, w1, w2 FROM bg")
-        .staged()
-    }.createOrReplaceTempView("graft_rho_bg")
+    rhoBigrams(s, d) {
+      Seq("graft_rho_bg" -> s.sql(s"WITH $bgHeadSpark SELECT doc_id, source, w1, w2 FROM bg")
+        .staged())
+    }
 
   private def rhoTail(bgRel: String, intDiv: String,
       k: NeutralMath.KernelSplice): String =
@@ -995,7 +989,7 @@ object DataSelect {
   /** The level-0 frame text (weights + hash key + block id), shared by
     * the Spark staging pass and the DuckDB oracle so both engines derive
     * the identical frame. On the Spark side this is materialized ONCE
-    * ([[ppsW0Cache]]) because three consumers need it (level-1 totals,
+    * ([[ppsWeights]]) because three consumers need it (level-1 totals,
     * the cumulative join, and the step total) — under SQL-text CTE
     * re-inlining that would be 4 corpus scans; a production sampler
     * materializes the weighted frame anyway (it IS the sampling frame,
@@ -1011,20 +1005,16 @@ object DataSelect {
        |              CAST(hkey $intDiv bw AS BIGINT) AS s1
        |       FROM wh)""".stripMargin
 
-  private val ppsW0Cache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame](8)
+  private val ppsWeights = new graft.Artifacts.Views
 
-  private def stagePpsW0(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val w0 = ppsW0Cache.getOrElseUpdate((s, d)) {
-      s.sql(
+  private def stagePpsW0(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+    ppsWeights(s, d) {
+      Seq("pps_w0" -> s.sql(
         s"""WITH ${ppsW0Ctes(
              "conv(substr(md5(CAST(doc_id AS STRING)), 1, 10), 16, 10)", "DIV")}
            |SELECT doc_id, source, w, hkey, s1 FROM w0""".stripMargin)
-        .staged()
+        .staged())
     }
-    w0.createOrReplaceTempView("pps_w0")
-  }
 
   private def ppsTail(intDiv: String, rel: String): String =
     s"""l1 AS (SELECT s1, CAST(s1 $intDiv 64 AS BIGINT) AS s2,

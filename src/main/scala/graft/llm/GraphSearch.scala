@@ -91,7 +91,6 @@ object GraphSearch {
     "q_ann_graph_search" -> QuerySpec(
       (s, d) => {
         Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
         LlmQueries.knnEdgesCached(s, d).createOrReplaceTempView("g_edges")
         s.sql(sparkSql)
       },

@@ -228,14 +228,11 @@ object LlmQueries {
     * q_dedup_embedding via the `ann_sig` temp view (the same staged shared
     * intermediate a production ANN pipeline would persist).
     */
-  private[llm] val sigCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame](8)
+  private val signatures = new graft.Artifacts.Views
 
   private def registerSig(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     Tables.registerAll(s, d)
-    graft.functions.GraftFunctions.register(s)
-    sigCache.getOrElseUpdate((s, d)) { s.sql(AnnSql.sigStageSpark).staged() }
-      .createOrReplaceTempView("ann_sig")
+    signatures(s, d) { Seq("ann_sig" -> s.sql(AnnSql.sigStageSpark).staged()) }
   }
 
   /** Staged DIRECTED kNN edge list (the persisted graph-index artifact
@@ -243,12 +240,11 @@ object LlmQueries {
     * shared staged signatures and checkpointed, so the beam hops reference
     * a materialized table instead of re-inlining the candidate chain.
     */
-  private[llm] val knnEdgeCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame](8)
+  private val knnEdges = new graft.Artifacts.Value[org.apache.spark.sql.DataFrame]
 
   private[graft] def knnEdgesCached(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    knnEdgeCache.getOrElseUpdate((s, d)) {
+    knnEdges(s, d) {
       registerSig(s, d)
       // self-loops let a beam hop keep its frontier through the SAME
       // equi-join that expands it — one frontier reference per hop
@@ -260,14 +256,13 @@ object LlmQueries {
     }
 
   /** Memoized persistent corpus index for incremental dedup (same
-    * lifecycle pattern as sigCache / the MinHash pair memo).
+    * lifecycle as the `ann_sig` signatures and the MinHash pair set).
     */
-  private[llm] val corpusIndexCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String), MinHashDedup.CorpusIndex](8)
+  private val corpusIndex = new graft.Artifacts.Value[MinHashDedup.CorpusIndex]
 
   private[graft] def corpusIndexCached(
       s: org.apache.spark.sql.SparkSession, d: String): MinHashDedup.CorpusIndex =
-    corpusIndexCache.getOrElseUpdate((s, d)) {
+    corpusIndex(s, d) {
       val idx = MinHashDedup.CorpusIndex.build(
         Tables.documents(s, d).filter(col("doc_id") % 10 === 0))
       MinHashDedup.CorpusIndex(
@@ -835,13 +830,7 @@ object LlmQueries {
     // full 64-dim cosine and the 16-dim-prefix cosine, per query (AnnSql
     // doc — the evaluation harness an embedding-budget decision runs).
     "q_embed_matryoshka_eval" -> sql2(AnnSql.matryoshkaSpark, AnnSql.matryoshkaDuck),
-    "q_ann_topk_native" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.nativeTopKSpark(5))
-      },
-      Some(AnnSql.bruteTopKDuck(5))),
+    "q_ann_topk_native" -> sql2(AnnSql.nativeTopKSpark(5), AnnSql.bruteTopKDuck(5)),
     "q_ann_lsh" -> QuerySpec(
       (s, d) => {
         registerSig(s, d)
@@ -858,47 +847,23 @@ object LlmQueries {
       },
       Some(AnnSql.hardNegativesDuck(3))),
 
-    "q_ann_ivf" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.ivfTopKSpark(3))
-      },
-      Some(AnnSql.ivfTopKDuck(3))),
+    "q_ann_ivf" -> sql2(AnnSql.ivfTopKSpark(3), AnnSql.ivfTopKDuck(3)),
 
     // IVF recall-vs-nprobe tuning curve: recall@3 against the exact brute
     // ground truth at nprobe = 1/2/4, integer hit counts end to end — the
     // probe budget report an ANN deployment fixes its latency/recall
     // trade-off with (AnnSql.recallCurveSpark doc).
-    "q_ann_recall_curve" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.recallCurveSpark)
-      },
-      Some(AnnSql.recallCurveDuck)),
+    "q_ann_recall_curve" -> sql2(AnnSql.recallCurveSpark, AnnSql.recallCurveDuck),
 
     // Rank-quality companion to the recall curve: nDCG@10 of the flat IVF
     // probe path against the exact brute ground truth, integer micro-gain
     // arithmetic over the neutral-log kernel (AnnSql.ndcgText doc).
-    "q_search_ndcg" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.ndcgSpark)
-      },
-      Some(AnnSql.ndcgDuck)),
+    "q_search_ndcg" -> sql2(AnnSql.ndcgSpark, AnnSql.ndcgDuck),
 
     // Two-level IVF: coarse assignment probes ~sqrt(nlist) first-level
     // cells, then equi-joins to the centroids inside them — kills the flat
     // design's O(N·sqrt N) assignment (AnnSql.ivfHierSql doc).
-    "q_ann_ivf_hier" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.ivfHierTopKSpark(3))
-      },
-      Some(AnnSql.ivfHierTopKDuck(3))),
+    "q_ann_ivf_hier" -> sql2(AnnSql.ivfHierTopKSpark(3), AnnSql.ivfHierTopKDuck(3)),
 
     // External cluster validity of the quantizer cells vs ground-truth
     // labels: purity / MI / NMI off the integer contingency table
@@ -906,7 +871,6 @@ object LlmQueries {
     "q_cluster_purity" -> QuerySpec(
       (s, d) => {
         Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
         AnnSql.purityNmiSparkStaged(s)
       },
       Some(AnnSql.purityNmiDuck)),
@@ -914,143 +878,65 @@ object LlmQueries {
     // Internal cluster validity when no labels exist: quantizer-routed
     // simplified silhouette per cell + corpus rollup (AnnSql.silhouetteSql
     // doc) — the unlabeled twin of q_cluster_purity.
-    "q_cluster_silhouette" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.silhouetteSpark)
-      },
-      Some(AnnSql.silhouetteDuck)),
+    "q_cluster_silhouette" -> sql2(AnnSql.silhouetteSpark, AnnSql.silhouetteDuck),
 
     // IVF maintenance: hot-list detection + deterministic 2-means split
     // proposal, one assignment pass + windows (AnnSql.listRebalanceSql doc).
-    "q_ann_list_rebalance" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.listRebalanceSpark)
-      },
-      Some(AnnSql.listRebalanceDuck)),
+    "q_ann_list_rebalance" -> sql2(AnnSql.listRebalanceSpark, AnnSql.listRebalanceDuck),
 
     // SemDeDup: cluster-then-prune semantic dedup (AnnSql.semDedupSql doc).
-    "q_dedup_semantic" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.semDedupSpark)
-      },
-      Some(AnnSql.semDedupDuck)),
+    "q_dedup_semantic" -> sql2(AnnSql.semDedupSpark, AnnSql.semDedupDuck),
 
     // Coreset / prototype selection: per-cluster top-m most-central members.
-    "q_sample_coreset" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.coresetSpark(4))
-      },
-      Some(AnnSql.coresetDuck(4))),
+    "q_sample_coreset" -> sql2(AnnSql.coresetSpark(4), AnnSql.coresetDuck(4)),
 
     // Product-quantization codebook assignment (the IVF-PQ compression
     // path): 64 floats → 8 codebook codes, integer-exact distortion
     // accounting per (subspace, code).
-    "q_ann_pq" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.pqAssignSpark)
-      },
-      Some(AnnSql.pqAssignDuck)),
+    "q_ann_pq" -> sql2(AnnSql.pqAssignSpark, AnnSql.pqAssignDuck),
 
     // One k-means Lloyd step over the IVF centroid seeds (fixed-point
     // quantized, so assignment + per-cluster stats are integer-exact in
     // both engines) — the index-build iteration behind q_ann_ivf.
-    "q_ann_kmeans" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.kmeansStepSpark)
-      },
-      Some(AnnSql.kmeansStepDuck)),
+    "q_ann_kmeans" -> sql2(AnnSql.kmeansStepSpark, AnnSql.kmeansStepDuck),
 
     // Sampled k-means training: the Lloyd step over a bounded
     // deterministic sample — O(|sample|·k) per iteration regardless of N,
     // the production IVF training budget (AnnSql.kmeansSampledSql doc).
-    "q_ann_kmeans_sampled" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.kmeansSampledSpark())
-      },
-      Some(AnnSql.kmeansSampledDuck())),
+    "q_ann_kmeans_sampled" -> sql2(AnnSql.kmeansSampledSpark(), AnnSql.kmeansSampledDuck()),
 
     // ADC top-k search over the PQ codes (the query path of IVF-PQ): LUT
     // equi-join on (subspace, code), 8 lookups + one SUM per candidate —
     // the corpus side is codes only, never raw vectors (AnnSql.pqSearchSql
     // doc).
-    "q_ann_pq_search" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.pqSearchSpark(5))
-      },
-      Some(AnnSql.pqSearchDuck(5))),
+    "q_ann_pq_search" -> sql2(AnnSql.pqSearchSpark(5), AnnSql.pqSearchDuck(5)),
 
     // IVF-PQ composed search: nprobe IVF-list restriction × PQ LUT
     // scoring — the production ANN index shape (AnnSql.ivfPqSearchSql
     // doc).
-    "q_ann_ivfpq" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.ivfPqSearchSpark(5))
-      },
-      Some(AnnSql.ivfPqSearchDuck(5))),
+    "q_ann_ivfpq" -> sql2(AnnSql.ivfPqSearchSpark(5), AnnSql.ivfPqSearchDuck(5)),
 
     // Residual IVF-PQ: codes quantize x − centroid(x), per-list query LUTs
     // — the full FAISS IVFPQ fidelity at the same 8-byte code budget
     // (AnnSql.ivfPqResidualSql doc).
-    "q_ann_ivfpq_residual" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.ivfPqResidualSpark(5))
-      },
-      Some(AnnSql.ivfPqResidualDuck(5))),
+    "q_ann_ivfpq_residual" -> sql2(AnnSql.ivfPqResidualSpark(5), AnnSql.ivfPqResidualDuck(5)),
 
     // Random-projection (JL) dimensionality reduction: every embedding
     // onto 8 fixed Gaussian directions — the embedding-compression pass
     // before storage/coarse search; one scan, pure projection
     // (AnnSql.projectSpark doc).
-    "q_embed_project" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.projectSpark)
-      },
-      Some(AnnSql.projectDuck)),
+    "q_embed_project" -> sql2(AnnSql.projectSpark, AnnSql.projectDuck),
 
     // Linear-probe classifier inference over embeddings: broadcast weight
     // vector, codegen'd dot, sign prediction + per-label agreement rollup
     // (AnnSql.linearProbeSql doc).
-    "q_embed_classify" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.linearProbeSpark)
-      },
-      Some(AnnSql.linearProbeDuck)),
+    "q_embed_classify" -> sql2(AnnSql.linearProbeSpark, AnnSql.linearProbeDuck),
 
     // Linear-probe TRAINING: 3 unrolled averaged-perceptron batch rounds
     // over the quantized embeddings, bit-identical trajectory in both
     // engines — the pass that produces the weight vector
     // q_embed_classify consumes (AnnSql.probeTrainSql doc).
-    "q_embed_probe_train" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(AnnSql.probeTrainSpark())
-      },
-      Some(AnnSql.probeTrainDuck())),
+    "q_embed_probe_train" -> sql2(AnnSql.probeTrainSpark(), AnnSql.probeTrainDuck()),
 
     // Document chunking: 128-word sliding windows with 64-word stride (50%
     // overlap) — the splitting step that turns long documents into

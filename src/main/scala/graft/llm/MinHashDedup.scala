@@ -25,23 +25,21 @@ object MinHashDedup {
   // Verified pair sets are consumed by both the pair query and the
   // clustering query; materialize once per (session, dir, threshold)
   // (a shared intermediate, same as a production pipeline would persist).
-  private[llm] val cache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String, Double), DataFrame](8)
+  private val verifiedPairs = new graft.Artifacts.Value[DataFrame]
 
   /** Near-duplicates of the doc_id % 5 fixture subset, materialized once
     * per session/dir.
     */
   def nearDuplicatesCached(
       spark: org.apache.spark.sql.SparkSession, dir: String, threshold: Double): DataFrame =
-    cache.getOrElseUpdate((spark, dir, threshold)) {
+    verifiedPairs(spark, dir, threshold) {
       nearDuplicates(
         graft.queries.Tables.documents(spark, dir).filter(col("doc_id") % 5 === 0),
         threshold)
         .staged()
     }
 
-  private[llm] val labelCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String, Double), DataFrame](8)
+  private val pairLabels = new graft.Artifacts.Value[DataFrame]
 
   /** CC labels over the cached verified pair graph — the dedup pipeline's
     * second staged artifact (cluster assignment feeds keep-best, the
@@ -52,7 +50,7 @@ object MinHashDedup {
     */
   def clusterLabelsCached(
       spark: org.apache.spark.sql.SparkSession, dir: String, threshold: Double): DataFrame =
-    labelCache.getOrElseUpdate((spark, dir, threshold)) {
+    pairLabels(spark, dir, threshold) {
       DedupCluster.clusters(nearDuplicatesCached(spark, dir, threshold)).staged()
     }
 

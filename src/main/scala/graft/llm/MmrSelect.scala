@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.queries.{QuerySpec, Tables}
 import graft.Staging.StagedDataFrame
@@ -26,7 +26,7 @@ import graft.Staging.StagedDataFrame
   * (one scoring pass, TakeOrdered 12 — at scale this is whatever index
   * the pipeline already has: IVF/HNSW feed the same 12-row table). The
   * candidate table is STAGED (localCheckpoint + temp view, the
-  * bm25Cache convention) so the unrolled greedy rounds — whose CTE
+  * `bm25_tf` convention) so the unrolled greedy rounds — whose CTE
   * consumers re-inline — replay a 12-row checkpoint, never the corpus
   * (the kcore/DSIR staging lesson; the DuckDB oracle pins the same with
   * MATERIALIZED). Everything after staging is candidate-bounded: the
@@ -41,8 +41,7 @@ object MmrSelect {
   private val nCand = 12
   private val picks = 4
 
-  private val candCache = new graft.LruMemo[
-    (SparkSession, String), DataFrame](8)
+  private val candidates = new graft.Artifacts.Views
 
   private def candSparkSql: String =
     s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = $qid)
@@ -55,10 +54,7 @@ object MmrSelect {
 
   private[graft] def stageCand(s: SparkSession, d: String): Unit = {
     Tables.registerAll(s, d)
-    graft.functions.GraftFunctions.register(s)
-    candCache.getOrElseUpdate((s, d)) {
-      s.sql(candSparkSql).staged()
-    }.createOrReplaceTempView("mmr_cand")
+    candidates(s, d) { Seq("mmr_cand" -> s.sql(candSparkSql).staged()) }
   }
 
   /** Dialect-shared greedy tail over `$cand(doc_id, rel_u, embedding)`

@@ -116,8 +116,7 @@ object MstCluster {
     * is already checkpointed, so the memo just skips re-running the
     * rounds).
     */
-  private val mstRunCache = new graft.LruMemo[
-    (SparkSession, String), (DataFrame, DataFrame)](8)
+  private val mstRun = new graft.Artifacts.Value[(DataFrame, DataFrame)]
 
   /** Diagnostic: how many times the Borůvka rounds actually ran —
     * MstClusterSpec pins that the census and the single-linkage cut share
@@ -126,7 +125,7 @@ object MstCluster {
   private[llm] val boruvkaBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private def mstRunCached(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    mstRunCache.getOrElseUpdate((s, d)) {
+    mstRun(s, d) {
       boruvkaBuilds.incrementAndGet()
       LlmQueries.knnEdgesCached(s, d).createOrReplaceTempView("g_edges")
       boruvkaRun(s.sql(mutualWeightedSpark), rounds, jumps)

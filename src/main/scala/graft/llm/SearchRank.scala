@@ -285,13 +285,11 @@ object SearchRank {
     * retrieval. One explode now feeds one type-compressed aggregate; dl
     * derives from tf (SUM of a doc's term counts IS its length).
     */
-  private val bm25Cache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](8)
+  private val bm25Index = new graft.Artifacts.Views
 
   private[graft] def stageBm25(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     graft.queries.Tables.registerAll(s, d)
-    val (tf, dl) = bm25Cache.getOrElseUpdate((s, d)) {
+    bm25Index(s, d) {
       val tf = s.sql(
         """SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
           |FROM documents LATERAL VIEW explode(split(text, ' ')) t AS word
@@ -299,10 +297,8 @@ object SearchRank {
       val dl = tf.groupBy("doc_id")
         .agg(org.apache.spark.sql.functions.sum("tf").cast("long").as("dl"))
         .staged()
-      (tf, dl)
+      Seq("bm25_tf" -> tf, "bm25_dl" -> dl)
     }
-    tf.createOrReplaceTempView("bm25_tf")
-    dl.createOrReplaceTempView("bm25_dl")
   }
 
   /** Spark source CTEs over the staged index views. */
@@ -674,8 +670,7 @@ object SearchRank {
   /** Staged probe-weight artifact, memoized per (session, dir) — the
     * 64-row trained model a serving tier would load once.
     */
-  private val probeWCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame](8)
+  private val probeWeights = new graft.Artifacts.Views
 
   /** Pre-stage hook for the bench's untimed setup: train + checkpoint the
     * probe weights (the persisted model artifact) so q_search_rerank_probe
@@ -684,22 +679,14 @@ object SearchRank {
   private[graft] def stageProbeWeights(
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     graft.queries.Tables.registerAll(s, d)
-    graft.functions.GraftFunctions.register(s)
-    probeWCache.getOrElseUpdate((s, d)) {
-      s.sql(AnnSql.probeTrainSpark()).staged()
-    }
-    ()
+    probeWeights(s, d) { Seq("probe_w" -> s.sql(AnnSql.probeTrainSpark()).staged()) }
   }
 
   val specs: Map[String, QuerySpec] = Map(
     "q_search_rerank_probe" -> QuerySpec(
       (s, d) => {
-        graft.queries.Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
         stageBm25(s, d)
-        probeWCache.getOrElseUpdate((s, d)) {
-          s.sql(AnnSql.probeTrainSpark()).staged()
-        }.createOrReplaceTempView("probe_w")
+        stageProbeWeights(s, d)
         s.sql(rerankSparkSql)
       },
       Some(rerankDuckSql)),
@@ -715,7 +702,6 @@ object SearchRank {
     "q_search_hybrid_ivf" -> QuerySpec(
       (s, d) => {
         graft.queries.Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
         stageBm25(s, d)
         AnnSql.stageHierIndex(s, d)
         s.sql(hybridIvfSparkSql)

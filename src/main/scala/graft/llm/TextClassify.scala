@@ -115,21 +115,17 @@ object TextClassify {
     * pipeline does anyway — the scored corpus IS the product; the eval
     * reads the artifact, not the corpus.
     */
-  private val nbScCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame](8)
+  private val nbScores = new graft.Artifacts.Views
 
-  private def stageNbSc(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val sc = nbScCache.getOrElseUpdate((s, d)) {
-      s.sql(
+  private def stageNbSc(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+    nbScores(s, d) {
+      Seq("nb_sc" -> s.sql(
         s"""WITH tok AS (SELECT doc_id, source, word
            |             FROM documents LATERAL VIEW explode(split(text, ' ')) t AS word),
            |${nbScoreCtes(NeutralMath.SparkKernel)}
            |SELECT doc_id, source, score_u, n_tok FROM sc""".stripMargin)
-        .staged()
+        .staged())
     }
-    sc.createOrReplaceTempView("nb_sc")
-  }
 
   /** Exact banded Mann-Whitney AUC of the NB scores on the held-out slice
     * — the eval a filter ships with (fastText/CCNet quality filters are

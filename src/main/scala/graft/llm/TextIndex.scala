@@ -300,11 +300,10 @@ object TextIndex {
     */
   /** The one corpus-sized pass (word types + counts), memoized per
     * (session, dir) so the train and encode queries share a single
-    * tokenize+count scan (the sigCache lifecycle pattern). The micro-fixture
+    * tokenize+count scan (the ann_sig lifecycle pattern). The micro-fixture
     * test path (bpeFromDocs with an ad-hoc frame) bypasses the memo.
     */
-  private val wtCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame](8)
+  private val wordTypes = new graft.Artifacts.Views
 
   /** ONE definition of the word-type aggregation, shared by the memoized
     * fixture path and the ad-hoc test path — tokenization drift between
@@ -326,9 +325,7 @@ object TextIndex {
 
   private[llm] def stageWtCached(
       s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    wtCache.getOrElseUpdate((s, d)) {
-      buildWt(graft.queries.Tables.documents(s, d))
-    }.createOrReplaceTempView("bpe_wt")
+    wordTypes(s, d) { Seq("bpe_wt" -> buildWt(graft.queries.Tables.documents(s, d))) }
 
   private[llm] def bpeFromDocs(
       s: org.apache.spark.sql.SparkSession,

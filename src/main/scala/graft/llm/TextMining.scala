@@ -140,12 +140,10 @@ object TextMining {
     * is equi-joins on word keyed by the K²-pair table and K²-row
     * aggregates.
     */
-  private val jsCntCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](8)
+  private val jsCounts = new graft.Artifacts.Views
 
-  private[llm] def stageJsCnt(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val (cnt, tot) = jsCntCache.getOrElseUpdate((s, d)) {
+  private[llm] def stageJsCnt(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+    jsCounts(s, d) {
       val c = s.sql(
         """SELECT source, word, CAST(COUNT(*) AS BIGINT) AS c
           |FROM documents LATERAL VIEW explode(split(text, ' ')) t AS word
@@ -153,11 +151,8 @@ object TextMining {
       val tt = c.groupBy("source")
         .agg(org.apache.spark.sql.functions.sum("c").as("n"))
         .staged()
-      (c, tt)
+      Seq("js_cnt" -> c, "js_tot" -> tt)
     }
-    cnt.createOrReplaceTempView("js_cnt")
-    tot.createOrReplaceTempView("js_tot")
-  }
 
   /** Dialect-shared JSD tail over `cnt(source, word, c)` / `tot(source,
     * n)` relations.
@@ -279,20 +274,16 @@ object TextMining {
     s"""${textrankGraphCtes(gp)},
        |${textrankRankReadout("wv", "eo", intDiv)}""".stripMargin
 
-  private val trPairCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame](8)
+  private val trPairs = new graft.Artifacts.Views
 
-  private[llm] def stageTrPairs(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val gp = trPairCache.getOrElseUpdate((s, d)) {
-      s.sql(
+  private[llm] def stageTrPairs(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+    trPairs(s, d) {
+      Seq("tr_pairs" -> s.sql(
         """SELECT DISTINCT element_at(w, i) AS w1, element_at(w, i + 1) AS w2
           |FROM (SELECT split(text, ' ') AS w FROM documents) d
           |LATERAL VIEW explode(sequence(1, size(w) - 1)) t AS i
-          |WHERE size(w) >= 2""".stripMargin).staged()
+          |WHERE size(w) >= 2""".stripMargin).staged())
     }
-    gp.createOrReplaceTempView("tr_pairs")
-  }
 
   /** Spark path: wv and eo are staged views (the single-SQL form compiled
     * to a 346-Exchange plan — eo is referenced by all 5 rank rounds and
@@ -355,9 +346,7 @@ object TextMining {
     * word-score join is vocabulary-bounded, and the final top-k is a
     * TakeOrdered over the ≤5-word candidate phrases.
     */
-  private val rakeCache = new graft.LruMemo[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame](8)
+  private val rakePhrases = new graft.Artifacts.Views
 
   private val rakeStop = "('a', 'the')"
 
@@ -471,9 +460,7 @@ object TextMining {
     "q_text_rake" -> QuerySpec(
       (s, d) => {
         graft.queries.Tables.registerAll(s, d)
-        rakeCache.getOrElseUpdate((s, d)) {
-          s.sql(rakePhSpark).staged()
-        }.createOrReplaceTempView("graft_rake_ph")
+        rakePhrases(s, d) { Seq("graft_rake_ph" -> s.sql(rakePhSpark).staged()) }
         s.sql(rakeSpark)
       },
       Some(rakeDuck)),

@@ -2,11 +2,13 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import org.apache.spark.sql.graftbridge.{CosineSimilarity, DotProduct, DotProductDD, SortedOverlap, WordNgrams}
+import org.apache.spark.sql.graftbridge.CosineSimilarity
+
+import graft.functions.GraftFunctions
 
 /** The engine's `SparkSessionExtensions` entry point: set
   * `spark.sql.extensions=graft.plans.GraftSparkSessionExtension` and every
@@ -19,21 +21,10 @@ import org.apache.spark.sql.graftbridge.{CosineSimilarity, DotProduct, DotProduc
   */
 class GraftSparkSessionExtension extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((new FunctionIdentifier("graft_dot_d"),
-      new ExpressionInfo(classOf[DotProductDD].getName, "graft_dot_d"),
-      (exprs: Seq[Expression]) => DotProductDD(exprs(0), exprs(1))))
-    ext.injectFunction((new FunctionIdentifier("graft_overlap"),
-      new ExpressionInfo(classOf[SortedOverlap].getName, "graft_overlap"),
-      (exprs: Seq[Expression]) => SortedOverlap(exprs(0), exprs(1))))
-    ext.injectFunction((new FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "graft_ngrams"),
-      (exprs: Seq[Expression]) => WordNgrams(exprs(0), exprs(1))))
+    GraftFunctions.all.foreach { case (name, build) =>
+      ext.injectFunction(
+        (new FunctionIdentifier(name), new ExpressionInfo(GraftFunctions.getClass.getName, name), build))
+    }
     ext.injectOptimizerRule(_ => CanonicalizeCosine)
   }
 }

@@ -202,21 +202,15 @@ object ExtraQueries {
     // LATERAL VIEW — generators run inside GenerateExec, so the fan-out
     // never leaves the executor (no per-row driver work, unlike an
     // iterator UDF). Oracle: 1-based generate_series slicing in DuckDB.
-    "q_udtf_ngrams" -> QuerySpec(
-      (s, d) => {
-        Tables.registerAll(s, d)
-        graft.functions.GraftFunctions.register(s)
-        s.sql(
-          """SELECT doc_id, pos, ng
-            |FROM documents LATERAL VIEW graft_ngrams(text, 2) t AS pos, ng
-            |WHERE doc_id % 10 = 0
-            |ORDER BY doc_id, pos""".stripMargin)
-      },
-      Some(
-        """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws
-          |           FROM documents WHERE doc_id % 10 = 0)
-          |SELECT doc_id, CAST(i.g AS INT) AS pos, ws[i.g] || ' ' || ws[i.g + 1] AS ng
-          |FROM d, LATERAL (SELECT unnest(generate_series(1, len(ws) - 1)) AS g) i
-          |ORDER BY doc_id, pos""".stripMargin))
+    "q_udtf_ngrams" -> QuerySpec.sql2(
+      """SELECT doc_id, pos, ng
+        |FROM documents LATERAL VIEW graft_ngrams(text, 2) t AS pos, ng
+        |WHERE doc_id % 10 = 0
+        |ORDER BY doc_id, pos""".stripMargin,
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws
+        |           FROM documents WHERE doc_id % 10 = 0)
+        |SELECT doc_id, CAST(i.g AS INT) AS pos, ws[i.g] || ' ' || ws[i.g + 1] AS ng
+        |FROM d, LATERAL (SELECT unnest(generate_series(1, len(ws) - 1)) AS g) i
+        |ORDER BY doc_id, pos""".stripMargin)
   )
 }

@@ -28,6 +28,9 @@ object Transport {
 final class SocketServer(service: FlightSqlService, host: String = "127.0.0.1") {
   import Transport._
 
+  /** Largest request payload accepted; a longer length prefix is refused. */
+  private val MaxRequestBytes = 64 << 20
+
   @volatile private var serverSocket: ServerSocket = _
   @volatile private var running = false
 
@@ -67,59 +70,70 @@ final class SocketServer(service: FlightSqlService, host: String = "127.0.0.1") 
         if (opcode < 0) open = false
         else {
           val len = in.readInt()
-          val payload = new Array[Byte](len)
-          in.readFully(payload)
-          try {
-            opcode.toByte match {
-              case OpGetFlightInfoStatement =>
-                val info = service.getFlightInfoStatement(
-                  new String(payload, StandardCharsets.UTF_8))
-                out.writeByte(0)
-                writeFrame(out, info.schemaBytes)
-                writeFrame(out, info.ticket)
-                endFrames(out)
-              case OpDoGet =>
-                val stream = service.doGet(payload)
-                out.writeByte(0)
-                // Execution is lazy: a runtime failure can surface after
-                // frames have gone out. A -2 sentinel turns the tail of the
-                // stream into an error frame instead of corrupting framing.
-                try {
-                  stream.frames.foreach(writeFrame(out, _)) // streamed per batch
-                  endFrames(out)
-                } catch {
-                  case NonFatal(e) =>
-                    out.writeInt(-2)
-                    writeFrame(out,
-                      String.valueOf(e.getMessage).getBytes(StandardCharsets.UTF_8))
-                }
-              case OpCreatePreparedStatement =>
-                val res = service.createPreparedStatement(
-                  new String(payload, StandardCharsets.UTF_8))
-                out.writeByte(0)
-                writeFrame(out, res.handle)
-                writeFrame(out, res.datasetSchema)
-                writeFrame(out, res.parameterSchema)
-                endFrames(out)
-              case OpHandshake =>
-                service.doHandshake()
-              case other =>
-                throw Status.invalidArgument(s"unknown opcode $other")
-            }
-          } catch {
-            case s: Status =>
-              out.writeByte(1)
-              writeFrame(out, s"${s.code}: ${s.message}".getBytes(StandardCharsets.UTF_8))
-              endFrames(out)
-            case NonFatal(e) =>
-              out.writeByte(1)
-              writeFrame(out, String.valueOf(e.getMessage).getBytes(StandardCharsets.UTF_8))
-              endFrames(out)
+          if (len < 0 || len > MaxRequestBytes) {
+            // the length comes off the wire: refuse it before allocating,
+            // and close, since the connection's unread payload desyncs it
+            writeError(out,
+              s"${Status.InvalidArgument}: request length $len outside [0, $MaxRequestBytes]")
+            open = false
+          } else {
+            val payload = new Array[Byte](len)
+            in.readFully(payload)
+            serve(out, opcode, payload)
           }
           out.flush()
         }
       }
     } catch { case NonFatal(_) => () } finally socket.close()
+  }
+
+  private def serve(out: DataOutputStream, opcode: Int, payload: Array[Byte]): Unit =
+    try {
+      opcode.toByte match {
+        case OpGetFlightInfoStatement =>
+          val info = service.getFlightInfoStatement(
+            new String(payload, StandardCharsets.UTF_8))
+          out.writeByte(0)
+          writeFrame(out, info.schemaBytes)
+          writeFrame(out, info.ticket)
+          endFrames(out)
+        case OpDoGet =>
+          val stream = service.doGet(payload)
+          out.writeByte(0)
+          // Execution is lazy: a runtime failure can surface after
+          // frames have gone out. A -2 sentinel turns the tail of the
+          // stream into an error frame instead of corrupting framing.
+          try {
+            stream.frames.foreach(writeFrame(out, _)) // streamed per batch
+            endFrames(out)
+          } catch {
+            case NonFatal(e) =>
+              out.writeInt(-2)
+              writeFrame(out,
+                String.valueOf(e.getMessage).getBytes(StandardCharsets.UTF_8))
+          }
+        case OpCreatePreparedStatement =>
+          val res = service.createPreparedStatement(
+            new String(payload, StandardCharsets.UTF_8))
+          out.writeByte(0)
+          writeFrame(out, res.handle)
+          writeFrame(out, res.datasetSchema)
+          writeFrame(out, res.parameterSchema)
+          endFrames(out)
+        case OpHandshake =>
+          service.doHandshake()
+        case other =>
+          throw Status.invalidArgument(s"unknown opcode $other")
+      }
+    } catch {
+      case s: Status => writeError(out, s"${s.code}: ${s.message}")
+      case NonFatal(e) => writeError(out, String.valueOf(e.getMessage))
+    }
+
+  private def writeError(out: DataOutputStream, message: String): Unit = {
+    out.writeByte(1)
+    writeFrame(out, message.getBytes(StandardCharsets.UTF_8))
+    endFrames(out)
   }
 
   private def writeFrame(out: DataOutputStream, bytes: Array[Byte]): Unit = {

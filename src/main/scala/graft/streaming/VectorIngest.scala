@@ -135,11 +135,10 @@ object VectorIngest {
   /** (cells as in-memory metadata, per-cell centroid arrays as a table). */
   final case class CellIndex(cells: Seq[(Long, Seq[Double])], members: DataFrame)
 
-  private[streaming] val indexCache =
-    new graft.LruMemo[(SparkSession, String), CellIndex](8)
+  private val cellIndex = new graft.Artifacts.Value[CellIndex]
 
   def buildIndex(spark: SparkSession, dir: String): CellIndex =
-    indexCache.getOrElseUpdate((spark, dir)) {
+    cellIndex(spark, dir) {
       graft.functions.GraftFunctions.register(spark)
       // a DEDICATED view name: the shared `embeddings` fixture view is
       // shadowable by test fixtures on the same session, and an index

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The staged-intermediate memos (sigCache, corpus index, MinHash pairs)
+/** The staged-intermediate memos (graft.Artifacts, the Tables loader plans)
   * must evict ONLY the least-recently-used entry past capacity — a ninth
   * tenant arriving on a shared server must not cold-start the other
   * eight (the old clear()-the-world behavior).

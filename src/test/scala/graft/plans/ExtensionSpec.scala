@@ -49,6 +49,22 @@ class ExtensionSpec extends AnyFunSuite {
     }
   }
 
+  test("the extension installs every function GraftFunctions lists") {
+    val calls = Map(
+      "graft_cosine" -> "SELECT graft_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F))",
+      "graft_dot" -> "SELECT graft_dot(array(1.0F, 2.0F), array(3.0D, 4.0D))",
+      "graft_dot_d" -> "SELECT graft_dot_d(array(2.0D), array(4.0D))",
+      "graft_overlap" -> "SELECT graft_overlap(array('x', 'y'), array('y', 'z'))",
+      "graft_ngrams" ->
+        "SELECT ng FROM VALUES ('a b c') t(text) LATERAL VIEW graft_ngrams(text, 2) g AS pos, ng",
+      "graft_ln_scaled" -> "SELECT graft_ln_scaled(CAST(1 AS BIGINT), CAST(1 AS BIGINT), 1.0E6)",
+      "graft_exp_micro" -> "SELECT graft_exp_micro(CAST(0 AS BIGINT))")
+    assert(calls.keySet == graft.functions.GraftFunctions.all.map(_._1).toSet)
+    withExtensionSession { s =>
+      calls.foreach { case (name, sql) => assert(s.sql(sql).collect().nonEmpty, name) }
+    }
+  }
+
   test("optimizer canonicalizes commutative cosine argument order") {
     withExtensionSession { s =>
       // parquet-backed (a LocalRelation would be eagerly evaluated by

@@ -74,6 +74,28 @@ class SocketTransportSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("an oversized request length gets an error status, not an allocation") {
+    val spark = TestSpark.fixtures()
+    val server = new SocketServer(new FlightSqlService(new StaticSessionProvider(spark)))
+    val port = server.start()
+    try {
+      val raw = new java.net.Socket("127.0.0.1", port)
+      try {
+        raw.setSoTimeout(10000)
+        val out = new java.io.DataOutputStream(raw.getOutputStream)
+        out.writeByte(Transport.OpGetFlightInfoStatement)
+        out.writeInt(0x7FFFFFF0)
+        out.flush()
+        assert(new java.io.DataInputStream(raw.getInputStream).readByte() == 1)
+      } finally raw.close()
+      val client = new SocketClient("127.0.0.1", port)
+      try {
+        val (_, t) = client.getFlightInfoStatement("SELECT COUNT(*) AS n FROM users")
+        assert(ArrowCodec.decode(client.doGet(t)).rows == Seq(Seq(3L)))
+      } finally client.close()
+    } finally server.stop()
+  }
+
   test("concurrent clients each get correct, isolated responses") {
     val spark = TestSpark.fixtures()
     val server = new SocketServer(new FlightSqlService(new StaticSessionProvider(spark)))
