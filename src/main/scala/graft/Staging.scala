@@ -144,4 +144,17 @@ object Staging {
   implicit class StagedDataFrame(private val df: DataFrame) extends AnyVal {
     def staged(eager: Boolean = true): DataFrame = checkpoint(df, eager)
   }
+
+  /** Where operators stage their own input files: `target/fixtures`,
+    * resolved once against the working directory, because `LOCATION` and
+    * `path` options need an absolute path.
+    */
+  val fixtureRoot: String = java.nio.file.Paths.get("target", "fixtures").toAbsolutePath.toString
+
+  /** `fixtureRoot/<name>_<hash of dir><ext>`: one staged copy per source dir. */
+  def fixtureFor(name: String, dir: String, ext: String = ""): String = {
+    val key = java.security.MessageDigest.getInstance("MD5").digest(dir.getBytes("UTF-8"))
+      .take(4).foldLeft(0)((a, b) => (a << 8) | (b & 0xff))
+    s"$fixtureRoot/${name}_${Integer.toHexString(key)}$ext"
+  }
 }

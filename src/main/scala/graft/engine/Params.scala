@@ -5,14 +5,17 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.NamedParameter
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftbridge.SparkArrowBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ipc.ArrowCodec
 
-/** Prepared-statement parameter machinery (SURVEY §2.A A8/A20/A22/A25):
-  * `$n` / `$name` placeholder rewriting onto Spark's named-parameter
-  * markers, parameter-type inference from the analyzed plan, and the
+/** Planning of SQL text with prepared-statement parameters (SURVEY §2.A
+  * A3/A8/A20/A22/A25): `$n` / `$name` placeholder rewriting onto Spark's
+  * named-parameter markers, binding values into the parsed plan,
+  * parameter-type inference from the analyzed plan, and the
   * positional-vs-named decode rules of
   * datafusion-flight-sql-server/src/service.rs:1144-1192.
   */
@@ -20,21 +23,21 @@ object Params {
 
   private val markerPrefix = "gp_"
 
-  /** Rewrite `$name`/`$n` placeholders (outside quotes/comments) to Spark
-    * named markers `:gp_name`. Returns the rewritten SQL and the
-    * marker→original-name map ("gp_1" → "1").
+  /** Rewrite `$name`/`$n` placeholders (outside string literals, quoted
+    * identifiers and comments) to Spark named markers `:gp_name`. Returns
+    * the rewritten SQL and the marker→original-name map ("gp_1" → "1").
     */
   def rewrite(sql: String): (String, Map[String, String]) = {
     val out = new StringBuilder
     val mapping = mutable.LinkedHashMap.empty[String, String]
     var i = 0
-    var state: Char = 'n' // n=normal, s='string', d="ident", l=line comment, b=block comment
+    var state: Char = 'n' // n=normal, q=quoted up to `close`, l=line comment, b=block comment
+    var close = '\''
     while (i < sql.length) {
       val c = sql.charAt(i)
       state match {
         case 'n' =>
-          if (c == '\'') { state = 's'; out.append(c); i += 1 }
-          else if (c == '"') { state = 'd'; out.append(c); i += 1 }
+          if (c == '\'' || c == '"' || c == '`') { state = 'q'; close = c; out.append(c); i += 1 }
           else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
             state = 'l'; out.append("--"); i += 2
           } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
@@ -48,14 +51,15 @@ object Params {
             out.append(':').append(markerPrefix).append(name)
             i = j
           } else { out.append(c); i += 1 }
-        case 's' =>
-          out.append(c)
-          if (c == '\'') state = 'n'
-          i += 1
-        case 'd' =>
-          out.append(c)
-          if (c == '"') state = 'n'
-          i += 1
+        case 'q' =>
+          // Spark's string literals take backslash escapes; identifiers don't
+          if (c == '\\' && close != '`' && i + 1 < sql.length) {
+            out.append(c).append(sql.charAt(i + 1)); i += 2
+          } else {
+            out.append(c)
+            if (c == close) state = 'n'
+            i += 1
+          }
         case 'l' =>
           out.append(c)
           if (c == '\n') state = 'n'
@@ -72,9 +76,9 @@ object Params {
   final case class UninferableParameter(name: String)
       extends RuntimeException(s"unable to determine type of query parameter $$$name")
 
-  /** Infer the parameter schema for a SQL text without executing it
-    * (mirrors parameter_schema_for_plan + DataFusion's placeholder
-    * inference, service.rs:1085-1105): fields named `$<name>`, non-null,
+  /** The parameter schema of the `unbound` markers left in a parsed plan,
+    * without executing it (mirrors parameter_schema_for_plan + DataFusion's
+    * placeholder inference, service.rs:1085-1105): fields named `$<name>`,
     * sorted by name (the reference's BTreeMap order); errors if any
     * parameter's type can't be determined.
     *
@@ -85,12 +89,11 @@ object Params {
     * tagged sentinel literals — type coercion wraps the sentinel in a Cast
     * to the type the context requires.
     */
-  def parameterTypes(spark: SparkSession, sql: String): Seq[(String, DataType)] = {
-    val (rewritten, mapping) = rewrite(sql)
-    if (mapping.isEmpty) return Seq.empty
-    val parsed = spark.sessionState.sqlParser.parsePlan(rewritten)
+  private def parameterTypes(
+      spark: SparkSession,
+      parsed: LogicalPlan,
+      unbound: Map[String, String]): Seq[(String, DataType)] = {
     val inferred = mutable.Map.empty[String, DataType]
-
     // ---- pass 1: comparison-context walk with resolved attribute types ----
     val attrTypes = mutable.Map.empty[String, DataType]
     try {
@@ -127,7 +130,7 @@ object Params {
     }
 
     // ---- pass 2: sentinel-coercion probe for the rest ----
-    if (mapping.keys.exists(!inferred.contains(_))) {
+    if (unbound.keys.exists(!inferred.contains(_))) {
       def sentinel(marker: String) = s"__graft_param_${marker}__"
       val probe = parsed.transformAllExpressionsWithSubqueries {
         case NamedParameter(name) =>
@@ -148,35 +151,12 @@ object Params {
       } catch { case _: Exception => () }
     }
 
-    mapping.toSeq
+    unbound.toSeq
       .map { case (marker, original) =>
         val t = inferred.getOrElse(marker, throw UninferableParameter(original))
         (s"$$$original", t)
       }
       .sortBy(_._1) // BTreeMap iteration order = lexicographic by name
-  }
-
-  /** Analyzed-but-unexecuted plan for a (possibly parameterized) SQL text:
-    * placeholders are substituted with NULLs of their `parameterTypes` so
-    * analysis can produce the result schema without bound parameters (the
-    * reference plans placeholder queries the same way for GetFlightInfo,
-    * service.rs:388-425).
-    */
-  def planForSchema(
-      spark: SparkSession,
-      sql: String,
-      types: Seq[(String, DataType)],
-      options: SqlOptions): DataFrame = {
-    val (rewritten, mapping) = rewrite(sql)
-    if (mapping.isEmpty) return SqlGate.plan(spark, sql, options)
-    val typeOf = types.toMap
-    val parsed = spark.sessionState.sqlParser.parsePlan(rewritten)
-    SqlGate.verify(parsed, options)
-    val substituted = parsed.transformAllExpressionsWithSubqueries {
-      case NamedParameter(marker) =>
-        Literal.create(null, typeOf("$" + marker.stripPrefix(markerPrefix)))
-    }
-    org.apache.spark.sql.graftbridge.SparkArrowBridge.ofRows(spark, substituted)
   }
 
   /** Decoded prepared-statement parameters, after the reference's rules
@@ -203,27 +183,52 @@ object Params {
         Named(entries.map(e => e._1 -> e._3).toMap))
   }
 
-  /** Plan a SQL text with bound parameters: rewrite `$x` → `:gp_x`, verify
-    * through the SQL gate, bind by name through Spark's parameterized-SQL
-    * path. Positional decode binds value i to `$<i>` (the reference's
-    * with_param_values semantics).
+  /** A planned SQL text: the analyzed, unexecuted DataFrame and the type
+    * of each placeholder that was filled with a typed NULL, by `$name`.
     */
-  def bind(
+  final case class Planned(df: DataFrame, parameterTypes: Seq[(String, DataType)])
+
+  /** The one planning path for SQL text: rewrite `$name` placeholders onto
+    * markers, parse once, verify through the SQL gate, put each bound
+    * value's literal in place of its marker, then analyze (the reference's
+    * sql_to_logical_plan + verify_plan + with_param_values,
+    * service.rs:170-175). Values bind by the rules of `decodeParamValues`,
+    * positional value i to `$<i>`, each converted exactly as
+    * `SparkSession.sql(text, args)` converts an argument (`functions.lit`).
+    *
+    * With `typeUnbound`, a placeholder without a value becomes a NULL of its
+    * inferred type, the way the reference plans a placeholder query for its
+    * schema (service.rs:388-425); otherwise it stays a marker and analysis
+    * rejects it (UNBOUND_SQL_PARAMETER).
+    */
+  def plan(
       spark: SparkSession,
       sql: String,
-      parameters: Option[Array[Byte]],
-      options: SqlOptions = SqlOptions()): DataFrame = {
-    val (rewritten, mapping) = rewrite(sql)
-    val params = parameters.filter(_.nonEmpty).flatMap(decodeParamValues)
-    if (mapping.isEmpty || params.isEmpty) return SqlGate.plan(spark, sql, options)
-
-    SqlGate.verify(spark.sessionState.sqlParser.parsePlan(rewritten), options)
-    val args: Map[String, Any] = params.get match {
-      case Positional(values) =>
-        values.zipWithIndex.map { case (v, i) => s"$markerPrefix${i + 1}" -> v }.toMap
-      case Named(values) =>
-        values.map { case (k, v) => s"$markerPrefix$k" -> v }
+      parameters: Option[Array[Byte]] = None,
+      options: SqlOptions = SqlOptions(),
+      typeUnbound: Boolean = false): Planned = {
+    val (rewritten, markers) = rewrite(sql)
+    val parsed = spark.sessionState.sqlParser.parsePlan(rewritten)
+    SqlGate.verify(parsed, options)
+    val values: Map[String, Any] = parameters.filter(_.nonEmpty).flatMap(decodeParamValues) match {
+      case Some(Positional(vs)) =>
+        vs.zipWithIndex.map { case (v, i) => s"$markerPrefix${i + 1}" -> v }.toMap
+      case Some(Named(vs)) => vs.map { case (k, v) => s"$markerPrefix$k" -> v }
+      case None => Map.empty
     }
-    spark.sql(rewritten, args)
+    val bound =
+      substitute(parsed, values.map { case (m, v) => m -> SparkArrowBridge.literal(spark, v) })
+    val unbound = markers -- values.keys
+    val types =
+      if (typeUnbound && unbound.nonEmpty) parameterTypes(spark, bound, unbound) else Seq.empty
+    val typed = substitute(bound,
+      types.map { case (name, t) => markerPrefix + name.drop(1) -> Literal.create(null, t) }.toMap)
+    Planned(SparkArrowBridge.ofRows(spark, typed), types)
   }
+
+  private def substitute(plan: LogicalPlan, exprs: Map[String, Expression]): LogicalPlan =
+    if (exprs.isEmpty) plan
+    else plan.transformAllExpressionsWithSubqueries {
+      case NamedParameter(marker) if exprs.contains(marker) => exprs(marker)
+    }
 }

@@ -1,11 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.graftbridge.SparkArrowBridge
 
-/** SQL-text entry with a plan-verification gate (SURVEY §2.A A3, §4.4.1;
-  * mirrors sql_to_logical_plan + SQLOptions.verify_plan,
+/** Plan-verification gate of the SQL-text entry `Params.plan` (SURVEY §2.A
+  * A3, §4.4.1; mirrors SQLOptions.verify_plan,
   * datafusion-flight-sql-server/src/service.rs:170-175).
   *
   * The verifier is a plain function over the PARSED plan (validation, not
@@ -51,16 +49,5 @@ object SqlGate {
       if (!options.allowStatements && statementNodes.contains(name))
         throw PlanRejected("statement", name)
     }
-  }
-
-  /** SQL text → verified, analyzed-but-unexecuted DataFrame. Analysis gives
-    * the result schema without execution (the GetFlightInfo property,
-    * service.rs:313-347); execution happens only when the result stream is
-    * consumed.
-    */
-  def plan(spark: SparkSession, sql: String, options: SqlOptions = SqlOptions()): DataFrame = {
-    val parsed = spark.sessionState.sqlParser.parsePlan(sql)
-    verify(parsed, options)
-    SparkArrowBridge.ofRows(spark, parsed)
   }
 }

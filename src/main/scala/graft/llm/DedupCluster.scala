@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Sessions.withConf
-import graft.Staging.StagedDataFrame
+import graft.Staging.{checkpointStatsReset, StagedDataFrame}
 
 /** Near-duplicate clustering: connected components over the pair graph,
   * keeping the minimum doc_id as each cluster's representative — the
@@ -92,11 +92,11 @@ object DedupCluster {
       // change the result, only the round at which the check fires.
       // Each sub-round is lazily checkpointed (referenced 4x by the
       // next one; the stats reset prevents the self-join BigInt
-      // pathology — IterPlan.cpReset doc), materialized by the single
+      // pathology — checkpointStatsReset doc), materialized by the single
       // fixpoint action.
       val base = labels.select(col("node"), col("label").as("label0"), col("label"))
-      val a = IterPlan.cpReset(subRound(base), eager = false)
-      val b = IterPlan.cpReset(subRound(a), eager = false)
+      val a = checkpointStatsReset(subRound(base), eager = false)
+      val b = checkpointStatsReset(subRound(a), eager = false)
       // labels only decrease, so "anything changed in either sub-round"
       // == final label < action-start label
       converged =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.{QuerySpec, Tables}
-import graft.Staging.StagedDataFrame
+import graft.Staging.{checkpointStatsReset, StagedDataFrame}
 
 /** Link-graph centrality for crawl prioritization: iterative PageRank over
   * an arbitrary (src, dst) edge table — the primitive a web-scale corpus
@@ -377,14 +377,14 @@ object GraphRank {
   private def lpaStageViews(s: SparkSession, d: String): Unit = {
     LlmQueries.knnEdgesCached(s, d).createOrReplaceTempView("g_edges")
     s.sql(s"WITH ${mutualCte("g_edges")} SELECT id1, id2 FROM me")
-      .transform(f => IterPlan.cpReset(f, eager = false)).createOrReplaceTempView("graft_lpa_me")
+      .transform(checkpointStatsReset(_, eager = false)).createOrReplaceTempView("graft_lpa_me")
     s.sql(
       """SELECT id1 AS node, id2 AS nbr FROM graft_lpa_me
         |UNION ALL
         |SELECT id2 AS node, id1 AS nbr FROM graft_lpa_me""".stripMargin)
-      .transform(f => IterPlan.cpReset(f, eager = false)).createOrReplaceTempView("graft_lpa_ue")
+      .transform(checkpointStatsReset(_, eager = false)).createOrReplaceTempView("graft_lpa_ue")
     var l = s.sql("SELECT DISTINCT node, node AS lbl FROM graft_lpa_ue")
-      .transform(f => IterPlan.cpReset(f, eager = false))
+      .transform(checkpointStatsReset(_, eager = false))
     for (i <- 1 to 3) {
       l.createOrReplaceTempView(s"graft_lpa_l${i - 1}")
       // The neighbor-vote join is staged on its own before the self-vote
@@ -395,7 +395,7 @@ object GraphRank {
         s"""SELECT ue.node AS node, p.lbl AS lbl
            |FROM graft_lpa_ue ue
            |JOIN graft_lpa_l${i - 1} p ON ue.nbr = p.node""".stripMargin)
-        .transform(f => IterPlan.cpReset(f, eager = false)).createOrReplaceTempView(s"graft_lpa_v$i")
+        .transform(checkpointStatsReset(_, eager = false)).createOrReplaceTempView(s"graft_lpa_v$i")
       l = s.sql(
         s"""SELECT node, lbl FROM (
            |  SELECT node, lbl,
@@ -405,7 +405,7 @@ object GraphRank {
            |              UNION ALL
            |              SELECT node, lbl FROM graft_lpa_l${i - 1}) v
            |        GROUP BY node, lbl) c) x WHERE rn = 1""".stripMargin)
-        .transform(f => IterPlan.cpReset(f, eager = false))
+        .transform(checkpointStatsReset(_, eager = false))
     }
     l.createOrReplaceTempView("graft_lpa_l3")
   }
@@ -798,20 +798,20 @@ object GraphRank {
     * one edge⋈labels equi-join + one map-side-combined (node, label)
     * count + one per-node argmax window (partition sized by degree);
     * rounds cpReset-checkpointed (labels have two consumers per round —
-    * the vote join and the seed carry — the IterPlan lesson).
+    * the vote join and the seed carry; see checkpointStatsReset).
     */
   private def labelSpreadSpark(s: SparkSession, d: String): DataFrame = {
     LlmQueries.knnEdgesCached(s, d).createOrReplaceTempView("g_edges")
     val me = s.sql("""SELECT a.src AS id1, a.dst AS id2 FROM g_edges a
                      |JOIN g_edges b ON a.src = b.dst AND a.dst = b.src
                      |              AND a.src < a.dst""".stripMargin)
-    val ue = IterPlan.cpReset(
+    val ue = checkpointStatsReset(
       me.selectExpr("id1 AS a", "id2 AS b")
         .unionByName(me.selectExpr("id2 AS a", "id1 AS b")), eager = false)
-    val truth = IterPlan.cpReset(
+    val truth = checkpointStatsReset(
       Tables.embeddings(s, d).selectExpr("vec_id AS id", "label AS lbl"),
       eager = false)
-    val seeds = IterPlan.cpReset(truth.where("id % 4 != 0"), eager = false)
+    val seeds = checkpointStatsReset(truth.where("id % 4 != 0"), eager = false)
     var labs = seeds
     for (_ <- 1 to 3) {
       val votes = ue.join(labs, ue("b") === labs("id"))
@@ -821,7 +821,7 @@ object GraphRank {
       val pred = votes.withColumn("rn", row_number().over(win))
         .where((col("rn") === 1).and(col("a") % 4 === 0))
         .select(col("a").as("id"), col("lbl"))
-      labs = IterPlan.cpReset(seeds.unionByName(pred), eager = false)
+      labs = checkpointStatsReset(seeds.unionByName(pred), eager = false)
     }
     val hold = truth.where("id % 4 = 0")
     val pred = labs.where("id % 4 = 0")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.QuerySpec
+import graft.Staging.checkpointStatsReset
 
 /** Distributed minimum-spanning-forest over the mutual-kNN similarity
   * graph by Borůvka rounds (Borůvka 1926; the distributed formulation of
@@ -40,10 +41,10 @@ import graft.queries.QuerySpec
   */
 object MstCluster {
 
-  /** Stats-resetting checkpoint — see [[IterPlan.cpReset]] (this operator
-    * is where the pathology was first measured).
+  /** Stats-resetting checkpoint — see [[graft.Staging.checkpointStatsReset]]
+    * (this operator is where the pathology was first measured).
     */
-  private def cpReset(df: DataFrame): DataFrame = IterPlan.cpReset(df, eager = false)
+  private def cpReset(df: DataFrame): DataFrame = checkpointStatsReset(df, eager = false)
 
   /** Borůvka census over an undirected weighted edge list (u, v, w) with
     * u < v. Returns one row per round.

@@ -21,14 +21,17 @@ object Commands {
     */
   sealed trait Command { def typeName: String }
 
+  /** The commands that carry a query to plan, as opposed to catalog metadata. */
+  sealed trait QueryCommand extends Command
+
   final case class CommandStatementQuery(query: String)
-      extends Command { val typeName = "CommandStatementQuery" }
+      extends QueryCommand { val typeName = "CommandStatementQuery" }
 
   final case class CommandPreparedStatementQuery(handle: Array[Byte])
-      extends Command { val typeName = "CommandPreparedStatementQuery" }
+      extends QueryCommand { val typeName = "CommandPreparedStatementQuery" }
 
   final case class CommandStatementSubstraitPlan(plan: Array[Byte])
-      extends Command { val typeName = "CommandStatementSubstraitPlan" }
+      extends QueryCommand { val typeName = "CommandStatementSubstraitPlan" }
 
   final case class CommandGetCatalogs()
       extends Command { val typeName = "CommandGetCatalogs" }

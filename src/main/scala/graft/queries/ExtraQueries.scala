@@ -46,15 +46,15 @@ object ExtraQueries {
       StructField("$2", StringType, nullable = false)))
     val ipc = ArrowCodec.encodeStream(
       s.createDataFrame(java.util.Arrays.asList(Row(350000.0, "F")), paramSchema)).toBytes
-    Params.bind(s,
+    Params.plan(s,
       """SELECT o_orderkey, o_custkey FROM orders
         |WHERE o_totalprice > $1 AND o_orderstatus = $2 ORDER BY o_orderkey""".stripMargin,
-      Some(ipc))
+      Some(ipc)).df
   }
 
   private def externalTable(s: SparkSession, d: String): DataFrame = {
     Tables.registerAll(s, d)
-    val loc = "/root/repo/target/fixtures/ext_orders.parquet"
+    val loc = s"${graft.Staging.fixtureRoot}/ext_orders.parquet"
     s.sql("SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_totalprice > 400000")
       .write.mode("overwrite").parquet(loc)
     s.sql("DROP TABLE IF EXISTS ext_orders")
@@ -73,7 +73,7 @@ object ExtraQueries {
     }
 
   private def insertInto(s: SparkSession, d: String): DataFrame = {
-    val loc = java.nio.file.Paths.get("/root/repo/target/fixtures/ins_demo")
+    val loc = java.nio.file.Paths.get(graft.Staging.fixtureRoot, "ins_demo")
     s.sql("DROP TABLE IF EXISTS ins_demo")
     deleteRecursively(loc) // external location survives DROP; reset for determinism
     s.sql(s"CREATE TABLE ins_demo (k INT, v STRING) USING parquet LOCATION '$loc'")
@@ -121,7 +121,7 @@ object ExtraQueries {
           s.sql(s"DROP TABLE IF EXISTS $name")
           s.sql(sql).write
             .bucketBy(8, "o_custkey").sortBy("o_custkey")
-            .option("path", s"/root/repo/target/fixtures/bucketed_$name")
+            .option("path", s"${graft.Staging.fixtureRoot}/bucketed_$name")
             .mode("overwrite")
             .saveAsTable(name)
           // the relation/file-listing caches are shared across sessions;

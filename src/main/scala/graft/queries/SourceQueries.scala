@@ -13,13 +13,12 @@ import QuerySpec.{df, sql}
   * INSERT/COPY surface arrives via the prepared-update DDL path,
   * service.rs:864-875).
   *
-  * Fixture files are materialized under target/fixtures inside the repo
-  * (the oracle can't see them, so oracles are inline VALUES / base-table
-  * equivalents).
+  * Fixture files are materialized under `Staging.fixtureRoot` (the oracle
+  * can't see them, so oracles are inline VALUES / base-table equivalents).
   */
 object SourceQueries {
 
-  private val fixtureDir = "/root/repo/target/fixtures"
+  private val fixtureDir = graft.Staging.fixtureRoot
 
   private def ensureFile(name: String, content: String): String = synchronized {
     val p = Paths.get(fixtureDir, name)

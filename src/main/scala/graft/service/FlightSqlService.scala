@@ -7,7 +7,7 @@ import org.apache.spark.sql.graftbridge.SparkArrowBridge
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.catalog.Metadata
-import graft.engine.{Params, SessionProvider, SqlGate, SqlOptions}
+import graft.engine.{Params, SessionProvider, SqlOptions}
 import graft.ipc.ArrowCodec
 import graft.protocol.Commands._
 
@@ -108,41 +108,43 @@ class FlightSqlService(
 
   // ---- GetFlightInfo family (A10-A13) ----
 
-  def getFlightInfoStatement(sql: String, meta: Meta = noMeta): FlightInfo = wrap {
-    val spark = provider.session(meta)
-    val df = Params.planForSchema(spark, sql, Params.parameterTypes(spark, sql), sqlOptions)
-    FlightInfo(
-      ArrowCodec.encodeSchema(schemaForPlan(df)),
-      CommandTicket(CommandStatementQuery(sql)).encode)
-  }
-
-  def getFlightInfoPreparedStatement(handleBytes: Array[Byte], meta: Meta = noMeta): FlightInfo =
-    wrap {
-      val spark = provider.session(meta)
-      val handle = QueryHandle.decode(handleBytes)
-      val df = Params.planForSchema(
-        spark, handle.query, Params.parameterTypes(spark, handle.query), sqlOptions)
-      FlightInfo(
-        ArrowCodec.encodeSchema(schemaForPlan(df)),
-        CommandTicket(CommandPreparedStatementQuery(handleBytes)).encode)
+  /** The one planner of the query commands, for GetFlightInfo and DoGet
+    * alike, so a FlightInfo's schema is by construction the schema DoGet
+    * streams. GetFlightInfo (`typeUnbound`) gives a placeholder with no
+    * bound value a typed NULL (service.rs:388-425); DoGet leaves it
+    * unbound, which fails analysis.
+    */
+  private def planQuery(spark: SparkSession, cmd: QueryCommand, typeUnbound: Boolean): DataFrame =
+    cmd match {
+      case CommandStatementQuery(sql) =>
+        Params.plan(spark, sql, None, sqlOptions, typeUnbound).df
+      case CommandPreparedStatementQuery(handleBytes) =>
+        val handle = QueryHandle.decode(handleBytes)
+        Params.plan(spark, handle.query, handle.parameters, sqlOptions, typeUnbound).df
+      case CommandStatementSubstraitPlan(plan) =>
+        // service.rs:280/361; the in-repo SubstraitDecoder stands in for
+        // deserialize_bytes + from_substrait_plan (service.rs:1018-1029)
+        if (plan.isEmpty)
+          throw Status.invalidArgument("Expected substrait plan, found None")
+        graft.substrait.SubstraitDecoder.decode(spark, plan)
     }
 
-  /** Substrait plan → schema + re-encoded ticket (service.rs:349-386):
-    * the plan is decoded for its schema but not executed; the ticket
-    * carries the original bytes back for DoGet. Decoding is the in-repo
-    * wire-format consumer (graft.substrait.SubstraitDecoder) standing in
-    * for `deserialize_bytes` + `from_substrait_plan`
-    * (service.rs:1018-1029) — no substrait-java exists offline.
+  /** Schema + the ticket that carries the command back to DoGet, possibly
+    * on another instance; nothing executes (service.rs:313-386).
     */
-  def getFlightInfoSubstraitPlan(plan: Array[Byte], meta: Meta = noMeta): FlightInfo = wrap {
-    if (plan.isEmpty)
-      throw Status.invalidArgument("Expected substrait plan, found None")
-    val spark = provider.session(meta)
-    val df = graft.substrait.SubstraitDecoder.decode(spark, plan)
-    FlightInfo(
-      ArrowCodec.encodeSchema(schemaForPlan(df)),
-      CommandTicket(CommandStatementSubstraitPlan(plan)).encode)
+  private def queryInfo(cmd: QueryCommand, meta: Meta): FlightInfo = wrap {
+    val df = planQuery(provider.session(meta), cmd, typeUnbound = true)
+    FlightInfo(ArrowCodec.encodeSchema(schemaForPlan(df)), CommandTicket(cmd).encode)
   }
+
+  def getFlightInfoStatement(sql: String, meta: Meta = noMeta): FlightInfo =
+    queryInfo(CommandStatementQuery(sql), meta)
+
+  def getFlightInfoPreparedStatement(handleBytes: Array[Byte], meta: Meta = noMeta): FlightInfo =
+    queryInfo(CommandPreparedStatementQuery(handleBytes), meta)
+
+  def getFlightInfoSubstraitPlan(plan: Array[Byte], meta: Meta = noMeta): FlightInfo =
+    queryInfo(CommandStatementSubstraitPlan(plan), meta)
 
   private def metadataInfo(cmd: Command, schema: StructType, spark: SparkSession): FlightInfo =
     FlightInfo(
@@ -171,18 +173,8 @@ class FlightSqlService(
   def doGet(ticketBytes: Array[Byte], meta: Meta = noMeta): ArrowCodec.EncodedStream = wrap {
     val spark = provider.session(meta)
     CommandTicket.decode(ticketBytes).command match {
-      case CommandStatementQuery(sql) =>
-        val df = SqlGate.plan(spark, sql, sqlOptions)
-        ArrowCodec.encodeStream(df, fieldMetadata(df))
-      case CommandPreparedStatementQuery(handleBytes) =>
-        val handle = QueryHandle.decode(handleBytes)
-        val df = Params.bind(spark, handle.query, handle.parameters, sqlOptions)
-        ArrowCodec.encodeStream(df, fieldMetadata(df))
-      case CommandStatementSubstraitPlan(plan) =>
-        // service.rs:274-303: deserialize → logical plan → execute stream
-        if (plan.isEmpty)
-          throw Status.invalidArgument("Expected substrait plan, found None")
-        val df = graft.substrait.SubstraitDecoder.decode(spark, plan)
+      case cmd: QueryCommand =>
+        val df = planQuery(spark, cmd, typeUnbound = false)
         ArrowCodec.encodeStream(df, fieldMetadata(df))
       case CommandGetCatalogs() => ArrowCodec.encodeStream(Metadata.catalogs(spark))
       case cmd: CommandGetDbSchemas => ArrowCodec.encodeStream(Metadata.dbSchemas(spark, cmd))
@@ -196,14 +188,14 @@ class FlightSqlService(
   def createPreparedStatement(sql: String, meta: Meta = noMeta): PreparedStatementResult =
     wrap {
       val spark = provider.session(meta)
-      val paramTypes = Params.parameterTypes(spark, sql)
-      val df = Params.planForSchema(spark, sql, paramTypes, sqlOptions)
-      val paramFields = paramTypes.map { case (name, t) => StructField(name, t, nullable = false) }
+      val planned = Params.plan(spark, sql, None, sqlOptions, typeUnbound = true)
+      val paramFields =
+        planned.parameterTypes.map { case (name, t) => StructField(name, t, nullable = false) }
       val paramSchema = SparkArrowBridge.toArrowSchema(
         StructType(paramFields), spark.sessionState.conf.sessionLocalTimeZone)
       PreparedStatementResult(
         QueryHandle(sql, None).encode,
-        ArrowCodec.encodeSchema(schemaForPlan(df)),
+        ArrowCodec.encodeSchema(schemaForPlan(planned.df)),
         ArrowCodec.encodeSchema(paramSchema))
     }
 
@@ -251,7 +243,7 @@ class FlightSqlService(
   def doPutPreparedStatementUpdate(handleBytes: Array[Byte], meta: Meta = noMeta): Long = wrap {
     val spark = provider.session(meta)
     val handle = QueryHandle.decode(handleBytes)
-    SqlGate.plan(spark, handle.query, sqlOptions) // commands execute eagerly
+    Params.plan(spark, handle.query, handle.parameters, sqlOptions) // commands execute eagerly
     -1L
   }
 

@@ -1,6 +1,6 @@
 package graft.service
 
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 
@@ -61,8 +61,9 @@ final class SocketServer(service: FlightSqlService, host: String = "127.0.0.1") 
   }
 
   private def handle(socket: Socket): Unit = {
-    val in = new DataInputStream(socket.getInputStream)
-    val out = new DataOutputStream(socket.getOutputStream)
+    socket.setTcpNoDelay(true)
+    val in = new DataInputStream(new BufferedInputStream(socket.getInputStream))
+    val out = new DataOutputStream(new BufferedOutputStream(socket.getOutputStream))
     try {
       var open = true
       while (open) {
@@ -104,7 +105,10 @@ final class SocketServer(service: FlightSqlService, host: String = "127.0.0.1") 
           // frames have gone out. A -2 sentinel turns the tail of the
           // stream into an error frame instead of corrupting framing.
           try {
-            stream.frames.foreach(writeFrame(out, _)) // streamed per batch
+            stream.frames.foreach { frame => // streamed per batch
+              writeFrame(out, frame)
+              out.flush()
+            }
             endFrames(out)
           } catch {
             case NonFatal(e) =>
@@ -151,8 +155,9 @@ final class SocketClient(host: String, port: Int) {
   import Transport._
 
   private val socket = new Socket(host, port)
-  private val in = new DataInputStream(socket.getInputStream)
-  private val out = new DataOutputStream(socket.getOutputStream)
+  socket.setTcpNoDelay(true)
+  private val in = new DataInputStream(new BufferedInputStream(socket.getInputStream))
+  private val out = new DataOutputStream(new BufferedOutputStream(socket.getOutputStream))
 
   private def call(opcode: Byte, payload: Array[Byte]): Seq[Array[Byte]] = {
     out.writeByte(opcode)

@@ -26,17 +26,12 @@ object CorpusIngest {
   private val stagedCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def dirKey(dir: String): String =
-    java.lang.Integer.toHexString(
-      java.security.MessageDigest.getInstance("MD5").digest(dir.getBytes("UTF-8"))
-        .take(4).foldLeft(0)((a, b) => (a << 8) | (b & 0xff)))
-
   /** Stage the "incoming crawl" fixture (doc_id % 10 = 9) once per dir as
     * two files so the replay exercises multiple micro-batches.
     */
   private def stage(spark: SparkSession, dir: String): String =
     stagedCache.computeIfAbsent(dir, { _ =>
-      val staged = s"/root/repo/target/fixtures/docs_new_${dirKey(dir)}"
+      val staged = graft.Staging.fixtureFor("docs_new", dir)
       graft.queries.Tables.documents(spark, dir)
         .filter(col("doc_id") % 10 === 9)
         .coalesce(2).write.mode("overwrite").parquet(staged)

@@ -321,14 +321,9 @@ object EventStream {
   private val stagedCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def dirKey(dir: String): String =
-    java.lang.Integer.toHexString(
-      java.security.MessageDigest.getInstance("MD5").digest(dir.getBytes("UTF-8"))
-        .take(4).foldLeft(0)((a, b) => (a << 8) | (b & 0xff)))
-
   private def stage(spark: SparkSession, dir: String): String =
     stagedCache.computeIfAbsent(dir, { _ =>
-      val staged = s"/root/repo/target/fixtures/events_us_${dirKey(dir)}.parquet"
+      val staged = graft.Staging.fixtureFor("events_us", dir, ".parquet")
       Tables.events(spark, dir).write.mode("overwrite").parquet(staged)
       staged
     })
@@ -342,7 +337,7 @@ object EventStream {
     */
   private def stageOrders(spark: SparkSession, dir: String): String =
     stagedCache.computeIfAbsent(s"$dir#orders", { _ =>
-      val staged = s"/root/repo/target/fixtures/orders_scd_${dirKey(dir)}.parquet"
+      val staged = graft.Staging.fixtureFor("orders_scd", dir, ".parquet")
       Tables.orders(spark, dir)
         .where("o_custkey % 10 = 0")
         .selectExpr("o_custkey AS key",
@@ -518,7 +513,7 @@ object EventStream {
     val src = stage(spark, dir)
     stagedCache.computeIfAbsent(s"$dir#session", { _ =>
       val base = spark.read.parquet(src)
-      val dedicated = s"/root/repo/target/fixtures/events_session_${dirKey(dir)}"
+      val dedicated = graft.Staging.fixtureFor("events_session", dir)
       base.coalesce(2).write.mode("overwrite").parquet(dedicated)
       Seq("2099-01-01 00:00:00", "2099-06-01 00:00:00").foreach { far =>
         base.limit(1)
@@ -584,7 +579,7 @@ object EventStream {
     val src = stage(spark, dir)
     stagedCache.computeIfAbsent(s"$dir#outer", { _ =>
       val base = spark.read.parquet(src)
-      val dedicated = s"/root/repo/target/fixtures/events_outer_${dirKey(dir)}"
+      val dedicated = graft.Staging.fixtureFor("events_outer", dir)
       base.coalesce(2).write.mode("overwrite").parquet(dedicated)
       Seq("2099-01-01 00:00:00", "2099-06-01 00:00:00").foreach { far =>
         base.limit(1)

@@ -35,20 +35,12 @@ object VectorIngest {
   private val stagedCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def dirKey(dir: String): String =
-    java.lang.Integer.toHexString(
-      java.security.MessageDigest.getInstance("MD5").digest(dir.getBytes("UTF-8"))
-        .take(4).foldLeft(0)((a, b) => (a << 8) | (b & 0xff)))
-
   /** Stage the "incoming vectors" fixture (vec_id % 10 = 9) once per dir
     * as two files so the replay exercises multiple micro-batches.
     */
   private def stage(spark: SparkSession, dir: String): String =
     stagedCache.computeIfAbsent(dir, { _ =>
-      // checkout-relative (resolves against the process working dir, like
-      // the sibling spec fixtures) — an absolute repo path would write
-      // into an unrelated checkout when run from a clone elsewhere
-      val staged = s"target/fixtures/vecs_new_${dirKey(dir)}"
+      val staged = graft.Staging.fixtureFor("vecs_new", dir)
       spark.read.parquet(s"$dir/embeddings.parquet")
         .filter(col("vec_id") % 10 === 9)
         .select("vec_id", "embedding")

@@ -3,8 +3,9 @@ package org.apache.spark.sql.graftbridge
 import org.apache.arrow.vector.types.pojo.{Schema => ArrowSchema}
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{functions, DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.arrow.ArrowConverters
 import org.apache.spark.sql.types.StructType
@@ -51,6 +52,12 @@ object SparkArrowBridge {
   def outputQualifiers(df: DataFrame): Seq[(String, Option[String])] =
     df.asInstanceOf[ClassicDataset[_]].queryExecution.analyzed.output
       .map(a => a.name -> a.qualifier.lastOption)
+
+  /** A bound query parameter as the literal `SparkSession.sql(text, args)`
+    * makes of it: `functions.lit`'s expression.
+    */
+  def literal(spark: SparkSession, value: Any): Expression =
+    spark.asInstanceOf[ClassicSparkSession].expression(functions.lit(value))
 
   /** Wrap an (already parsed/verified) logical plan as a DataFrame —
     * triggers analysis only; execution stays lazy.

@@ -14,6 +14,8 @@ import graft.ipc.ArrowCodec
 class ParamsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.fixtures()
+  private def parameterTypes(sql: String) =
+    Params.plan(spark, sql, typeUnbound = true).parameterTypes
 
   test("$n rewrite targets named markers and skips strings/comments") {
     val (rewritten, mapping) = Params.rewrite(
@@ -25,13 +27,20 @@ class ParamsSpec extends AnyFunSuite {
     assert(mapping == Map("gp_1" -> "1", "gp_name" -> "name"))
   }
 
+  test("rewrite skips backtick-quoted identifiers and escaped quotes in strings") {
+    val (rewritten, mapping) = Params.rewrite(
+      "SELECT 1 AS `a$1`, 'it\\'s $2' AS s FROM users WHERE id = $3")
+    assert(rewritten == "SELECT 1 AS `a$1`, 'it\\'s $2' AS s FROM users WHERE id = :gp_3")
+    assert(mapping == Map("gp_3" -> "3"))
+  }
+
   test("parameter type inferred from comparison with a column (integration_test.rs:156-170)") {
-    val types = Params.parameterTypes(spark, "SELECT * FROM users WHERE id = $1")
+    val types = parameterTypes("SELECT * FROM users WHERE id = $1")
     assert(types == Seq(("$1", IntegerType)))
   }
 
   test("parameter types over joins/HAVING, BTreeMap name order (state_test.rs:5-17)") {
-    val types = Params.parameterTypes(spark,
+    val types = parameterTypes(
       """SELECT u.id, u.name FROM users u
         |LEFT JOIN orders o ON u.id = o.user_id
         |WHERE u.name = $2 AND o.amount > $1
@@ -45,13 +54,13 @@ class ParamsSpec extends AnyFunSuite {
 
   test("un-inferable parameter errors like the reference (service.rs:1097-1100)") {
     val e = intercept[Params.UninferableParameter] {
-      Params.parameterTypes(spark, "SELECT $1 AS v FROM users")
+      parameterTypes("SELECT $1 AS v FROM users")
     }
     assert(e.getMessage.contains("$1"))
   }
 
   test("no parameters → empty schema") {
-    assert(Params.parameterTypes(spark, "SELECT * FROM users").isEmpty)
+    assert(parameterTypes("SELECT * FROM users").isEmpty)
   }
 
   private def paramStream(fields: Seq[(String, DataType)], row: Row): Array[Byte] = {
@@ -78,14 +87,14 @@ class ParamsSpec extends AnyFunSuite {
 
   test("bind executes with positional parameters") {
     val ipc = paramStream(Seq("$1" -> IntegerType), Row(3))
-    val df = Params.bind(spark, "SELECT name FROM users WHERE id = $1", Some(ipc))
+    val df = Params.plan(spark, "SELECT name FROM users WHERE id = $1", Some(ipc)).df
     assert(df.collect().map(_.getString(0)).toSeq == Seq("Charlie"))
   }
 
   test("bind executes with named parameters") {
     val ipc = paramStream(Seq("$min" -> IntegerType), Row(60))
-    val df = Params.bind(spark,
-      "SELECT order_id FROM orders WHERE amount > $min ORDER BY order_id", Some(ipc))
+    val df = Params.plan(spark,
+      "SELECT order_id FROM orders WHERE amount > $min ORDER BY order_id", Some(ipc)).df
     assert(df.collect().map(_.getInt(0)).toSeq == Seq(101, 102))
   }
 }

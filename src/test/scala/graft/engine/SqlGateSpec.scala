@@ -42,7 +42,7 @@ class SqlGateSpec extends AnyFunSuite {
   }
 
   test("plan() returns the analyzed schema without executing") {
-    val df = SqlGate.plan(spark, "SELECT id, name FROM users")
+    val df = Params.plan(spark, "SELECT id, name FROM users").df
     assert(df.schema.fieldNames.toSeq == Seq("id", "name"))
   }
 }

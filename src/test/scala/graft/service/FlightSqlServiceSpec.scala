@@ -436,4 +436,50 @@ class FlightSqlServiceSpec extends AnyFunSuite {
       assert(result.rows == Seq(Seq(2, "x")))
     } finally spark.catalog.dropTempView("replan_probe")
   }
+
+  private def intParam(field: String, v: Int): Array[Byte] = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.Row
+    ArrowCodec.encodeStream(spark.createDataFrame(
+      java.util.Arrays.asList(Row(v)),
+      StructType(Seq(StructField(field, IntegerType, nullable = false))))).toBytes
+  }
+
+  test("a $ inside a backtick-quoted alias is not a placeholder, at GetFlightInfo or DoGet") {
+    val info = service.getFlightInfoStatement("SELECT 1 AS `a$1`")
+    assert(ArrowCodec.decodeSchema(info.schemaBytes).getFields.get(0).getName == "a$1")
+    val result = ArrowCodec.decode(service.doGet(info.ticket).toBytes)
+    assert(result.schema.getFields.get(0).getName == "a$1")
+    assert(result.rows == Seq(Seq(1)))
+  }
+
+  test("bound handle: the GetFlightInfo schema is the schema frame DoGet streams") {
+    val sql = "SELECT id + $1 AS v, id + $1 FROM users WHERE id = $1"
+    val handle = service.doPutPreparedStatementQuery(
+      service.createPreparedStatement(sql).handle, intParam("$1", 1))
+    val info = service.getFlightInfoPreparedStatement(handle)
+    val stream = service.doGet(info.ticket)
+    assert(info.schemaBytes.sameElements(stream.frames.next()))
+    val result = ArrowCodec.decode(service.doGet(info.ticket).toBytes)
+    assert(result.schema.getFields.get(1).getName == "(id + 1)")
+    assert(result.rows == Seq(Seq(2, 2)))
+  }
+
+  test("GetFlightInfo binds the values of a hand-made handle whose placeholder type is uninferable") {
+    val handMade = QueryHandle("SELECT $1 AS x", Some(intParam("$1", 42))).encode
+    val schema = ArrowCodec.decodeSchema(service.getFlightInfoPreparedStatement(handMade).schemaBytes)
+    assert(schema.getFields.size == 1)
+    assert(schema.getFields.get(0).getName == "x")
+  }
+
+  test("a placeholder statement: GetFlightInfo types it, DoGet of its ticket is an error") {
+    val sql = "SELECT name FROM users WHERE id = $1"
+    val schema = ArrowCodec.decodeSchema(service.getFlightInfoStatement(sql).schemaBytes)
+    assert(schema.getFields.get(0).getName == "name")
+    assert(schema.getFields.get(0).getType ==
+      org.apache.arrow.vector.types.pojo.ArrowType.Utf8.INSTANCE)
+    val e = intercept[Status](
+      service.doGet(CommandTicket(CommandStatementQuery(sql)).encode).toBytes)
+    assert(e.code == Status.Internal)
+  }
 }
