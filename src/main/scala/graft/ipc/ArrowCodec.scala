@@ -6,7 +6,6 @@ import java.nio.channels.Channels
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter, ReadChannel, WriteChannel}
 import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
 import org.apache.arrow.vector.types.pojo.{Field, FieldType, Schema => ArrowSchema}
@@ -93,7 +92,7 @@ object ArrowCodec {
   final case class DecodedStream(schema: ArrowSchema, rows: Seq[Seq[Any]])
 
   def decode(bytes: Array[Byte]): DecodedStream = {
-    val allocator = new RootAllocator(Long.MaxValue)
+    val allocator = SparkArrowBridge.childAllocator("graft-decode")
     val reader = new ArrowStreamReader(new ByteArrayInputStream(bytes), allocator)
     try {
       val root = reader.getVectorSchemaRoot
@@ -120,7 +119,7 @@ object ArrowCodec {
     * plain ArrowStreamReader pass cannot tell apart.
     */
   def messageHeaderTypes(bytes: Array[Byte]): Seq[Byte] = {
-    val allocator = new RootAllocator(Long.MaxValue)
+    val allocator = SparkArrowBridge.childAllocator("graft-message-headers")
     val reader = new org.apache.arrow.vector.ipc.message.MessageChannelReader(
       new ReadChannel(Channels.newChannel(new ByteArrayInputStream(bytes))), allocator)
     try {

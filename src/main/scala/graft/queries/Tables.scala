@@ -32,10 +32,19 @@ object Tables {
     * TIMESTAMP_NTZ). Branch on the dtype Spark actually read so either
     * fixture works; both paths land on µs-precision TIMESTAMP_NTZ, the same
     * value DuckDB's epoch_us sees, so oracles agree (SURVEY §7.6.3).
+    *
+    * The file is read plainly first, so a µs fixture leaves the session
+    * conf untouched. Only a read that Spark refuses as TIMESTAMP(NANOS)
+    * sets nanosAsLong and reads again: execution-time Parquet readers take
+    * that key from the session conf, and no per-read option exists for it.
     */
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val path = s"$dir/events.parquet"
+    val raw = try spark.read.parquet(path) catch {
+      case e: Throwable if isNanosTimestampError(e) =>
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.read.parquet(path)
+    }
     val tsConv = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // legacy TIMESTAMP(NANOS) read as raw nanos: truncate to µs
@@ -52,6 +61,17 @@ object Tables {
     raw.withColumn("ts", org.apache.spark.sql.functions.expr(tsConv))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
+
+  /** Spark's illegal-Parquet-type error for a TIMESTAMP(NANOS) column,
+    * anywhere in the cause chain (footer reads may run as a Spark job).
+    */
+  private def isNanosTimestampError(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: org.apache.spark.SparkThrowable =>
+        t.getCondition == "PARQUET_TYPE_ILLEGAL" &&
+          String.valueOf(t.getMessage).contains("TIMESTAMP(NANOS")
+      case _ => false
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

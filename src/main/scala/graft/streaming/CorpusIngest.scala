@@ -23,23 +23,15 @@ import graft.llm.MinHashDedup
   */
 object CorpusIngest {
 
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Stage the "incoming crawl" fixture (doc_id % 10 = 9) once per dir as
     * two files so the replay exercises multiple micro-batches.
     */
-  private def stage(spark: SparkSession, dir: String): String =
-    stagedCache.computeIfAbsent(dir, { _ =>
-      val staged = graft.Staging.fixtureFor("docs_new", dir)
+  private[streaming] def stage(spark: SparkSession, dir: String): String =
+    graft.Staging.fixture("docs_new", dir) { path =>
       graft.queries.Tables.documents(spark, dir)
         .filter(col("doc_id") % 10 === 9)
-        .coalesce(2).write.mode("overwrite").parquet(staged)
-      staged
-    })
-
-  /** Pre-stage hook for the bench's untimed setup phase. */
-  def stageAll(spark: SparkSession, dir: String): Unit = { stage(spark, dir); () }
+        .coalesce(2).write.mode("overwrite").parquet(path)
+    }
 
   /** Ingest-time PERCEPTUAL media dedup — the streaming form of
     * q_multimodal_phash_dedup's fingerprint stage: incoming media payloads
@@ -58,12 +50,8 @@ object CorpusIngest {
     */
   def mediaDedupIngest(
       spark: SparkSession, dir: String, maxFilesPerTrigger: String = "1"): DataFrame = {
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val payloads = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(staged)
+    val payloads = EventStream.replay(spark, stage(spark, dir),
+        Map("maxFilesPerTrigger" -> maxFilesPerTrigger))
       .selectExpr("doc_id", "CAST((doc_id DIV 10) % 40 AS INT) AS base")
       .selectExpr("doc_id", "base",
         "CAST(4 + base % 5 AS INT) AS w", "CAST(3 + base % 4 AS INT) AS h")
@@ -78,18 +66,8 @@ object CorpusIngest {
           |    '', (a, x) -> concat(a, x)))) AS payload""".stripMargin)
     val admitted = graft.llm.Multimodal.ppmAHash(payloads)
       .dropDuplicates("width", "height", "ahash")
-
-    val queryName = s"graft_media_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val query = admitted.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try query.processAllAvailable()
-    finally { query.stop(); EventStream.releaseStateStores(spark) }
-    val sunk = spark.table(queryName)
-    spark.catalog.dropTempView(queryName)
-    sunk.groupBy("width", "height")
+    EventStream.runToTable(admitted, "append")
+      .groupBy("width", "height")
       .agg(count(lit(1)).as("n_unique"))
       .orderBy("width", "height")
   }
@@ -101,13 +79,8 @@ object CorpusIngest {
       spark: SparkSession, dir: String,
       index: MinHashDedup.CorpusIndex, threshold: Double): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-
-    val incoming = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one crawl batch per trigger
-      .parquet(staged)
+    // one crawl batch per trigger
+    val incoming = EventStream.replay(spark, stage(spark, dir), Map("maxFilesPerTrigger" -> "1"))
       .withColumn("new_words", array_sort(array_distinct(split(col("text"), " "))))
       .select(col("doc_id").as("new_id"), col("new_words"),
         explode(MinHashDedup.rowBandKeys(col("text"))).as("bk"))
@@ -133,21 +106,10 @@ object CorpusIngest {
       .filter(col("c") >= lit(threshold) * (col("n1") + col("n2") - col("c")))
       .select(col("new_id"), col("old_id"))
 
-    val queryName = s"graft_ingest_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val query = matched.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try query.processAllAvailable()
-    finally { query.stop(); EventStream.releaseStateStores(spark) }
-
-    val sunk = spark.table(queryName)
-    spark.catalog.dropTempView(queryName)
     // batch-side rollup: candidates repeat across shared bands; dedup and
     // aggregate outside the stream (a second streaming aggregation is not
     // a thing — and the sink is exactly the admitted-batch delta anyway)
-    sunk.distinct()
+    EventStream.runToTable(matched, "append").distinct()
       .groupBy("new_id")
       .agg(count(lit(1)).as("n_matches"), min(col("old_id")).as("first_match"))
       .orderBy("new_id")

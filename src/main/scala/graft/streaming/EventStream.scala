@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.Sessions.withConf
 import graft.queries.{QuerySpec, Tables}
@@ -16,6 +17,10 @@ import graft.queries.{QuerySpec, Tables}
   * drains into a memory sink. At 100 TB/day this exact plan runs
   * unchanged against a Kafka/file source — tumbling windows shuffle once
   * on (window, event_type), and the watermark bounds state.
+  *
+  * Every replay in this package, the ingest runners included, has one
+  * lifecycle: its input is staged once per dir by `Staging.fixture`,
+  * opened by [[replay]] and drained by [[runToTable]].
   */
 object EventStream {
 
@@ -307,26 +312,15 @@ object EventStream {
         |SELECT user_id, CAST(MIN(ts) AS TIMESTAMP) AS session_start, COUNT(*) AS n
         |FROM y GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin))
 
-  /** Stage the µs-normalized events once per (session, dir) — the raw
-    * fixture is ns-precision parquet which Spark can't stream directly.
-    * The staged path is derived from the source dir so interleaved sfDirs
-    * or concurrent sessions never clobber each other, and repeat queries
-    * pay zero rewrites (ConcurrentHashMap guard). Keyed by dir ONLY: the
-    * staged bytes depend on nothing session-specific, and a per-session
-    * key would let two sessions with the same dir race mode("overwrite")
-    * rewrites of the same path under each other's running streams.
-    * computeIfAbsent serializes writers per dir; later sessions reuse the
-    * file. Keys are bounded by the number of distinct fixture dirs.
+  /** Stage the µs-normalized events once per dir (`Staging.fixture`): the
+    * raw fixture may be ns-precision parquet, which Spark can't stream
+    * directly. The staged path derives from the source dir, so interleaved
+    * sfDirs never clobber each other and repeat queries pay no rewrite.
     */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stage(spark: SparkSession, dir: String): String =
-    stagedCache.computeIfAbsent(dir, { _ =>
-      val staged = graft.Staging.fixtureFor("events_us", dir, ".parquet")
-      Tables.events(spark, dir).write.mode("overwrite").parquet(staged)
-      staged
-    })
+    graft.Staging.fixture("events_us", dir, ".parquet") { path =>
+      Tables.events(spark, dir).write.mode("overwrite").parquet(path)
+    }
 
   /** Orders replayed as a CDC change stream for the streaming SCD2
     * maintainer (the batch q_dim_scd2's source convention: key =
@@ -336,28 +330,26 @@ object EventStream {
     * keys.
     */
   private def stageOrders(spark: SparkSession, dir: String): String =
-    stagedCache.computeIfAbsent(s"$dir#orders", { _ =>
-      val staged = graft.Staging.fixtureFor("orders_scd", dir, ".parquet")
+    graft.Staging.fixture("orders_scd", dir, ".parquet") { path =>
       Tables.orders(spark, dir)
         .where("o_custkey % 10 = 0")
         .selectExpr("o_custkey AS key",
           "unix_micros(CAST(o_orderdate AS TIMESTAMP)) AS ts_us",
           "o_orderkey AS seq", "o_orderstatus AS attr")
-        .write.mode("overwrite").parquet(staged)
-      staged
-    })
+        .write.mode("overwrite").parquet(path)
+    }
 
-  /** Pre-stage every streaming fixture for (session, dir). Bench calls this
-    * in its untimed setup phase so the timed region measures stream
-    * execution, not fixture rewrites.
+  /** Pre-stage every streaming fixture for dir. Bench calls this in its
+    * untimed setup phase so the timed region measures stream execution,
+    * not fixture rewrites.
     */
   def stageAll(spark: SparkSession, dir: String): Unit = {
     stage(spark, dir)
     stageSession(spark, dir)
     stageOuter(spark, dir)
     stageOrders(spark, dir)
-    CorpusIngest.stageAll(spark, dir)
-    VectorIngest.stageAll(spark, dir)
+    CorpusIngest.stage(spark, dir)
+    VectorIngest.stage(spark, dir)
     ()
   }
 
@@ -429,11 +421,22 @@ object EventStream {
     if (spark.streams.active.isEmpty && !anyStreamActiveInJvm)
       org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
-  /** Complete-mode drain for sibling ingest runners (VectorIngest). */
-  private[streaming] def runToTableComplete(stream: DataFrame): DataFrame =
-    runToTable(stream, "complete")
+  /** The one replay opener: a file-source stream over a staged fixture,
+    * its schema read from the fixture's footers (file streams need it up
+    * front).
+    */
+  private[streaming] def replay(
+      spark: SparkSession, path: String, options: Map[String, String] = Map.empty): DataFrame =
+    spark.readStream.schema(spark.read.parquet(path).schema).options(options).parquet(path)
 
-  private def runToTable(stream: DataFrame, mode: String): DataFrame = {
+  /** The one drain: run `stream` into a memory sink until every staged
+    * file is processed and return the sink's rows. `trigger` defaults to
+    * Spark's own default (micro-batches back to back); an AvailableNow
+    * replay terminates by itself, which `processAllAvailable` also waits
+    * for.
+    */
+  private[streaming] def runToTable(stream: DataFrame, mode: String,
+      trigger: Trigger = Trigger.ProcessingTime(0L)): DataFrame = {
     val spark = stream.sparkSession
     val queryName = s"graft_event_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     // The width is captured into the stream's cloned session when the
@@ -445,6 +448,7 @@ object EventStream {
         .outputMode(mode)
         .format("memory")
         .queryName(queryName)
+        .trigger(trigger)
         .start()
       try query.processAllAvailable()
       finally { query.stop(); releaseStateStores(spark) }
@@ -464,11 +468,7 @@ object EventStream {
     * (batch-equivalent) result so correctness is oracle-checkable.
     */
   def windowedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(staged)
+    val stream = replay(spark, stage(spark, dir))
       // watermarks require an instant (TIMESTAMP); session tz is UTC so the
       // NTZ wall-clock maps 1:1 and the window starts cast back losslessly
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -483,11 +483,7 @@ object EventStream {
 
   /** Sliding windows (2h width, 1h slide). */
   def slidingCounts(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(staged)
+    val stream = replay(spark, stage(spark, dir))
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
@@ -498,65 +494,45 @@ object EventStream {
       .orderBy("ws", "event_type")
   }
 
+  /** Stage a sentinel-closed copy of the µs events as fixture `name`: the
+    * events as two files, then two far-future sentinel files (user -1),
+    * one row of `base` each, shaped by `sentinel`. A replay that reads one
+    * file per micro-batch closes its watermark with them: the first
+    * sentinel batch advances the watermark past every real row, the second
+    * runs the batch in which eviction emits the held state (standard
+    * stream-closing technique). Consumers drop user -1.
+    */
+  private def stageSentinelClosed(spark: SparkSession, dir: String, name: String)(
+      sentinel: DataFrame => DataFrame): String =
+    graft.Staging.fixture(name, dir) { path =>
+      val base = spark.read.parquet(stage(spark, dir))
+      base.coalesce(2).write.mode("overwrite").parquet(path)
+      Seq("2099-01-01 00:00:00", "2099-06-01 00:00:00").foreach { far =>
+        sentinel(base.limit(1))
+          .withColumn("user_id", lit(-1L))
+          .withColumn("ts", expr(s"timestamp_ntz '$far'"))
+          .select(base.columns.map(col).toIndexedSeq: _*)
+          .coalesce(1)
+          .write.mode("append").parquet(path)
+      }
+    }
+
   /** Session windows (12-hour inactivity gap) per user. Session-window
     * aggregation only supports append/update output, and append finalizes a
     * session only in a micro-batch AFTER the watermark passes its end — so
-    * the staging dir gets two far-future sentinel files and the stream
-    * processes one file per batch: the first sentinel batch advances the
-    * watermark past every real session, the second evicts and emits them
-    * (standard stream-closing technique). The sentinel user is dropped.
+    * the replay runs over the sentinel-closed staging, one file per batch.
     */
-  private def stageSession(spark: SparkSession, dir: String): String = {
-    // stage() BEFORE entering computeIfAbsent: a nested computeIfAbsent on
-    // the same ConcurrentHashMap throws "Recursive update" when both keys
-    // hash to one bin
-    val src = stage(spark, dir)
-    stagedCache.computeIfAbsent(s"$dir#session", { _ =>
-      val base = spark.read.parquet(src)
-      val dedicated = graft.Staging.fixtureFor("events_session", dir)
-      base.coalesce(2).write.mode("overwrite").parquet(dedicated)
-      Seq("2099-01-01 00:00:00", "2099-06-01 00:00:00").foreach { far =>
-        base.limit(1)
-          .withColumn("user_id", lit(-1L))
-          .withColumn("ts", expr(s"timestamp_ntz '$far'"))
-          .write.mode("append").parquet(dedicated)
-      }
-      dedicated
-    })
-  }
+  private def stageSession(spark: SparkSession, dir: String): String =
+    stageSentinelClosed(spark, dir, "events_session")(identity)
 
   def sessionCounts(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val dedicated = stageSession(spark, dir)
-    val schema = spark.read.parquet(dedicated).schema
-
-    val queryName = s"graft_session_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one file per batch → watermark advances across batches
-      .parquet(dedicated)
+    // one file per batch → watermark advances across batches
+    val stream = replay(spark, stageSession(spark, dir), Map("maxFilesPerTrigger" -> "1"))
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "1 minute")
       .groupBy(session_window(col("ts"), "12 hours"), col("user_id"))
       .agg(count(lit(1)).as("n"))
-    // same state-width sizing as runToTable: one state store per shuffle
-    // partition PER micro-batch; hold the narrowed width until the replay
-    // drains (the cloned session captures it at start())
-    withConf(spark, "spark.sql.shuffle.partitions" -> streamShufflePartitions(spark)) {
-      val query = stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try query.awaitTermination()
-      finally { if (query.isActive) query.stop(); releaseStateStores(spark) }
-    }
-
-    // same sink-view cleanup as runToTable (eager analysis survives the drop)
-    val sunk = spark.table(queryName)
-    spark.catalog.dropTempView(queryName)
-    sunk
+    runToTable(stream, "append", Trigger.AvailableNow())
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
         col("session_window.start").cast("timestamp_ntz").as("session_start"),
@@ -564,35 +540,17 @@ object EventStream {
       .orderBy("user_id", "session_start")
   }
 
-  /** Events + far-future sentinel files for the OUTER stream-stream join:
-    * each sentinel file carries one 'click' AND one 'purchase' row (user
-    * -1) so it survives BOTH sides' event-type filters and advances BOTH
-    * watermarks — an outer join's null-padded rows only emit once the
-    * GLOBAL watermark (min across inputs) proves no match can still
-    * arrive, and a sentinel filtered out of either side would stall that
-    * side's watermark at its last real row. Two sentinel files, one file
-    * per micro-batch: the first advances the watermark past every real
-    * row, the second runs the batch in which eviction emits the unmatched
-    * clicks (same stream-closing technique as [[stageSession]]).
+  /** Sentinel-closed events for the OUTER stream-stream join: each
+    * sentinel file carries one 'click' AND one 'purchase' row, so it
+    * survives BOTH sides' event-type filters and advances BOTH watermarks —
+    * an outer join's null-padded rows only emit once the GLOBAL watermark
+    * (min across inputs) proves no match can still arrive, and a sentinel
+    * filtered out of either side would stall that side's watermark at its
+    * last real row.
     */
-  private def stageOuter(spark: SparkSession, dir: String): String = {
-    val src = stage(spark, dir)
-    stagedCache.computeIfAbsent(s"$dir#outer", { _ =>
-      val base = spark.read.parquet(src)
-      val dedicated = graft.Staging.fixtureFor("events_outer", dir)
-      base.coalesce(2).write.mode("overwrite").parquet(dedicated)
-      Seq("2099-01-01 00:00:00", "2099-06-01 00:00:00").foreach { far =>
-        base.limit(1)
-          .withColumn("event_type", explode(array(lit("click"), lit("purchase"))))
-          .withColumn("user_id", lit(-1L))
-          .withColumn("ts", expr(s"timestamp_ntz '$far'"))
-          .select(base.columns.map(col).toIndexedSeq: _*)
-          .coalesce(1)
-          .write.mode("append").parquet(dedicated)
-      }
-      dedicated
-    })
-  }
+  private def stageOuter(spark: SparkSession, dir: String): String =
+    stageSentinelClosed(spark, dir, "events_outer")(
+      _.withColumn("event_type", explode(array(lit("click"), lit("purchase")))))
 
   /** Stream-stream LEFT OUTER interval join: every click emits — matched
     * clicks as soon as both rows arrive (inner behavior), unmatched
@@ -610,11 +568,8 @@ object EventStream {
     */
   private def outerJoined(spark: SparkSession, dir: String, joinType: String): DataFrame = {
     val staged = stageOuter(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    def side(eventType: String, userName: String, tsName: String) = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged)
+    def side(eventType: String, userName: String, tsName: String) = replay(
+        spark, staged, Map("maxFilesPerTrigger" -> "1"))
       .filter(col("event_type") === eventType)
       .select(col("user_id").as(userName), col("ts").cast("timestamp").as(tsName))
       .withWatermark(tsName, "1 hour")
@@ -664,10 +619,7 @@ object EventStream {
     */
   def streamStreamJoinCounts(spark: SparkSession, dir: String): DataFrame = {
     val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    def side(eventType: String, tsName: String) = spark.readStream
-      .schema(schema)
-      .parquet(staged)
+    def side(eventType: String, tsName: String) = replay(spark, staged)
       .filter(col("event_type") === eventType)
       .select(col("user_id"), col("ts").cast("timestamp").as(tsName))
       .withWatermark(tsName, "1 hour")
@@ -688,13 +640,10 @@ object EventStream {
     */
   def staticJoinCounts(spark: SparkSession, dir: String): DataFrame = {
     val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
     val dim = spark.read.parquet(staged)
       .select(col("user_id")).distinct()
       .withColumn("tier", col("user_id") % 4)
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(staged)
+    val stream = replay(spark, staged)
       .join(dim, "user_id")
       .groupBy("tier", "event_type").agg(count(lit(1)).as("n"))
     runToTable(stream, "complete").orderBy("tier", "event_type")
@@ -706,11 +655,7 @@ object EventStream {
     * lets the state store evict old keys on a real unbounded stream.
     */
   def dedupCounts(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val firsts = spark.readStream
-      .schema(schema)
-      .parquet(staged)
+    val firsts = replay(spark, stage(spark, dir))
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "24 hours")
       .dropDuplicates("user_id", "event_type")
@@ -734,11 +679,7 @@ object EventStream {
     * the oracle checks.
     */
   def dedupWithinWatermarkCounts(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val firsts = spark.readStream
-      .schema(schema)
-      .parquet(staged)
+    val firsts = replay(spark, stage(spark, dir))
       .withColumn("ts", col("ts").cast("timestamp"))
       .select("user_id", "event_type", "ts")
       .withWatermark("ts", "60 days")
@@ -755,11 +696,7 @@ object EventStream {
   def statefulCounts(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val updates = spark.readStream
-      .schema(schema)
-      .parquet(staged)
+    val updates = replay(spark, stage(spark, dir))
       .selectExpr("user_id")
       .as[Long]
       .groupByKey(identity)
@@ -798,11 +735,7 @@ object EventStream {
       spark: SparkSession, staged: String, opts: Map[String, String]): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val schema = spark.read.parquet(staged).schema
-    val sketched = spark.readStream
-      .schema(schema)
-      .options(opts)
-      .parquet(staged)
+    val sketched = replay(spark, staged, opts)
       .selectExpr("event_type", bucketSqlInt)
       .as[(String, Int)]
       .groupByKey(_._1)
@@ -863,7 +796,6 @@ object EventStream {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
     val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
     val bucketExpr = bucketSqlInt
     // constant-size reference artifact (types x 64), computed batch-side
     val ref: Map[String, Array[Long]] = spark.read.parquet(staged)
@@ -891,9 +823,7 @@ object EventStream {
       }
       acc
     }
-    val scored = spark.readStream
-      .schema(schema)
-      .parquet(staged)
+    val scored = replay(spark, staged)
       .where("event_id % 3 != 0")
       .selectExpr("event_type", bucketExpr)
       .as[(String, Int)]
@@ -1018,13 +948,9 @@ object EventStream {
   def scd2Stream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val staged = stageOrders(spark, dir)
-    val schema = spark.read.parquet(staged).schema
+    val opts = maxFilesPerTrigger.map(m => "maxFilesPerTrigger" -> m.toString).toMap
     withConf(spark, rocksDbProvider) {
-      val reader = spark.readStream.schema(schema)
-      val src = maxFilesPerTrigger
-        .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-        .parquet(staged)
+      val src = replay(spark, stageOrders(spark, dir), opts)
         .as[(Long, Long, Long, String)]
       val out = src
         .groupByKey(_._1)
@@ -1053,12 +979,8 @@ object EventStream {
     */
   def topPurchasesCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
     withConf(spark, rocksDbProvider) {
-      val tops = spark.readStream
-        .schema(schema)
-        .parquet(staged)
+      val tops = replay(spark, stage(spark, dir))
         .where("event_type = 'purchase'")
         .selectExpr("user_id", "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents")
         .as[(Long, Long)]
@@ -1090,11 +1012,7 @@ object EventStream {
   def milestoneCounts(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import spark.implicits._
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val milestones = spark.readStream
-      .schema(schema)
-      .parquet(staged)
+    val milestones = replay(spark, stage(spark, dir))
       .selectExpr("user_id")
       .as[Long]
       .groupByKey(identity)

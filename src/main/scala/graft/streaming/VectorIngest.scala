@@ -32,24 +32,16 @@ object VectorIngest {
   /** Probed first-level cells per ingested vector. */
   val p1 = 2
 
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Stage the "incoming vectors" fixture (vec_id % 10 = 9) once per dir
     * as two files so the replay exercises multiple micro-batches.
     */
-  private def stage(spark: SparkSession, dir: String): String =
-    stagedCache.computeIfAbsent(dir, { _ =>
-      val staged = graft.Staging.fixtureFor("vecs_new", dir)
+  private[streaming] def stage(spark: SparkSession, dir: String): String =
+    graft.Staging.fixture("vecs_new", dir) { path =>
       spark.read.parquet(s"$dir/embeddings.parquet")
         .filter(col("vec_id") % 10 === 9)
         .select("vec_id", "embedding")
-        .coalesce(2).write.mode("overwrite").parquet(staged)
-      staged
-    })
-
-  /** Pre-stage hook for the bench's untimed setup phase. */
-  def stageAll(spark: SparkSession, dir: String): Unit = { stage(spark, dir); () }
+        .coalesce(2).write.mode("overwrite").parquet(path)
+    }
 
   /** Spark-dialect squared distance over the quantized vectors. */
   private[streaming] def d2Spark(a: String, b: String): String =
@@ -154,8 +146,6 @@ object VectorIngest {
     */
   def assignIngest(spark: SparkSession, dir: String, index: CellIndex): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val staged = stage(spark, dir)
-    val schema = spark.read.parquet(staged).schema
 
     // the cell table as a literal array expression — the quantizer
     // metadata every ingest executor holds (N^(1/4) x dim doubles)
@@ -165,10 +155,8 @@ object VectorIngest {
       }
       .mkString("array(", ", ", ")")
 
-    val incoming = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one ingest batch per trigger
-      .parquet(staged)
+    // one ingest batch per trigger
+    val incoming = EventStream.replay(spark, stage(spark, dir), Map("maxFilesPerTrigger" -> "1"))
       .selectExpr("vec_id", s"${graft.llm.AnnSql.kmQSpark} AS v")
       // top-p1 cells: pure projection, deterministic (d2, id) sort
       .selectExpr("vec_id", "v",
@@ -188,7 +176,7 @@ object VectorIngest {
       .groupBy("vec_id")
       .agg(min(col("best")).as("t"))
 
-    EventStream.runToTableComplete(best)
+    EventStream.runToTable(best, "complete")
       .select(col("vec_id"), col("t.id").as("cent_id"),
         col("t.d").cast("bigint").as("d2"))
       .orderBy("vec_id")

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.arrow.memory.BufferAllocator
 import org.apache.arrow.vector.types.pojo.{Schema => ArrowSchema}
 
 import org.apache.spark.TaskContext
@@ -27,6 +28,12 @@ object SparkArrowBridge {
   /** Arrow schema → Spark StructType (client-side schema discovery). */
   def fromArrowSchema(schema: ArrowSchema): StructType =
     ArrowUtils.fromArrowSchema(schema)
+
+  /** A child of Spark's shared Arrow allocator for one driver-side decode;
+    * the caller closes it when the decode ends.
+    */
+  def childAllocator(name: String): BufferAllocator =
+    ArrowUtils.rootAllocator.newChildAllocator(name, 0, Long.MaxValue)
 
   /** The query result as serialized Arrow record-batch messages of at most
     * `maxRowsPerBatch` rows. Each partition is encoded inside its own task

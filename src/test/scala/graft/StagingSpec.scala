@@ -6,8 +6,8 @@ import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.graftbridge.{InternalFrames, RddBlocks}
 
 /** Pins the single staging definition (round-10 verdict #6): stats reset
-  * vs stats carry-through, the local/reliable backend switch, and the
-  * transient-frame release.
+  * vs stats carry-through, the local/reliable backend switch, the
+  * transient-frame release, and the on-disk fixture stager's contract.
   */
 class StagingSpec extends AnyFunSuite {
 
@@ -83,5 +83,63 @@ class StagingSpec extends AnyFunSuite {
       assert(blocks(kept) == keptBlocks, "a frame staged inside pinned must keep its blocks")
       assert(kept.count() == 100)
     } finally InternalFrames.checkpointRdd(kept).get.unpersist(blocking = true)
+  }
+
+  // Fixture-stager cases: each uses a fresh temp dir as the source dir, so
+  // its keys are new to the JVM-wide map; the writes only count calls.
+  private def freshDir(): String =
+    java.nio.file.Files.createTempDirectory("graft_fixture_src_").toString
+
+  test("fixture: 8 concurrent callers of one key run write once and share its path") {
+    val dir = freshDir()
+    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val calls = (1 to 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String = {
+            gate.await()
+            Staging.fixture("concurrent", dir) { _ => writes.incrementAndGet(); Thread.sleep(200) }
+          }
+        })
+      }
+      gate.countDown()
+      val paths = calls.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(writes.get == 1, "write must run exactly once per key")
+      assert(paths.distinct.size == 1)
+    } finally pool.shutdownNow()
+  }
+
+  test("fixture: a write may stage a second key from a cold map") {
+    val dir = freshDir()
+    var inner = ""
+    val outer = Staging.fixture("outer", dir) { _ =>
+      inner = Staging.fixture("inner", dir)(_ => ())
+    }
+    assert(inner.nonEmpty && inner != outer)
+    // both keys are now staged: neither write runs again
+    assert(Staging.fixture("inner", dir)(_ => fail("inner re-staged")) == inner)
+    assert(Staging.fixture("outer", dir)(_ => fail("outer re-staged")) == outer)
+  }
+
+  test("fixture: a write that throws leaves no entry and the next caller retries") {
+    val dir = freshDir()
+    val boom = intercept[IllegalStateException] {
+      Staging.fixture("flaky", dir)(_ => throw new IllegalStateException("disk full"))
+    }
+    assert(boom.getMessage == "disk full")
+    var retried = false
+    Staging.fixture("flaky", dir) { _ => retried = true }
+    assert(retried, "the failed write must not be cached")
+  }
+
+  test("fixture: the path is fixtureRoot/<name>_<first 4 MD5 bytes of dir, hex><ext>") {
+    val dir = freshDir()
+    val md5 = java.security.MessageDigest.getInstance("MD5").digest(dir.getBytes("UTF-8"))
+    val hex = Integer.toHexString(md5.take(4).foldLeft(0)((a, b) => (a << 8) | (b & 0xff)))
+    assert(Staging.fixture("pathcheck", dir, ".parquet")(_ => ()) ==
+      s"${Staging.fixtureRoot}/pathcheck_$hex.parquet")
+    assert(Staging.fixtureRoot == java.nio.file.Paths.get("target", "fixtures").toAbsolutePath.toString)
   }
 }

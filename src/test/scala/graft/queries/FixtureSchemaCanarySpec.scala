@@ -96,6 +96,39 @@ class FixtureSchemaCanarySpec extends AnyFunSuite {
     assert(got == "2024-01-01 00:00:00", s"nanos->micros conversion drifted: $got")
   }
 
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  test("events loader leaves nanosAsLong unset for a µs fixture") {
+    val fresh = s.newSession()
+    assert(Tables.events(fresh, dir).schema("ts").dataType == TimestampNTZType)
+    assert(!fresh.conf.getAll.contains(nanosAsLong),
+      s"loading µs events set $nanosAsLong on the session")
+  }
+
+  test("events loader reads a TIMESTAMP(NANOS) fixture as µs TIMESTAMP_NTZ") {
+    // Spark 4 refuses TIMESTAMP(NANOS) unless nanosAsLong is set: the
+    // loader's fallback sets it and truncates the raw nanos to µs.
+    val tmp = java.nio.file.Files.createTempDirectory("events_nanos_").toString
+    val script =
+      """import sys, pyarrow as pa, pyarrow.parquet as pq
+        |t = pa.table({
+        |    "event_id": pa.array([1], pa.int64()),
+        |    "ts": pa.array([1704067200123456789], pa.timestamp("ns")),
+        |    "user_id": pa.array([7], pa.int64()),
+        |    "event_type": ["click"], "value": [1.5], "props": ["{}"]})
+        |pq.write_table(t, sys.argv[1], version="2.6")
+        |assert "timeUnit=nanoseconds" in str(pq.ParquetFile(sys.argv[1]).schema)
+        |""".stripMargin
+    val rc = new ProcessBuilder("python3", "-c", script, s"$tmp/events.parquet")
+      .inheritIO().start().waitFor()
+    assert(rc == 0, "python3 + pyarrow failed to write the nanos fixture")
+    val fresh = s.newSession()
+    val ev = Tables.events(fresh, tmp)
+    assert(ev.schema("ts").dataType == TimestampNTZType)
+    val got = ev.selectExpr("CAST(ts AS STRING)").head().getString(0)
+    assert(got == "2024-01-01 00:00:00.123456", s"nanos->micros conversion drifted: $got")
+  }
+
   test("registerAll isolates a broken table instead of failing all ten") {
     val tmp = java.nio.file.Files.createTempDirectory("broken_fix_").toString
     // valid copies of nine tables (symlinks to the real fixture)...

@@ -25,7 +25,7 @@ class StreamWidthInvarianceSpec extends AnyFunSuite {
       .collect().map(_.toString).toSeq.sorted
   }
 
-  for (q <- Seq("q_stream_window", "q_stream_session")) {
+  for (q <- Seq("q_stream_window", "q_stream_session", "q_stream_media_dedup")) {
     test(s"$q: identical results at stateful widths 2 and 8") {
       val w2 = rowsAtWidth(q, 2)
       val w8 = rowsAtWidth(q, 8)
