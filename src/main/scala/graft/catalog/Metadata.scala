@@ -3,6 +3,7 @@ package graft.catalog
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.StringUtils
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 
 import graft.ipc.ArrowCodec
@@ -16,19 +17,12 @@ import graft.protocol.Commands.{CommandGetDbSchemas, CommandGetTables}
   */
 object Metadata {
 
-  /** SQL LIKE pattern (`%`, `_`) matcher, mirroring the Flight SQL metadata
-    * builder's filter semantics.
+  /** SQL LIKE pattern (`%`, `_`, `\` escape) matcher, mirroring the Flight
+    * SQL metadata builder's filter semantics through the regex Spark's own
+    * `LIKE` compiles.
     */
-  def likeMatch(pattern: String, value: String): Boolean = {
-    val regex = new StringBuilder
-    pattern.foreach {
-      case '%' => regex.append(".*")
-      case '_' => regex.append('.')
-      case c if "\\.[]{}()*+-?^$|".contains(c) => regex.append('\\').append(c)
-      case c => regex.append(c)
-    }
-    value.matches(regex.toString)
-  }
+  def likeMatch(pattern: String, value: String): Boolean =
+    value.matches(StringUtils.escapeLikeRegex(pattern, '\\'))
 
   private def df(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, schema)

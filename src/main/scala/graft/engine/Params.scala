@@ -168,7 +168,7 @@ object Params {
   final case class Named(values: Map[String, Any]) extends ParamValues
 
   def decodeParamValues(ipc: Array[Byte]): Option[ParamValues] = {
-    val decoded = ArrowCodec.decode(ipc)
+    val decoded = ArrowCodec.decode(ipc, maxRows = 1)
     if (decoded.rows.isEmpty) return None
     val row = decoded.rows.head
     val names = decoded.schema.getFields

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.{CosineSimilarity, DotProduct, DotProductDD, ExpMicro, LnScaledMicro, SortedOverlap, WordNgrams}
 
@@ -22,8 +23,15 @@ object GraftFunctions {
     ("graft_ln_scaled", e => LnScaledMicro(e(0), e(1), e(2))),
     ("graft_exp_micro", e => ExpMicro(e(0))))
 
-  def register(spark: SparkSession): Unit =
+  /** Installs each function the session does not resolve yet, so sessions
+    * built with the extension, and a function the caller registered under a
+    * graft name, are left as they are.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, build) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "built-in")
     }
+  }
 }

@@ -1,11 +1,13 @@
 package graft.ipc
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.Channels
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.arrow.flatbuf.Message
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter, ReadChannel, WriteChannel}
 import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
 import org.apache.arrow.vector.types.pojo.{Field, FieldType, Schema => ArrowSchema}
@@ -91,16 +93,20 @@ object ArrowCodec {
     */
   final case class DecodedStream(schema: ArrowSchema, rows: Seq[Seq[Any]])
 
-  def decode(bytes: Array[Byte]): DecodedStream = {
+  /** At most `maxRows` rows are materialized: a batch of a type without
+    * buffers (Null) can claim billions of rows in a few bytes.
+    */
+  def decode(bytes: Array[Byte], maxRows: Int = Int.MaxValue): DecodedStream = {
+    messageHeaderTypes(bytes) // bounds every length before Arrow allocates it
     val allocator = SparkArrowBridge.childAllocator("graft-decode")
     val reader = new ArrowStreamReader(new ByteArrayInputStream(bytes), allocator)
     try {
       val root = reader.getVectorSchemaRoot
       val schema = root.getSchema
       val rows = ArrayBuffer.empty[Seq[Any]]
-      while (reader.loadNextBatch()) {
+      while (rows.size < maxRows && reader.loadNextBatch()) {
         val vectors = root.getFieldVectors.asScala
-        (0 until root.getRowCount).foreach { i =>
+        (0 until math.min(root.getRowCount, maxRows - rows.size)).foreach { i =>
           rows += vectors.map(v => normalize(v.getObject(i))).toSeq
         }
       }
@@ -112,29 +118,37 @@ object ArrowCodec {
   }
 
   /** Header types of every message in an IPC stream, in order (values from
-    * org.apache.arrow.flatbuf.MessageHeader; EOS markers are skipped by the
-    * reader). Lets the service reproduce the reference's exact
+    * org.apache.arrow.flatbuf.MessageHeader; reading stops at the EOS
+    * marker). Lets the service reproduce the reference's exact
     * parameter-stream error distinctions — batch-before-schema vs second
     * schema vs no schema at all (service.rs:826-853, 1123-1141) — which a
     * plain ArrowStreamReader pass cannot tell apart.
+    *
+    * It walks the stream's framing without allocating and refuses a
+    * metadata or body length beyond the bytes left, an `IOException`:
+    * Arrow's own reader allocates whatever length a message claims before
+    * reading it, so `decode` runs this check first.
     */
   def messageHeaderTypes(bytes: Array[Byte]): Seq[Byte] = {
-    val allocator = SparkArrowBridge.childAllocator("graft-message-headers")
-    val reader = new org.apache.arrow.vector.ipc.message.MessageChannelReader(
-      new ReadChannel(Channels.newChannel(new ByteArrayInputStream(bytes))), allocator)
-    try {
-      val kinds = ArrayBuffer.empty[Byte]
-      var res = reader.readNext()
-      while (res != null) {
-        kinds += res.getMessage.headerType()
-        Option(res.getBodyBuffer).foreach(_.close())
-        res = reader.readNext()
-      }
-      kinds.toSeq
-    } finally {
-      reader.close()
-      allocator.close()
+    val in = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    def prefix(): Int = if (in.remaining < 4) 0 else in.getInt
+    def next(): Int = { val n = prefix(); if (n == -1) prefix() else n } // -1: continuation
+    def take(length: Long, what: String): ByteBuffer = {
+      if (length < 0 || length > in.remaining)
+        throw new IOException(s"IPC $what length $length exceeds the ${in.remaining} bytes left")
+      val part = in.slice().limit(length.toInt)
+      in.position(in.position() + length.toInt)
+      part
     }
+    val kinds = ArrayBuffer.empty[Byte]
+    var length = next()
+    while (length != 0) {
+      val message = Message.getRootAsMessage(take(length, "message metadata"))
+      kinds += message.headerType()
+      take(message.bodyLength(), "message body")
+      length = next()
+    }
+    kinds.toSeq
   }
 
   private def normalize(v: Any): Any = v match {

@@ -3,48 +3,31 @@ package graft.protocol
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 
-/** Minimal protobuf wire-format codec (varint + length-delimited fields) —
-  * just enough to keep our tickets and handles byte-compatible with the
-  * reference's prost-generated messages
-  * (datafusion-flight-sql-server/src/state.rs:45-49, 113-120) without a
-  * protobuf runtime (none is available offline).
-  *
-  * Wire types used: 0 = varint, 2 = length-delimited (string/bytes/message),
-  * plus 1 = fixed64 and 5 = fixed32 (Substrait fp64/fp32 literals — the
-  * tickets and handles themselves never use them).
+import org.sparkproject.spark_core.protobuf.{CodedInputStream, CodedOutputStream, WireFormat}
+
+/** Field-level protobuf codec on the protobuf-java runtime that spark-core
+  * ships relocated (this file is the one importer of the relocation), keeping
+  * tickets and handles byte-compatible with the reference's prost-generated
+  * messages (datafusion-flight-sql-server/src/state.rs:45-49, 113-120).
+  * Wire types: 0 = varint, 2 = length-delimited, 1/5 = fixed64/fixed32
+  * (Substrait fp64/fp32 literals only). Malformed input fails with protobuf's
+  * `InvalidProtocolBufferException` (truncation, an over-long varint, field
+  * number 0) or `IllegalArgumentException` (a group wire type).
   */
 object Proto {
 
   final class Writer {
-    private val out = new ByteArrayOutputStream()
+    private val bytes = new ByteArrayOutputStream()
+    private val out = CodedOutputStream.newInstance(bytes)
 
-    def writeVarint(v: Long): this.type = {
-      var x = v
-      while ((x & ~0x7fL) != 0) {
-        out.write(((x & 0x7f) | 0x80).toInt)
-        x >>>= 7
-      }
-      out.write(x.toInt)
-      this
-    }
+    def writeVarint(v: Long): this.type = { out.writeUInt64NoTag(v); this }
 
-    private def key(tag: Int, wireType: Int): this.type =
-      writeVarint(((tag.toLong << 3) | wireType))
-
-    def bytesField(tag: Int, value: Array[Byte]): this.type = {
-      key(tag, 2)
-      writeVarint(value.length)
-      out.write(value, 0, value.length)
-      this
-    }
+    def bytesField(tag: Int, value: Array[Byte]): this.type = { out.writeByteArray(tag, value); this }
 
     def stringField(tag: Int, value: String): this.type =
       bytesField(tag, value.getBytes(StandardCharsets.UTF_8))
 
-    def varintField(tag: Int, value: Long): this.type = {
-      key(tag, 0)
-      writeVarint(value)
-    }
+    def varintField(tag: Int, value: Long): this.type = { out.writeUInt64(tag, value); this }
 
     /** Proto3 default-value elision for scalar fields. */
     def stringFieldNonEmpty(tag: Int, value: String): this.type =
@@ -53,103 +36,43 @@ object Proto {
     def boolField(tag: Int, value: Boolean): this.type =
       if (value) varintField(tag, 1) else this
 
-    def fixed64Field(tag: Int, bits: Long): this.type = {
-      key(tag, 1)
-      var i = 0
-      while (i < 8) { out.write(((bits >>> (8 * i)) & 0xff).toInt); i += 1 }
-      this
-    }
+    def fixed64Field(tag: Int, bits: Long): this.type = { out.writeFixed64(tag, bits); this }
 
-    def fixed32Field(tag: Int, bits: Int): this.type = {
-      key(tag, 5)
-      var i = 0
-      while (i < 4) { out.write(((bits >>> (8 * i)) & 0xff).toInt); i += 1 }
-      this
-    }
+    def fixed32Field(tag: Int, bits: Int): this.type = { out.writeFixed32(tag, bits); this }
 
-    def result(): Array[Byte] = out.toByteArray
+    def result(): Array[Byte] = { out.flush(); bytes.toByteArray }
   }
 
-  /** One decoded field. For wire type 0 the value is in `varint`; for 1/5
-    * the fixed little-endian bits are in `varint` (sign-extended for
-    * fixed32 consumers to mask); for 2 the payload is in `bytes`.
-    */
+  /** One decoded field: wire types 0/1/5 carry their value in `varint`
+    * (fixed32 zero-extended), wire type 2 its payload in `bytes`. */
   final case class Field(tag: Int, wireType: Int, varint: Long, bytes: Array[Byte])
 
-  /** Decode a message into its top-level fields (repeated tags preserved in
-    * order). Wire types 0/1/2/5 — proto3's full non-group set.
-    */
+  /** A message's top-level fields, repeated tags in order (wire types 0/1/2/5). */
   def decodeFields(msg: Array[Byte]): Seq[Field] = {
+    val in = CodedInputStream.newInstance(msg)
     val fields = Seq.newBuilder[Field]
-    var i = 0
-    def varint(): Long = {
-      var shift = 0
-      var v = 0L
-      var more = true
-      while (more) {
-        if (i >= msg.length) throw new IllegalArgumentException("truncated varint")
-        val b = msg(i) & 0xff
-        i += 1
-        v |= (b & 0x7fL) << shift
-        shift += 7
-        more = (b & 0x80) != 0
-      }
-      v
-    }
-    while (i < msg.length) {
-      val k = varint()
-      val tag = (k >>> 3).toInt
-      val wt = (k & 7).toInt
-      wt match {
-        case 0 => fields += Field(tag, 0, varint(), Array.emptyByteArray)
-        case 2 =>
-          val len = varint().toInt
-          if (i + len > msg.length) throw new IllegalArgumentException("truncated bytes field")
-          fields += Field(tag, 2, 0L, java.util.Arrays.copyOfRange(msg, i, i + len))
-          i += len
-        case 1 =>
-          if (i + 8 > msg.length) throw new IllegalArgumentException("truncated fixed64")
-          var bits = 0L
-          var j = 0
-          while (j < 8) { bits |= (msg(i + j) & 0xffL) << (8 * j); j += 1 }
-          i += 8
-          fields += Field(tag, 1, bits, Array.emptyByteArray)
-        case 5 =>
-          if (i + 4 > msg.length) throw new IllegalArgumentException("truncated fixed32")
-          var bits = 0L
-          var j = 0
-          while (j < 4) { bits |= (msg(i + j) & 0xffL) << (8 * j); j += 1 }
-          i += 4
-          fields += Field(tag, 5, bits, Array.emptyByteArray)
-        case other =>
-          throw new IllegalArgumentException(s"unsupported wire type $other for tag $tag")
-      }
+    var key = in.readTag()
+    while (key != 0) {
+      val tag = WireFormat.getTagFieldNumber(key)
+      fields += (WireFormat.getTagWireType(key) match {
+        case 0 => Field(tag, 0, in.readRawVarint64(), Array.emptyByteArray)
+        case 1 => Field(tag, 1, in.readRawLittleEndian64(), Array.emptyByteArray)
+        case 2 => Field(tag, 2, 0L, in.readByteArray())
+        case 5 => Field(tag, 5, in.readRawLittleEndian32() & 0xffffffffL, Array.emptyByteArray)
+        case other => throw new IllegalArgumentException(s"unsupported wire type $other for tag $tag")
+      })
+      key = in.readTag()
     }
     fields.result()
   }
 
   def string(f: Field): String = new String(f.bytes, StandardCharsets.UTF_8)
 
-  /** Parse a packed repeated-varint payload (proto3 packs repeated int32 by
-    * default; Substrait's emit output_mapping arrives this way).
-    */
+  /** A packed repeated-varint payload (Substrait's emit output_mapping). */
   def packedVarints(payload: Array[Byte]): Seq[Long] = {
+    val in = CodedInputStream.newInstance(payload)
     val out = Seq.newBuilder[Long]
-    var i = 0
-    while (i < payload.length) {
-      var shift = 0
-      var v = 0L
-      var more = true
-      while (more) {
-        if (i >= payload.length) throw new IllegalArgumentException("truncated packed varint")
-        val b = payload(i) & 0xff
-        i += 1
-        v |= (b & 0x7fL) << shift
-        shift += 7
-        more = (b & 0x80) != 0
-      }
-      out += v
-    }
+    while (!in.isAtEnd) out += in.readRawVarint64()
     out.result()
   }
 }

@@ -108,8 +108,8 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit = {
     // The engine's native expressions (graft_ln_scaled / graft_exp_micro /
     // graft_cosine, …) are part of the session surface every inventory
-    // query may reference — registered here (idempotent, a handful of map
-    // inserts) exactly like the per-session function registration the
+    // query may reference — registered here (only names the session does
+    // not resolve yet) exactly like the per-session function registration the
     // reference performs in its SessionProvider.
     graft.functions.GraftFunctions.register(spark)
     if (lastDir.get(spark) != dir) {

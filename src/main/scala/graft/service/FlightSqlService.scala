@@ -231,7 +231,7 @@ class FlightSqlService(
     // invalid-argument guard and surfaces as Internal — matching the
     // reference, where mid-stream Arrow decode errors propagate as decoder
     // errors rather than the three classified invalid-argument cases.
-    if (ArrowCodec.decode(parameterStream).rows.size > 1)
+    if (ArrowCodec.decode(parameterStream, maxRows = 2).rows.size > 1)
       throw Status.invalidArgument("parameters should contain a single row")
     handle.copy(parameters = Some(parameterStream)).encode
   }

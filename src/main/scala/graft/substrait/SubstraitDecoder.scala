@@ -16,8 +16,8 @@ import graft.protocol.Proto.Field
   * (datafusion-flight-sql-server/src/service.rs:1018-1029 via
   * `deserialize_bytes` + `from_substrait_plan`; the DoGet arm at
   * service.rs:274-303 and GetFlightInfo at service.rs:349-386). No
-  * substrait-java exists offline, so this decodes the wire format directly
-  * with the same varint machinery as [[graft.protocol.Proto]] and lowers
+  * substrait-java exists offline, so this decodes the wire format field by
+  * field through [[graft.protocol.Proto]] and lowers
   * each relation onto the DataFrame API — Catalyst then optimizes the
   * declarative plan exactly as it would the SQL twin (predicate pushdown,
   * join strategy, whole-stage codegen come free, which is the Spark-first
@@ -60,6 +60,21 @@ object SubstraitDecoder {
   private val RelCross = 12
 
   private def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
+
+  /** Deepest nesting of relations, expressions and AND chains a plan may
+    * have (protobuf-java's default recursion limit). Each level recurses on
+    * the JVM stack, so a deeper, hostile plan fails here with an
+    * `IllegalArgumentException` instead of a `StackOverflowError`.
+    */
+  private val MaxDepth = 100
+  private val depth = new ThreadLocal[Int] { override def initialValue(): Int = 0 }
+
+  private def nested[A](body: => A): A = {
+    val d = depth.get
+    if (d >= MaxDepth) fail(s"substrait: plan nests deeper than $MaxDepth levels")
+    depth.set(d + 1)
+    try body finally depth.set(d)
+  }
 
   private def sub(bytes: Array[Byte]): Seq[Field] = Proto.decodeFields(bytes)
   private def one(fs: Seq[Field], tag: Int): Option[Field] = fs.find(_.tag == tag)
@@ -111,7 +126,7 @@ object SubstraitDecoder {
       spark: SparkSession,
       fns: Map[Long, String],
       fresh: AtomicInteger,
-      relBytes: Array[Byte]): DataFrame = {
+      relBytes: Array[Byte]): DataFrame = nested {
     def freshName(): String = s"_s${fresh.getAndIncrement()}"
     val relFields = sub(relBytes)
     if (relFields.isEmpty) fail("substrait: empty relation")
@@ -157,7 +172,7 @@ object SubstraitDecoder {
         // wire format's level)
         val in = input
         // split the condition into AND conjuncts at the BYTES level
-        def conjuncts(b: Array[Byte]): Seq[Array[Byte]] = {
+        def conjuncts(b: Array[Byte]): Seq[Array[Byte]] = nested {
           val f = sub(b).headOption
           f match {
             case Some(x) if x.tag == 3 =>
@@ -404,7 +419,7 @@ object SubstraitDecoder {
   /** Expression { literal=1; selection=2; scalar_function=3; if_then=6;
     * singular_or_list=8; cast=11 } over the positional column frame.
     */
-  private def expression(bytes: Array[Byte], cols: Seq[Column], fns: Map[Long, String]): Column = {
+  private def expression(bytes: Array[Byte], cols: Seq[Column], fns: Map[Long, String]): Column = nested {
     val fs = sub(bytes)
     if (fs.isEmpty) fail("substrait: empty expression")
     val f = fs.head

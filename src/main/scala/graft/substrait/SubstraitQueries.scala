@@ -24,7 +24,7 @@ object SubstraitQueries {
     * scripts/check_substrait.py pins that Acero rejects this plan *only*
     * for its missing `modulus` kernel — the wire bytes parse there.
     */
-  private[substrait] def aggPlanBytes: Array[Byte] = {
+  private[graft] def aggPlanBytes: Array[Byte] = {
     val fns = Seq(
       Fn(1, UriComparison, "equal:any_any"),
       Fn(2, UriArithmetic, "modulus:i64_i64"),
@@ -68,7 +68,7 @@ object SubstraitQueries {
     * independent consumer. post_join_filter decoding stays covered by
     * SubstraitSpec.
     */
-  private[substrait] def joinPlanBytes: Array[Byte] = {
+  private[graft] def joinPlanBytes: Array[Byte] = {
     val fns = Seq(
       Fn(1, UriComparison, "equal:any_any"),
       Fn(2, UriComparison, "gt:any_any"))
@@ -104,7 +104,7 @@ object SubstraitQueries {
     * duplicate-free and the final sort on the unique o_orderkey is
     * deterministic. Acero-runnable end-to-end (check_substrait.py row 3).
     */
-  private[substrait] def unionPlanBytes: Array[Byte] = {
+  private[graft] def unionPlanBytes: Array[Byte] = {
     val fns = Seq(
       Fn(1, UriComparison, "gt:any_any"),
       Fn(2, UriComparison, "lt:any_any"))
@@ -131,7 +131,7 @@ object SubstraitQueries {
     * oracle. rk is INT on both sides (Spark's row_number is IntegerType;
     * the twin casts DuckDB's BIGINT).
     */
-  private[substrait] def windowPlanBytes: Array[Byte] = {
+  private[graft] def windowPlanBytes: Array[Byte] = {
     val fns = Seq(
       Fn(1, UriArithmetic, "row_number:"),
       Fn(2, UriComparison, "lte:any_any"))
@@ -164,7 +164,7 @@ object SubstraitQueries {
     * the substrait spec: distinct grouping exprs, measures, then the i32
     * grouping-set index.
     */
-  private[substrait] def groupingSetsPlanBytes: Array[Byte] = {
+  private[graft] def groupingSetsPlanBytes: Array[Byte] = {
     val fns = Seq(
       Fn(1, UriAggGeneric, "count:"),
       Fn(2, UriArithmetic, "sum:dec"))
@@ -200,7 +200,7 @@ object SubstraitQueries {
     * IN-predicate arm — graft's consumer lowers the conjunct to a
     * left_semi join and keeps the residual predicate an ordinary filter.
     */
-  private[substrait] def inSubqueryPlanBytes: Array[Byte] = {
+  private[graft] def inSubqueryPlanBytes: Array[Byte] = {
     val fns = Seq(
       Fn(1, UriComparison, "gt:any_any"),
       Fn(2, UriBoolean, "and:bool"))

@@ -32,4 +32,9 @@ class MetadataSpec extends AnyFunSuite {
     assert(Metadata.likeMatch("users", "users"))
     assert(!Metadata.likeMatch("users", "user"))
   }
+
+  test("backslash escapes a wildcard, as in Spark's LIKE") {
+    assert(Metadata.likeMatch("a\\_b", "a_b"))
+    assert(!Metadata.likeMatch("a\\_b", "axb"))
+  }
 }

@@ -65,6 +65,14 @@ class ExtensionSpec extends AnyFunSuite {
     }
   }
 
+  test("Tables.registerAll keeps a function the caller registered under a graft name") {
+    val s = TestSpark.spark.newSession()
+    s.udf.register("graft_dot", (_: Seq[Float], _: Seq[Double]) => 42.0)
+    graft.queries.Tables.registerAll(s, "/root/testdata/sf0.001")
+    assert(s.sql("SELECT graft_dot(array(1.0F), array(1.0D))").head().getDouble(0) == 42.0)
+    assert(s.sql("SELECT graft_cosine(array(1.0F), array(1.0F))").head().getDouble(0) == 1.0)
+  }
+
   test("optimizer canonicalizes commutative cosine argument order") {
     withExtensionSession { s =>
       // parquet-backed (a LocalRelation would be eagerly evaluated by

@@ -113,4 +113,31 @@ class CodecSpec extends AnyFunSuite {
     val tags = Proto.decodeFields(enc).map(_.tag)
     assert(tags == Seq(1, 2))
   }
+
+  private def hex(bytes: Array[Byte]): String = bytes.map("%02x".format(_)).mkString
+
+  // "type.googleapis.com/arrow.flight.protocol.sql." as hex
+  private val typeUrlPrefixHex =
+    "747970652e676f6f676c65617069732e636f6d2f6172726f772e666c696768742e70726f746f636f6c2e73716c2e"
+
+  test("wire bytes are pinned for tickets, handles and scalar fields") {
+    def ticketHex(cmd: Command) = hex(CommandTicket(cmd).encode)
+    assert(ticketHex(CommandStatementQuery("SELECT 1")) ==
+      "12510a43" + typeUrlPrefixHex + "436f6d6d616e6453746174656d656e745175657279" +
+        "120a0a0853454c4543542031")
+    assert(ticketHex(CommandGetTables(Some("c"), Some("d%"), Some("t_"), Seq("VIEW"), includeSchema = true)) ==
+      "12550a3e" + typeUrlPrefixHex + "436f6d6d616e644765745461626c6573" +
+        "12130a0163120264251a02745f2204564945572801")
+    assert(ticketHex(CommandGetTableTypes()) ==
+      "12460a42" + typeUrlPrefixHex + "436f6d6d616e644765745461626c655479706573" + "1200")
+    assert(hex(QueryHandle("SELECT 1", Some(Array[Byte](1, 2, 3))).encode) ==
+      "0a0853454c45435420311203010203")
+    assert(hex(new Proto.Writer().varintField(1, -1L).varintField(3, 300L).result()) ==
+      "08ffffffffffffffffff01" + "18ac02")
+    assert(hex(new Proto.Writer().fixed64Field(2, java.lang.Double.doubleToLongBits(1.5)).result()) ==
+      "11000000000000f83f")
+    val fixed32 = new Proto.Writer().fixed32Field(3, java.lang.Float.floatToIntBits(-2.5f)).result()
+    assert(hex(fixed32) == "1d000020c0")
+    assert(Proto.decodeFields(fixed32).head.varint == 0xc0200000L) // zero-extended
+  }
 }

@@ -233,6 +233,65 @@ class FlightSqlServiceSpec extends AnyFunSuite {
     assert(e.message == "parameter flight data must have a known schema")
   }
 
+  test("a parameter stream whose length prefix claims 2 GiB is a Status, at DoPut and inside a handle") {
+    // continuation marker, then a metadata length of Int.MaxValue with no
+    // bytes behind it: Arrow's reader would allocate the claimed length first
+    val hostile = Array(0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0x7f).map(_.toByte)
+    val e1 = intercept[Status] {
+      service.doPutPreparedStatementQuery(QueryHandle("SELECT $1 AS x", None).encode, hostile)
+    }
+    assert(e1.code == Status.InvalidArgument && e1.message.contains("exceeds the 0 bytes left"))
+    val e2 = intercept[Status] {
+      service.getFlightInfoPreparedStatement(QueryHandle("SELECT $1 AS x", Some(hostile)).encode)
+    }
+    assert(e2.code == Status.Internal && e2.message.contains("exceeds the 0 bytes left"))
+  }
+
+  test("a parameter batch whose body length claims 2^54 bytes is a Status, at DoPut and inside a handle") {
+    // the fuzz finding: a flipped bit in a batch's bodyLength made Arrow's
+    // reader ask the allocator for 2^54 bytes, an OutOfMemoryError
+    import com.google.flatbuffers.FlatBufferBuilder
+    import org.apache.arrow.flatbuf.{MessageHeader, RecordBatch}
+    import org.apache.arrow.vector.ipc.WriteChannel
+    import org.apache.arrow.vector.ipc.message.MessageSerializer
+    val fbb = new FlatBufferBuilder()
+    val metadata = MessageSerializer.serializeMessage(
+      fbb, MessageHeader.RecordBatch, RecordBatch.createRecordBatch(fbb, 1L, 0, 0, 0, 0), 1L << 54)
+    val batch = new java.io.ByteArrayOutputStream()
+    MessageSerializer.writeMessageBuffer(
+      new WriteChannel(java.nio.channels.Channels.newChannel(batch)), metadata.remaining, metadata)
+    val schema = ArrowCodec.decode(intParam("$1", 1)).schema
+    val hostile = ArrowCodec.encodeSchema(schema) ++ batch.toByteArray
+    val e1 = intercept[Status] {
+      service.doPutPreparedStatementQuery(QueryHandle("SELECT $1 AS x", None).encode, hostile)
+    }
+    assert(e1.code == Status.InvalidArgument && e1.message.contains("message body length"))
+    val e2 = intercept[Status] {
+      service.getFlightInfoPreparedStatement(QueryHandle("SELECT $1 AS x", Some(hostile)).encode)
+    }
+    assert(e2.code == Status.Internal && e2.message.contains("message body length"))
+  }
+
+  test("a parameter batch claiming Int.MaxValue rows of the buffer-less Null type is bounded") {
+    import org.apache.arrow.vector.{NullVector, VectorSchemaRoot}
+    import org.apache.arrow.vector.ipc.ArrowStreamWriter
+    val root = VectorSchemaRoot.of(new NullVector("$1"))
+    val out = new java.io.ByteArrayOutputStream()
+    try {
+      root.setRowCount(Int.MaxValue)
+      val writer = new ArrowStreamWriter(root, null, out)
+      writer.start(); writer.writeBatch(); writer.end(); writer.close()
+    } finally root.close()
+    val claimed = out.toByteArray
+    val e = intercept[Status] {
+      service.doPutPreparedStatementQuery(QueryHandle("SELECT $1 AS x", None).encode, claimed)
+    }
+    assert(e.message == "parameters should contain a single row")
+    // a hand-made handle carrying it binds the first row only
+    val info = service.getFlightInfoPreparedStatement(QueryHandle("SELECT $1 AS x", Some(claimed)).encode)
+    assert(ArrowCodec.decode(service.doGet(info.ticket).toBytes).rows == Seq(Seq(null)))
+  }
+
   test("register_sql_info is a no-op hook (service.rs:1013)") {
     service.registerSqlInfo(0, "anything") // must not throw, registers nothing
     // the SqlInfo surface stays unimplemented exactly as before
@@ -416,6 +475,24 @@ class FlightSqlServiceSpec extends AnyFunSuite {
       service.getFlightInfoSubstraitPlan(plan(extensionSingle, Nil, Nil)))
     assert(e.code == Status.Internal)
     assert(e.message.contains("unsupported relation tag 9"))
+  }
+
+  test("a substrait plan nested past the decoder's depth cap is a Status on both arms") {
+    import graft.substrait.SubstraitBuilder._
+    def filters(n: Int) = plan(
+      (1 to n).foldLeft(readNamed("users", Seq("id" -> typ(I32), "name" -> typ(STR)))) {
+        (rel, _) => filterRel(rel, litBool(true))
+      },
+      Seq("id", "name"), Nil)
+    val deep = filters(10000)
+    val e1 = intercept[Status](service.getFlightInfoSubstraitPlan(deep))
+    assert(e1.code == Status.Internal && e1.message.contains("nests deeper than"))
+    val e2 = intercept[Status](
+      service.doGet(CommandTicket(CommandStatementSubstraitPlan(deep)).encode).toBytes)
+    assert(e2.code == Status.Internal && e2.message.contains("nests deeper than"))
+    // within the cap the same shape still decodes and serves its rows
+    val info = service.getFlightInfoSubstraitPlan(filters(50))
+    assert(ArrowCodec.decode(service.doGet(info.ticket).toBytes).rows.map(_.head).toSet == Set(1, 2, 3))
   }
 
   test("statement ticket is self-contained: re-decodable and re-runnable (statelessness)") {
