@@ -33,7 +33,7 @@ private[graft] final class LruMemo[K, V](capacity: Int) {
 
   private val map = new java.util.LinkedHashMap[K, Cell](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, Cell]): Boolean =
-      size() > capacity
+      this.size() > capacity
   }
 
   def getOrElseUpdate(key: K)(compute: => V): V = {

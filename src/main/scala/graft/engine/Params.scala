@@ -1,10 +1,13 @@
 package graft.engine
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.antlr.v4.runtime.{CharStreams, Token}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.NamedParameter
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.analysis.{NamedParameter, UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{BinaryOperator, Cast, Expression, In, Literal}
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftbridge.SparkArrowBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -14,7 +17,8 @@ import graft.ipc.ArrowCodec
 
 /** Planning of SQL text with prepared-statement parameters (SURVEY §2.A
   * A3/A8/A20/A22/A25): `$n` / `$name` placeholder rewriting onto Spark's
-  * named-parameter markers, binding values into the parsed plan,
+  * named-parameter markers (tokenized by Spark's SQL lexer, `SqlBaseLexer`),
+  * the SQL gate, binding values into the parsed plan,
   * parameter-type inference from the analyzed plan, and the
   * positional-vs-named decode rules of
   * datafusion-flight-sql-server/src/service.rs:1144-1192.
@@ -22,55 +26,31 @@ import graft.ipc.ArrowCodec
 object Params {
 
   private val markerPrefix = "gp_"
+  private val placeholderName = "[A-Za-z0-9_]+".r
 
-  /** Rewrite `$name`/`$n` placeholders (outside string literals, quoted
-    * identifiers and comments) to Spark named markers `:gp_name`. Returns
-    * the rewritten SQL and the marker→original-name map ("gp_1" → "1").
+  /** Rewrite `$name`/`$n` placeholders to Spark named markers `:gp_name`,
+    * and return the rewritten SQL with the marker→original-name map
+    * ("gp_1" → "1"). The text is tokenized by Spark's own SQL lexer
+    * (`SqlBaseLexer`), so string literals, quoted identifiers, nested
+    * comments and hints are exactly what Spark's parser sees: a placeholder
+    * is a `$` token directly followed by a `[A-Za-z0-9_]+` token.
     */
   def rewrite(sql: String): (String, Map[String, String]) = {
+    val lexer = new SqlBaseLexer(CharStreams.fromString(sql))
+    lexer.removeErrorListeners() // the parser reports malformed text
+    val codePoints = sql.codePoints.toArray // ANTLR offsets count code points
     val out = new StringBuilder
-    val mapping = mutable.LinkedHashMap.empty[String, String]
-    var i = 0
-    var state: Char = 'n' // n=normal, q=quoted up to `close`, l=line comment, b=block comment
-    var close = '\''
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      state match {
-        case 'n' =>
-          if (c == '\'' || c == '"' || c == '`') { state = 'q'; close = c; out.append(c); i += 1 }
-          else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-            state = 'l'; out.append("--"); i += 2
-          } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-            state = 'b'; out.append("/*"); i += 2
-          } else if (c == '$' && i + 1 < sql.length &&
-              (sql.charAt(i + 1).isLetterOrDigit || sql.charAt(i + 1) == '_')) {
-            var j = i + 1
-            while (j < sql.length && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-            val name = sql.substring(i + 1, j)
-            mapping.put(markerPrefix + name, name)
-            out.append(':').append(markerPrefix).append(name)
-            i = j
-          } else { out.append(c); i += 1 }
-        case 'q' =>
-          // Spark's string literals take backslash escapes; identifiers don't
-          if (c == '\\' && close != '`' && i + 1 < sql.length) {
-            out.append(c).append(sql.charAt(i + 1)); i += 2
-          } else {
-            out.append(c)
-            if (c == close) state = 'n'
-            i += 1
-          }
-        case 'l' =>
-          out.append(c)
-          if (c == '\n') state = 'n'
-          i += 1
-        case 'b' =>
-          if (c == '*' && i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-            out.append("*/"); state = 'n'; i += 2
-          } else { out.append(c); i += 1 }
-      }
-    }
-    (out.toString, mapping.toMap)
+    var copied = 0
+    val tokens: Seq[Token] = lexer.getAllTokens.asScala.toSeq
+    val names = tokens.sliding(2).collect {
+      case Seq(dollar, name) if dollar.getText == "$" && placeholderName.matches(name.getText) =>
+        out.append(new String(codePoints, copied, dollar.getStartIndex - copied))
+          .append(':').append(markerPrefix).append(name.getText)
+        copied = name.getStopIndex + 1
+        name.getText
+    }.toList
+    out.append(new String(codePoints, copied, codePoints.length - copied))
+    (out.toString, names.map(n => markerPrefix + n -> n).toMap)
   }
 
   final case class UninferableParameter(name: String)
@@ -95,36 +75,34 @@ object Params {
       unbound: Map[String, String]): Seq[(String, DataType)] = {
     val inferred = mutable.Map.empty[String, DataType]
     // ---- pass 1: comparison-context walk with resolved attribute types ----
-    val attrTypes = mutable.Map.empty[String, DataType]
+    // keyed by Seq(name) and Seq(qualifier, name), lower-cased
+    val attrTypes = mutable.Map.empty[Seq[String], DataType]
     try {
       val nullProbe = parsed.transformAllExpressionsWithSubqueries {
         case NamedParameter(_) => Literal(null)
       }
-      spark.sessionState.analyzer.execute(nullProbe).foreach { node =>
-        node.output.foreach(a => attrTypes.getOrElseUpdate(a.name.toLowerCase, a.dataType))
+      spark.sessionState.analyzer.execute(nullProbe).foreachWithSubqueries { node =>
+        for (a <- node.output; qualifier <- Seq(Nil) ++ a.qualifier.lastOption.map(List(_)))
+          attrTypes.getOrElseUpdate((qualifier :+ a.name).map(_.toLowerCase), a.dataType)
       }
     } catch { case _: Exception => () }
 
     def typeOf(e: Expression): Option[DataType] = e match {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-        attrTypes.get(u.nameParts.last.toLowerCase)
+      case u: UnresolvedAttribute => attrTypes.get(u.nameParts.takeRight(2).map(_.toLowerCase))
       case l: Literal => Some(l.dataType)
       case c: Cast => Some(c.dataType)
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if f.nameParts.last.equalsIgnoreCase("count") => Some(LongType)
+      case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("count") => Some(LongType)
       case _ => None
     }
+    def compared(param: Expression, other: Expression): Unit = param match {
+      case NamedParameter(n) => typeOf(other).foreach(t => inferred.getOrElseUpdate(n, t))
+      case _ => ()
+    }
 
-    parsed.foreach { node =>
+    parsed.foreachWithSubqueries { node =>
       node.expressions.foreach(_.foreach {
-        case b: org.apache.spark.sql.catalyst.expressions.BinaryOperator =>
-          (b.left, b.right) match {
-            case (NamedParameter(n), other) =>
-              typeOf(other).foreach(t => inferred.getOrElseUpdate(n, t))
-            case (other, NamedParameter(n)) =>
-              typeOf(other).foreach(t => inferred.getOrElseUpdate(n, t))
-            case _ => ()
-          }
+        case b: BinaryOperator => compared(b.left, b.right); compared(b.right, b.left)
+        case In(value, list) => list.foreach { e => compared(e, value); compared(value, e) }
         case _ => ()
       })
     }
@@ -144,10 +122,8 @@ object Params {
         case _ => ()
       }
       try {
-        spark.sessionState.analyzer.execute(probe).foreach { node =>
-          node.expressions.foreach(_.foreach(scan))
-          node.subqueries.foreach(_.foreach(n => n.expressions.foreach(_.foreach(scan))))
-        }
+        spark.sessionState.analyzer.execute(probe)
+          .foreachWithSubqueries(_.expressions.foreach(_.foreach(scan)))
       } catch { case _: Exception => () }
     }
 

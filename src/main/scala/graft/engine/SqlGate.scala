@@ -1,6 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.analysis.UnresolvedExecuteImmediate
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.command._
 
 /** Plan-verification gate of the SQL-text entry `Params.plan` (SURVEY §2.A
   * A3, §4.4.1; mirrors SQLOptions.verify_plan,
@@ -8,7 +10,21 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *
   * The verifier is a plain function over the PARSED plan (validation, not
   * rewrite — the reference applies zero rewrite rules of its own, §4.1);
-  * defaults allow everything, matching SQLOptions::default.
+  * defaults allow everything, matching SQLOptions::default. Each node falls
+  * in one of four classes, by Spark's plan types:
+  *  - DML: the write nodes (INSERT, V2 writes, DELETE/UPDATE/MERGE,
+  *    INSERT OVERWRITE DIRECTORY, TRUNCATE, LOAD DATA), under `allowDml`;
+  *  - statement: commands that change session state (SET, RESET, USE,
+  *    session variables), under `allowStatements`;
+  *  - read-only: SHOW, DESCRIBE and EXPLAIN, always allowed (as in
+  *    DataFusion, where they are not DDL); the plan an EXPLAIN or
+  *    DESCRIBE QUERY supervises is verified in turn;
+  *  - DDL: every other Spark `Command`, plus `CALL`, under `allowDdl`.
+  * The DDL class is the fail-closed default: a command class the gate does
+  * not name (ADD JAR, CREATE TEMPORARY FUNCTION, any command a later Spark
+  * adds) is DDL. EXECUTE IMMEDIATE and SQL-script bodies hide their inner
+  * statements from the parsed plan, so they pass only when all three
+  * classes are allowed.
   */
 final case class SqlOptions(
     allowDdl: Boolean = true,
@@ -17,37 +33,40 @@ final case class SqlOptions(
 
 object SqlGate {
 
-  /** Statement classes, by parsed-plan node name. Mirrors DataFusion's
-    * DDL / DML / Statement split.
-    */
-  private val ddlNodes = Set(
-    "CreateTable", "CreateTableAsSelect", "ReplaceTable", "ReplaceTableAsSelect",
-    "CreateView", "CreateViewCommand", "CreateTempViewUsing", "DropTable",
-    "DropView", "AlterTable", "RenameTable", "CreateNamespace", "DropNamespace",
-    "CreateFunction", "DropFunction", "AddColumns", "DropColumns", "AlterColumns",
-    "RenameColumn", "AlterViewAs", "AlterViewSchemaBinding", "CacheTable",
-    "UncacheTable", "RefreshTable")
-
-  private val dmlNodes = Set(
-    "InsertIntoStatement", "DeleteFromTable", "UpdateTable", "MergeIntoTable",
-    "OverwriteByExpression", "OverwritePartitionsDynamic", "AppendData",
-    "InsertIntoDir")
-
-  private val statementNodes = Set(
-    "SetCommand", "ResetCommand", "SetNamespaceCommand", "SetCatalogCommand",
-    "SetNamespaceProperties", "SetNamespaceLocation")
-
   final case class PlanRejected(kind: String, node: String)
       extends RuntimeException(s"plan contains a $kind node ($node) which is not allowed")
 
-  /** Validation pass over every node of the parsed plan. */
+  /** Validation pass over every node of the parsed plan, its subqueries
+    * and the plans that read-only commands supervise.
+    */
   def verify(plan: LogicalPlan, options: SqlOptions): Unit = {
-    plan.foreach { node =>
-      val name = node.nodeName
-      if (!options.allowDdl && ddlNodes.contains(name)) throw PlanRejected("DDL", name)
-      if (!options.allowDml && dmlNodes.contains(name)) throw PlanRejected("DML", name)
-      if (!options.allowStatements && statementNodes.contains(name))
-        throw PlanRejected("statement", name)
+    val allowed = Map(
+      "DDL" -> options.allowDdl, "DML" -> options.allowDml, "statement" -> options.allowStatements)
+    plan.foreachWithSubqueries { node =>
+      classes(node).find(!allowed(_)).foreach(kind => throw PlanRejected(kind, node.nodeName))
+      node match {
+        case s: SupervisingCommand => s.withTransformedSupervisedPlan { p => verify(p, options); p }
+        case _ => ()
+      }
     }
+  }
+
+  /** The option classes a node needs; empty for queries and read-only commands. */
+  private def classes(node: LogicalPlan): Seq[String] = node match {
+    case _: UnresolvedExecuteImmediate | _: CompoundPlanStatement => Seq("DDL", "DML", "statement")
+    case _: InsertIntoStatement | _: V2WriteCommand | _: RowLevelWrite | _: DeleteFromTable |
+        _: UpdateTable | _: MergeIntoTable | _: InsertIntoDir | _: TruncateTable |
+        _: TruncatePartition | _: LoadData => Seq("DML")
+    case _: SetCommand | _: ResetCommand | _: SetCatalogAndNamespace | _: SetNamespaceCommand |
+        _: SetCatalogCommand | _: CreateVariable | _: DropVariable | _: SetVariable =>
+      Seq("statement")
+    case _: ShowTables | _: ShowTablesExtended | _: ShowViews | _: ShowFunctions |
+        _: ShowColumns | _: ShowCreateTable | _: ShowTableProperties | _: ShowPartitions |
+        _: ShowTablePartition | _: ShowNamespacesCommand | _: ShowCatalogsCommand |
+        _: ShowCurrentNamespaceCommand | _: DescribeRelation | _: DescribeColumn |
+        _: DescribeFunction | _: DescribeNamespace | _: DescribeQueryCommand |
+        _: ExplainCommand => Seq.empty
+    case _: Command | _: Call => Seq("DDL")
+    case _ => Seq.empty
   }
 }

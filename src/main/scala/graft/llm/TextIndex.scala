@@ -109,15 +109,6 @@ object TextIndex {
     s"""$bpeRounds,
        |${encodeReadout("s2", "bpe_wt")}""".stripMargin
 
-  // the length(w) > 0 guard keeps the two dialects identical on empty
-  // word types: Spark's sequence(1, 0) is the DESCENDING [1, 0] while
-  // DuckDB's range(1, 1) is empty — an ''-token (consecutive spaces in a
-  // future fixture) would otherwise build different symbol tables
-  private val bpeSparkS0 =
-    """s0 AS (SELECT w, c, i AS p, CAST(i AS BIGINT) AS rk, substr(w, i, 1) AS s
-      |       FROM bpe_wt LATERAL VIEW explode(sequence(1, length(w))) t AS i
-      |       WHERE length(w) > 0)""".stripMargin
-
   /** Spark-side round chain over STAGED views. The single-SQL form
     * ([[bpeRound]]'s CTEs inlined) compiled to 346–414-Exchange plans for
     * the three BPE queries (plans/r11, _before captures): each round
@@ -136,6 +127,10 @@ object TextIndex {
   private def bpeStageRounds(s: org.apache.spark.sql.SparkSession): Unit = {
     def cp(df: org.apache.spark.sql.DataFrame) =
       graft.Staging.checkpointStatsReset(df, eager = false)
+    // the length(w) > 0 guard keeps the two dialects identical on empty
+    // word types: Spark's sequence(1, 0) is the DESCENDING [1, 0] while
+    // DuckDB's range(1, 1) is empty — an ''-token (consecutive spaces in a
+    // future fixture) would otherwise build different symbol tables
     cp(s.sql(
       s"""SELECT w, c, i AS p, CAST(i AS BIGINT) AS rk, substr(w, i, 1) AS s
          |FROM bpe_wt LATERAL VIEW explode(sequence(1, length(w))) t AS i

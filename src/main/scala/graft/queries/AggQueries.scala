@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.col
 
 import QuerySpec.{df, sql, sql2}
 

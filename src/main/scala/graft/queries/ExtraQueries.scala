@@ -18,13 +18,18 @@ import QuerySpec.sql
   * Declared gaps kept honest: Avro scan needs the spark-avro connector
   * (absent offline, like substrait-java) — documented, not stubbed.
   */
+/** Buffer of [[ExtraQueries]]' geometric-mean aggregator. Top-level and
+  * public so Spark's generated projections can construct it; a private
+  * nested class compiles only through the interpreted fallback.
+  */
+final case class GeoMeanBuf(sumLn: Double, n: Long)
+
 object ExtraQueries {
 
   /** Geometric mean as a typed Aggregator — the UDAF surface of §2.B.11
     * (the reference delegates create_udaf to the embedding application via
     * the session hook, session.rs:9-12).
     */
-  private case class GeoMeanBuf(sumLn: Double, n: Long)
   private object GeoMean extends Aggregator[Double, GeoMeanBuf, Double] {
     override def zero: GeoMeanBuf = GeoMeanBuf(0.0, 0L)
     override def reduce(b: GeoMeanBuf, x: Double): GeoMeanBuf =

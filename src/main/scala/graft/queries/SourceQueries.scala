@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import QuerySpec.{df, sql}
+import QuerySpec.df
 
 /** Source/sink surface (SURVEY.md §2.B.1): CSV scan with header + type
   * inference (mirrors the reference's `register_csv` of examples/test.csv,

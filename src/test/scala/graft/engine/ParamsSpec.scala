@@ -34,6 +34,12 @@ class ParamsSpec extends AnyFunSuite {
     assert(mapping == Map("gp_3" -> "3"))
   }
 
+  test("a $ inside a nested block comment is not a placeholder; one after it is") {
+    val (rewritten, mapping) = Params.rewrite("SELECT 1 /* a /* b */ $5 */, $6")
+    assert(rewritten == "SELECT 1 /* a /* b */ $5 */, :gp_6")
+    assert(mapping == Map("gp_6" -> "6"))
+  }
+
   test("parameter type inferred from comparison with a column (integration_test.rs:156-170)") {
     val types = parameterTypes("SELECT * FROM users WHERE id = $1")
     assert(types == Seq(("$1", IntegerType)))
@@ -50,6 +56,25 @@ class ParamsSpec extends AnyFunSuite {
     assert(types.toMap.apply("$1") == IntegerType)
     assert(types.toMap.apply("$2") == StringType)
     assert(types.toMap.apply("$3") == LongType)
+  }
+
+  test("IN-list parameters take the type of the tested column") {
+    val types = parameterTypes("SELECT name FROM users WHERE users.id IN ($1, $2)")
+    assert(types == Seq(("$1", IntegerType), ("$2", IntegerType)))
+  }
+
+  test("a parameter inside a scalar subquery takes the type of its column") {
+    val types = parameterTypes(
+      """SELECT name, (SELECT MAX(order_id) FROM orders WHERE amount > $1) AS m
+        |FROM users""".stripMargin)
+    assert(types == Seq(("$1", IntegerType)))
+  }
+
+  test("a qualified column types its parameter by qualifier, not by the first same-named column") {
+    spark.range(3).selectExpr("id").createOrReplaceTempView("t1") // t1.id is BIGINT, users.id INT
+    val types =
+      parameterTypes("SELECT u.name FROM users u JOIN t1 ON u.id = t1.id WHERE t1.id = $1")
+    assert(types == Seq(("$1", LongType)))
   }
 
   test("un-inferable parameter errors like the reference (service.rs:1097-1100)") {

@@ -12,10 +12,27 @@ class SqlGateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.fixtures()
   private def parse(sql: String) = spark.sessionState.sqlParser.parsePlan(sql)
 
+  /** Commands outside the DDL/DML/SET basics, one or more of each class. */
+  private val bypasses = Seq(
+    "ADD JAR /tmp/graft-none.jar",
+    "ADD FILE /tmp/graft-none.txt",
+    "CREATE TEMPORARY FUNCTION evil AS 'graft.None'",
+    "DECLARE VARIABLE graft_v INT",
+    "USE default",
+    "TRUNCATE TABLE t",
+    "LOAD DATA LOCAL INPATH '/tmp/graft-none' INTO TABLE t",
+    "ALTER TABLE t SET TBLPROPERTIES ('k' = 'v')",
+    "CREATE INDEX i ON t (c)",
+    "CALL cat.sys.proc()")
+  private val denyAll = SqlOptions(allowDdl = false, allowDml = false, allowStatements = false)
+
   test("defaults allow queries, DDL and SET") {
     SqlGate.verify(parse("SELECT 1"), SqlOptions())
     SqlGate.verify(parse("CREATE TABLE t(i INT) USING parquet"), SqlOptions())
     SqlGate.verify(parse("SET spark.sql.ansi.enabled=true"), SqlOptions())
+    for (sql <- bypasses ++ Seq("EXECUTE IMMEDIATE 'SELECT 1'", "BEGIN SELECT 1; END",
+        "INSERT INTO t VALUES (1)", "DROP VIEW v"))
+      withClue(sql)(SqlGate.verify(parse(sql), SqlOptions()))
   }
 
   test("allowDdl=false rejects CREATE/DROP but not queries") {
@@ -39,6 +56,33 @@ class SqlGateSpec extends AnyFunSuite {
     intercept[SqlGate.PlanRejected](
       SqlGate.verify(parse("SET spark.sql.ansi.enabled=true"), opts))
     SqlGate.verify(parse("SELECT 1"), opts)
+  }
+
+  test("deny-all rejects every statement class, including commands the gate does not name") {
+    for (sql <- bypasses)
+      withClue(sql)(intercept[SqlGate.PlanRejected](SqlGate.verify(parse(sql), denyAll)))
+  }
+
+  test("allowDdl=false rejects EXECUTE IMMEDIATE and SQL-script bodies, and the view survives") {
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW victim AS SELECT 1 AS x")
+    val opts = SqlOptions(allowDdl = false)
+    for (sql <- Seq("EXECUTE IMMEDIATE 'DROP VIEW victim'", "BEGIN DROP VIEW victim; END"))
+      withClue(sql)(intercept[SqlGate.PlanRejected](Params.plan(spark, sql, options = opts)))
+    assert(spark.catalog.tableExists("victim"))
+  }
+
+  test("allowDdl=false verifies the plan an EXPLAIN supervises") {
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW victim AS SELECT 1 AS x")
+    val opts = SqlOptions(allowDdl = false)
+    for (sql <- Seq("EXPLAIN EXECUTE IMMEDIATE 'DROP VIEW victim'", "EXPLAIN DROP VIEW victim"))
+      withClue(sql)(intercept[SqlGate.PlanRejected](Params.plan(spark, sql, options = opts)))
+    assert(spark.catalog.tableExists("victim"))
+  }
+
+  test("allowDdl=false still allows SHOW, DESCRIBE and EXPLAIN") {
+    val opts = SqlOptions(allowDdl = false)
+    for (sql <- Seq("SHOW TABLES", "DESCRIBE TABLE users", "EXPLAIN SELECT 1"))
+      withClue(sql)(assert(Params.plan(spark, sql, options = opts).df.collect().nonEmpty))
   }
 
   test("plan() returns the analyzed schema without executing") {

@@ -2,13 +2,16 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
-import graft.TestSpark
+import graft.{Sessions, SparkEntry, TestSpark}
 
 /** Content pins for the engine-specific metadata queries the driver can
   * only rows-check (`no_oracle` rows in CORRECTNESS): q_show and
   * q_describe get exact normalized-relation assertions here (round-10
-  * verdict #8), so "returns rows" is backed by "returns THE rows".
+  * verdict #8), so "returns rows" is backed by "returns THE rows". The
+  * typed geometric-mean aggregator behind q_udaf_geomean is pinned to its
+  * SQL formulation with the codegen factory at CODEGEN_ONLY, where a
+  * projection Spark cannot compile throws instead of falling back to the
+  * interpreter.
   */
 class StructureOracleSpec extends AnyFunSuite {
 
@@ -56,5 +59,15 @@ class StructureOracleSpec extends AnyFunSuite {
       "o_orderpriority" -> "string")
     assert(rows.map(r => (r._1, r._2)).toSeq == expected,
       s"DESCRIBE orders mismatch: ${rows.toSeq}")
+  }
+
+  test("q_udaf_geomean returns its rows with the interpreted fallback disabled") {
+    val spark = TestSpark.spark.newSession() // its own views: the fixture replaces orders
+    val spec = ExtraQueries.specs("q_udaf_geomean")
+    val rows = Sessions.withConf(spark, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
+      spec.run(spark, sf).collect().toSeq
+    }
+    assert(rows.nonEmpty)
+    assert(rows == spark.sql(spec.oracle.get).collect().toSeq)
   }
 }

@@ -530,6 +530,12 @@ class FlightSqlServiceSpec extends AnyFunSuite {
     assert(result.rows == Seq(Seq(1)))
   }
 
+  test("a $ inside a nested block comment is not a placeholder at GetFlightInfo") {
+    val info = service.getFlightInfoStatement("SELECT 1 /* a /* b */ $5 */ AS x")
+    assert(ArrowCodec.decodeSchema(info.schemaBytes).getFields.get(0).getName == "x")
+    assert(ArrowCodec.decode(service.doGet(info.ticket).toBytes).rows == Seq(Seq(1)))
+  }
+
   test("bound handle: the GetFlightInfo schema is the schema frame DoGet streams") {
     val sql = "SELECT id + $1 AS v, id + $1 FROM users WHERE id = $1"
     val handle = service.doPutPreparedStatementQuery(

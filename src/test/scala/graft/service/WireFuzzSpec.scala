@@ -71,14 +71,57 @@ class WireFuzzSpec extends AnyFunSuite {
     b.take(keep)
   }
 
+  /** Statements that would change the session or its catalog if they ran:
+    * every class the gate knows, commands it does not name, and the forms
+    * that hide an inner statement.
+    */
+  private val hostile = Seq(
+    "ADD JAR /tmp/graft-fuzz.jar", "ADD FILE /tmp/graft-fuzz.txt",
+    "CREATE TEMPORARY FUNCTION graft_evil AS 'graft.None'",
+    "DECLARE VARIABLE graft_v INT", "SET VAR graft_v = 1", "USE default",
+    "TRUNCATE TABLE region", "LOAD DATA LOCAL INPATH '/tmp/graft-fuzz' INTO TABLE region",
+    "ALTER TABLE region SET TBLPROPERTIES ('k' = 'v')", "CREATE INDEX i ON region (r_name)",
+    "CALL cat.sys.proc()", "DROP VIEW region",
+    "CREATE OR REPLACE TEMPORARY VIEW region AS SELECT 1 AS x",
+    "SET spark.sql.ansi.enabled = false", "RESET", "INSERT INTO region VALUES (9, 'X', 'y')",
+    "EXECUTE IMMEDIATE 'DROP VIEW region'", "BEGIN DROP VIEW region; END",
+    "EXPLAIN EXECUTE IMMEDIATE 'DROP VIEW nation'")
+
+  /** A hostile statement with random letter case and whitespace, run as
+    * is, inside a string literal, or behind a line or block comment.
+    */
+  private val sqlText: Gen[String] = for {
+    stmt <- Gen.oneOf(hostile)
+    upper <- Gen.listOfN(stmt.length, Arbitrary.arbitrary[Boolean])
+    spaces <- Gen.listOfN(stmt.length, Gen.oneOf(" ", "  ", "\t", "\n", "\r\n", " /* c */ "))
+    wrap <- Gen.oneOf(Seq[String => String](
+      t => t, t => s"SELECT '${t.replace("'", "\\'")}' AS s",
+      t => s"SELECT 1 AS x -- $t", t => s"SELECT 1 AS x /* $t */"))
+  } yield wrap(stmt.indices.map { i =>
+    val c = stmt(i)
+    if (c == ' ') spaces(i) else if (upper(i)) c.toUpper.toString else c.toLower.toString
+  }.mkString)
+
+  /** What a statement that got past the gate could leave behind. */
+  private def sessionState(): Seq[Any] = Seq(
+    spark.catalog.listTables().collect().map(_.name).toSet,
+    spark.conf.getAll.filter(_._1.startsWith("spark.sql.")),
+    spark.sessionState.catalogManager.tempVariableManager.isEmpty,
+    spark.sessionState.functionRegistry.listFunction().toSet)
+
   /** Runs `call` on every generated input; fails on any non-`Status` throw. */
-  private def fuzz(inputs: Gen[Array[Byte]], cases: Int)(call: Array[Byte] => Any): Unit = {
-    val prop = Prop.forAllNoShrink(inputs) { bytes =>
+  private def fuzz[A](inputs: Gen[A], cases: Int)(call: A => Any): Unit = {
+    val prop = Prop.forAllNoShrink(inputs) { input =>
       val escaped =
-        try { call(bytes); None }
+        try { call(input); None }
         catch { case _: Status => None; case t: Throwable => Some(t) }
       escaped.fold(Prop.passed) { t =>
-        Prop.falsified :| s"$t from ${bytes.length} bytes ${bytes.take(64).map("%02x".format(_)).mkString}"
+        val shown = input match {
+          case bytes: Array[Byte] =>
+            s"${bytes.length} bytes ${bytes.take(64).map("%02x".format(_)).mkString}"
+          case other => other.toString
+        }
+        Prop.falsified :| s"$t from $shown"
       }
     }
     val result = Test.check(
@@ -109,5 +152,13 @@ class WireFuzzSpec extends AnyFunSuite {
 
   test("doPutPreparedStatementUpdate: junk and mutated handles get a Status") {
     fuzz(Gen.oneOf(junk, mutant(handles)), 200)(service.doPutPreparedStatementUpdate(_))
+  }
+
+  test("SQL text: hostile statements and their variants get a Status and change no session state") {
+    val before = sessionState()
+    fuzz(sqlText, 150)(service.getFlightInfoStatement(_))
+    fuzz(sqlText, 150)(service.createPreparedStatement(_))
+    fuzz(sqlText, 150)(sql => service.doPutPreparedStatementUpdate(QueryHandle(sql, None).encode))
+    assert(sessionState() == before)
   }
 }
