@@ -72,5 +72,5 @@ object SparkEntry {
     * records a rows-only check).
     */
   def oracleSql: Map[String, String] =
-    specs.collect { case (k, QuerySpec(_, Some(o))) => k -> o }
+    specs.collect { case (k, QuerySpec(_, Some(o), _)) => k -> o }
 }

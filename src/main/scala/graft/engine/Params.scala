@@ -159,8 +159,9 @@ object Params {
         Named(entries.map(e => e._1 -> e._3).toMap))
   }
 
-  /** A planned SQL text: the analyzed, unexecuted DataFrame and the type
-    * of each placeholder that was filled with a typed NULL, by `$name`.
+  /** A planned SQL text: the analyzed, unexecuted DataFrame (a command
+    * too runs only when its stream is pulled) and the type of each
+    * placeholder that was filled with a typed NULL, by `$name`.
     */
   final case class Planned(df: DataFrame, parameterTypes: Seq[(String, DataType)])
 

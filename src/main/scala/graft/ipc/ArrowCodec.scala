@@ -66,8 +66,8 @@ object ArrowCodec {
 
   /** Lazily encode a DataFrame as an Arrow IPC stream: the schema frame
     * first, then one frame per record batch as the caller pulls it, then
-    * the end-of-stream marker. Nothing executes until the first batch is
-    * pulled.
+    * the end-of-stream marker. Nothing executes, a command included, until
+    * the first batch is pulled.
     */
   def encodeStream(
       df: DataFrame,

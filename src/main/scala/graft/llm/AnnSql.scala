@@ -65,6 +65,9 @@ object AnnSql {
   private def sparkNorm(a: String): String =
     s"SQRT(aggregate($a, CAST(0.0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
+  /** Cosine through the native `graft_cosine` expression. */
+  private def graftCos(a: String, b: String): String = s"graft_cosine($a, $b)"
+
   private[llm] def sparkCos(a: String, b: String): String =
     s"${sparkDot(a, b)} / (${sparkNorm(a)} * ${sparkNorm(b)})"
 
@@ -137,20 +140,19 @@ object AnnSql {
   // ---- queries ----
 
   /** Brute-force cosine top-k for the query subset (vec_id % 50 = 0). */
-  def bruteTopKSpark(k: Int): String =
-    s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 50 = 0),
-       |sims AS (SELECT qid, c.vec_id AS cid, ${sparkCos("qe", "c.embedding")} AS cos
-       |         FROM q JOIN embeddings c ON c.vec_id != qid)
-       |SELECT qid, cid, ROUND(cos, 6) AS cos FROM (
-       |  SELECT qid, cid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
-       |  FROM sims) t
-       |WHERE rn <= $k ORDER BY qid, cid""".stripMargin
+  def bruteTopKSpark(k: Int): String = bruteTopKText(sparkCos, k)
 
-  def bruteTopKDuck(k: Int): String =
+  def bruteTopKDuck(k: Int): String = bruteTopKText(duckCos, k)
+
+  private def bruteTopKText(cos: (String, String) => String, k: Int): String =
     s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 50 = 0),
-       |sims AS (SELECT qid, c.vec_id AS cid, ${duckCos("qe", "c.embedding")} AS cos
+       |sims AS (SELECT qid, c.vec_id AS cid, ${cos("qe", "c.embedding")} AS cos
        |         FROM q JOIN embeddings c ON c.vec_id != qid)
-       |SELECT qid, cid, ROUND(cos, 6) AS cos FROM (
+       |${topKOfSims(k)}""".stripMargin
+
+  /** The final select of a top-k query: each qid's k best `sims` by cosine. */
+  private def topKOfSims(k: Int): String =
+    s"""SELECT qid, cid, ROUND(cos, 6) AS cos FROM (
        |  SELECT qid, cid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
        |  FROM sims) t
        |WHERE rn <= $k ORDER BY qid, cid""".stripMargin
@@ -359,49 +361,37 @@ object AnnSql {
     * A production build would replace the deterministic centroid pick
     * with k-means iterations of this same assignment join.
     */
-  def ivfTopKSpark(k: Int, nprobe: Int = 2): String =
-    s"""WITH st AS (SELECT CAST(CEIL(CAST(COUNT(*) AS DOUBLE) / CEIL(SQRT(CAST(COUNT(*) AS DOUBLE)))) AS BIGINT) AS stride FROM embeddings),
-       |c AS (SELECT vec_id AS cent_id, embedding AS ce FROM embeddings
-       |      WHERE vec_id % (SELECT stride FROM st) = 0),
-       |asn AS (SELECT vec_id, embedding, cent_id FROM (
-       |  SELECT e.vec_id, e.embedding, c.cent_id,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |           ORDER BY graft_cosine(e.embedding, c.ce) DESC, c.cent_id) AS rn
-       |  FROM embeddings e CROSS JOIN c) t WHERE rn = 1),
-       |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 50 = 0),
-       |qp AS (SELECT qid, qe, cent_id FROM (
-       |  SELECT q.qid, q.qe, c.cent_id,
-       |         row_number() OVER (PARTITION BY q.qid
-       |           ORDER BY graft_cosine(q.qe, c.ce) DESC, c.cent_id) AS rn
-       |  FROM q CROSS JOIN c) t WHERE rn <= $nprobe),
-       |sims AS (SELECT qp.qid, a.vec_id AS cid, graft_cosine(qp.qe, a.embedding) AS cos
-       |         FROM qp JOIN asn a ON a.cent_id = qp.cent_id AND a.vec_id != qp.qid)
-       |SELECT qid, cid, ROUND(cos, 6) AS cos FROM (
-       |  SELECT qid, cid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
-       |  FROM sims) t
-       |WHERE rn <= $k ORDER BY qid, cid""".stripMargin
+  def ivfTopKSpark(k: Int, nprobe: Int = 2): String = ivfTopKText(graftCos, k, nprobe)
 
-  def ivfTopKDuck(k: Int, nprobe: Int = 2): String =
+  def ivfTopKDuck(k: Int, nprobe: Int = 2): String = ivfTopKText(duckCos, k, nprobe)
+
+  private def ivfTopKText(cos: (String, String) => String, k: Int, nprobe: Int): String =
+    s"""${ivfSimsCtes(cos, nprobe)}
+       |${topKOfSims(k)}""".stripMargin
+
+  /** The flat IVF index and its probe, as CTEs: `st` (centroid stride),
+    * `c` (every stride-th vector a centroid: cent_id, ce), `asn` (each
+    * vector's nearest centroid), `q` (the vec_id % 50 = 0 query sample),
+    * `qp` (each query's `nprobe` nearest lists) and `sims` (qid, cid, cos
+    * over the probed lists' vectors).
+    */
+  private def ivfSimsCtes(cos: (String, String) => String, nprobe: Int): String =
     s"""WITH st AS (SELECT CAST(CEIL(CAST(COUNT(*) AS DOUBLE) / CEIL(SQRT(CAST(COUNT(*) AS DOUBLE)))) AS BIGINT) AS stride FROM embeddings),
        |c AS (SELECT vec_id AS cent_id, embedding AS ce FROM embeddings
        |      WHERE vec_id % (SELECT stride FROM st) = 0),
        |asn AS (SELECT vec_id, embedding, cent_id FROM (
        |  SELECT e.vec_id, e.embedding, c.cent_id,
        |         row_number() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cent_id) AS rn
+       |           ORDER BY ${cos("e.embedding", "c.ce")} DESC, c.cent_id) AS rn
        |  FROM embeddings e CROSS JOIN c) t WHERE rn = 1),
        |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 50 = 0),
        |qp AS (SELECT qid, qe, cent_id FROM (
        |  SELECT q.qid, q.qe, c.cent_id,
        |         row_number() OVER (PARTITION BY q.qid
-       |           ORDER BY ${duckCos("q.qe", "c.ce")} DESC, c.cent_id) AS rn
+       |           ORDER BY ${cos("q.qe", "c.ce")} DESC, c.cent_id) AS rn
        |  FROM q CROSS JOIN c) t WHERE rn <= $nprobe),
-       |sims AS (SELECT qp.qid, a.vec_id AS cid, ${duckCos("qp.qe", "a.embedding")} AS cos
-       |         FROM qp JOIN asn a ON a.cent_id = qp.cent_id AND a.vec_id != qp.qid)
-       |SELECT qid, cid, ROUND(cos, 6) AS cos FROM (
-       |  SELECT qid, cid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
-       |  FROM sims) t
-       |WHERE rn <= $k ORDER BY qid, cid""".stripMargin
+       |sims AS (SELECT qp.qid, a.vec_id AS cid, ${cos("qp.qe", "a.embedding")} AS cos
+       |         FROM qp JOIN asn a ON a.cent_id = qp.cent_id AND a.vec_id != qp.qid)""".stripMargin
 
   /** IVF recall-vs-nprobe curve — the tuning report every ANN deployment
     * reads before fixing its probe budget: recall@3 of the flat IVF index
@@ -424,70 +414,35 @@ object AnnSql {
     * recall-evaluation protocol (you never brute-force the full corpus).
     */
   def recallCurveSpark: String =
-    s"""WITH st AS (SELECT CAST(CEIL(CAST(COUNT(*) AS DOUBLE) / CEIL(SQRT(CAST(COUNT(*) AS DOUBLE)))) AS BIGINT) AS stride FROM embeddings),
-       |c AS (SELECT vec_id AS cent_id, embedding AS ce FROM embeddings
-       |      WHERE vec_id % (SELECT stride FROM st) = 0),
-       |asn AS (SELECT vec_id, embedding, cent_id FROM (
-       |  SELECT e.vec_id, e.embedding, c.cent_id,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |           ORDER BY graft_cosine(e.embedding, c.ce) DESC, c.cent_id) AS rn
-       |  FROM embeddings e CROSS JOIN c) t WHERE rn = 1),
-       |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 50 = 0),
-       |qp AS (SELECT qid, qe, cent_id, rn AS probe_rank FROM (
-       |  SELECT q.qid, q.qe, c.cent_id,
-       |         row_number() OVER (PARTITION BY q.qid
-       |           ORDER BY graft_cosine(q.qe, c.ce) DESC, c.cent_id) AS rn
-       |  FROM q CROSS JOIN c) t WHERE rn <= 4),
-       |sims AS (SELECT qp.qid, qp.probe_rank, a.vec_id AS cid,
-       |                graft_cosine(qp.qe, a.embedding) AS cos
-       |         FROM qp JOIN asn a ON a.cent_id = qp.cent_id AND a.vec_id != qp.qid),
-       |lv AS (SELECT explode(array(1, 2, 4)) AS nprobe),
-       |topk AS (SELECT nprobe, qid, cid FROM (
-       |  SELECT lv.nprobe, s.qid, s.cid,
-       |         row_number() OVER (PARTITION BY lv.nprobe, s.qid
-       |           ORDER BY s.cos DESC, s.cid) AS rn
-       |  FROM sims s JOIN lv ON s.probe_rank <= lv.nprobe) t WHERE rn <= 3),
-       |bs AS (SELECT qid, c2.vec_id AS cid, graft_cosine(qe, c2.embedding) AS cos
-       |       FROM q JOIN embeddings c2 ON c2.vec_id != qid),
-       |brute AS (SELECT qid, cid FROM (
-       |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
-       |  FROM bs) t WHERE rn <= 3),
-       |hits AS (SELECT t.nprobe, COUNT(*) AS n_hits
-       |         FROM topk t JOIN brute b ON t.qid = b.qid AND t.cid = b.cid
-       |         GROUP BY t.nprobe),
-       |nq AS (SELECT COUNT(*) AS n FROM q)
-       |SELECT CAST(lv.nprobe AS INT) AS nprobe,
-       |       CAST(nq.n * 3 AS BIGINT) AS n_possible,
-       |       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       |       CAST((COALESCE(h.n_hits, 0) * 10000) DIV (nq.n * 3) AS BIGINT) AS recall_bp
-       |FROM lv LEFT JOIN hits h ON lv.nprobe = h.nprobe CROSS JOIN nq
-       |ORDER BY nprobe""".stripMargin
+    recallCurveText(graftCos, "explode(array(1, 2, 4))", "DIV")
 
-  def recallCurveDuck: String =
+  def recallCurveDuck: String = recallCurveText(duckCos, "unnest([1, 2, 4])", "//")
+
+  private def recallCurveText(cos: (String, String) => String, levels: String, intDiv: String): String =
     s"""WITH st AS (SELECT CAST(CEIL(CAST(COUNT(*) AS DOUBLE) / CEIL(SQRT(CAST(COUNT(*) AS DOUBLE)))) AS BIGINT) AS stride FROM embeddings),
        |c AS (SELECT vec_id AS cent_id, embedding AS ce FROM embeddings
        |      WHERE vec_id % (SELECT stride FROM st) = 0),
        |asn AS (SELECT vec_id, embedding, cent_id FROM (
        |  SELECT e.vec_id, e.embedding, c.cent_id,
        |         row_number() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cent_id) AS rn
+       |           ORDER BY ${cos("e.embedding", "c.ce")} DESC, c.cent_id) AS rn
        |  FROM embeddings e CROSS JOIN c) t WHERE rn = 1),
        |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 50 = 0),
        |qp AS (SELECT qid, qe, cent_id, rn AS probe_rank FROM (
        |  SELECT q.qid, q.qe, c.cent_id,
        |         row_number() OVER (PARTITION BY q.qid
-       |           ORDER BY ${duckCos("q.qe", "c.ce")} DESC, c.cent_id) AS rn
+       |           ORDER BY ${cos("q.qe", "c.ce")} DESC, c.cent_id) AS rn
        |  FROM q CROSS JOIN c) t WHERE rn <= 4),
        |sims AS (SELECT qp.qid, qp.probe_rank, a.vec_id AS cid,
-       |                ${duckCos("qp.qe", "a.embedding")} AS cos
+       |                ${cos("qp.qe", "a.embedding")} AS cos
        |         FROM qp JOIN asn a ON a.cent_id = qp.cent_id AND a.vec_id != qp.qid),
-       |lv AS (SELECT unnest([1, 2, 4]) AS nprobe),
+       |lv AS (SELECT $levels AS nprobe),
        |topk AS (SELECT nprobe, qid, cid FROM (
        |  SELECT lv.nprobe, s.qid, s.cid,
        |         row_number() OVER (PARTITION BY lv.nprobe, s.qid
        |           ORDER BY s.cos DESC, s.cid) AS rn
        |  FROM sims s JOIN lv ON s.probe_rank <= lv.nprobe) t WHERE rn <= 3),
-       |bs AS (SELECT qid, c2.vec_id AS cid, ${duckCos("qe", "c2.embedding")} AS cos
+       |bs AS (SELECT qid, c2.vec_id AS cid, ${cos("qe", "c2.embedding")} AS cos
        |       FROM q JOIN embeddings c2 ON c2.vec_id != qid),
        |brute AS (SELECT qid, cid FROM (
        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
@@ -499,7 +454,7 @@ object AnnSql {
        |SELECT CAST(lv.nprobe AS INT) AS nprobe,
        |       CAST(nq.n * 3 AS BIGINT) AS n_possible,
        |       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       |       CAST((COALESCE(h.n_hits, 0) * 10000) // (nq.n * 3) AS BIGINT) AS recall_bp
+       |       CAST((COALESCE(h.n_hits, 0) * 10000) $intDiv (nq.n * 3) AS BIGINT) AS recall_bp
        |FROM lv LEFT JOIN hits h ON lv.nprobe = h.nprobe CROSS JOIN nq
        |ORDER BY nprobe""".stripMargin
 
@@ -524,22 +479,7 @@ object AnnSql {
     */
   private def ndcgText(cos: (String, String) => String, ranksSel: String,
                        intDiv: String, k: NeutralMath.KernelSplice): String =
-    s"""WITH st AS (SELECT CAST(CEIL(CAST(COUNT(*) AS DOUBLE) / CEIL(SQRT(CAST(COUNT(*) AS DOUBLE)))) AS BIGINT) AS stride FROM embeddings),
-       |c AS (SELECT vec_id AS cent_id, embedding AS ce FROM embeddings
-       |      WHERE vec_id % (SELECT stride FROM st) = 0),
-       |asn AS (SELECT vec_id, embedding, cent_id FROM (
-       |  SELECT e.vec_id, e.embedding, c.cent_id,
-       |         row_number() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${cos("e.embedding", "c.ce")} DESC, c.cent_id) AS rn
-       |  FROM embeddings e CROSS JOIN c) t WHERE rn = 1),
-       |q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 50 = 0),
-       |qp AS (SELECT qid, qe, cent_id FROM (
-       |  SELECT q.qid, q.qe, c.cent_id,
-       |         row_number() OVER (PARTITION BY q.qid
-       |           ORDER BY ${cos("q.qe", "c.ce")} DESC, c.cent_id) AS rn
-       |  FROM q CROSS JOIN c) t WHERE rn <= 2),
-       |sims AS (SELECT qp.qid, a.vec_id AS cid, ${cos("qp.qe", "a.embedding")} AS cos
-       |         FROM qp JOIN asn a ON a.cent_id = qp.cent_id AND a.vec_id != qp.qid),
+    s"""${ivfSimsCtes(cos, 2)},
        |ivf10 AS (SELECT qid, cid, rn FROM (
        |  SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
        |  FROM sims) t WHERE rn <= 10),
@@ -564,8 +504,7 @@ object AnnSql {
        |ORDER BY q.qid""".stripMargin
 
   def ndcgSpark: String = ndcgText(
-    (a, b) => s"graft_cosine($a, $b)",
-    "SELECT explode(sequence(1, 10)) AS r", "DIV", NeutralMath.SparkKernel)
+    graftCos, "SELECT explode(sequence(1, 10)) AS r", "DIV", NeutralMath.SparkKernel)
 
   def ndcgDuck: String = ndcgText(
     duckCos, "SELECT unnest(range(1, 11)) AS r", "//", NeutralMath.OracleKernel)
@@ -656,7 +595,7 @@ object AnnSql {
     * nprobe·N/nlist candidates per query.
     */
   def ivfHierTopKSpark(k: Int, nprobe: Int = 3, p1: Int = 2): String =
-    ivfHierSql((a, b) => s"graft_cosine($a, $b)", k, nprobe, p1)
+    ivfHierSql(graftCos, k, nprobe, p1)
 
   def ivfHierTopKDuck(k: Int, nprobe: Int = 3, p1: Int = 2): String =
     ivfHierSql(duckCos, k, nprobe, p1)
@@ -703,7 +642,7 @@ object AnnSql {
        |       FROM al GROUP BY cent_id, label)""".stripMargin
 
   private[llm] def purityContingencySpark: String =
-    s"""WITH ${purityCtCtes((a, b) => s"graft_cosine($a, $b)", 2)}
+    s"""WITH ${purityCtCtes(graftCos, 2)}
        |SELECT cent_id, label, n_cl FROM ct ORDER BY cent_id, label""".stripMargin
 
   /** Validity readout over a contingency relation `ct(cent_id, label,
@@ -768,7 +707,7 @@ object AnnSql {
   def purityNmiSparkStaged(
       s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
     graft.Staging.checkpointStatsReset(
-      s.sql(s"""WITH ${purityCtCtes((a, b) => s"graft_cosine($a, $b)", 2)}
+      s.sql(s"""WITH ${purityCtCtes(graftCos, 2)}
                |SELECT cent_id, label, n_cl FROM ct""".stripMargin),
       eager = false)
       .createOrReplaceTempView("graft_purity_ct")
@@ -861,7 +800,7 @@ object AnnSql {
     * cell and that nlist1 + max_evals undercuts the flat design's nlist.
     */
   def ivfHierBoundSpark(p1: Int = 2): String =
-    s"""WITH ${hierAsnCtes("embeddings", "embedding", (a, b) => s"graft_cosine($a, $b)", desc = true, p1)},
+    s"""WITH ${hierAsnCtes("embeddings", "embedding", graftCos, desc = true, p1)},
        |evals AS (SELECT v.vec_id, COUNT(*) AS n_evals
        |          FROM v1 v JOIN a21 a ON v.c1_id = a.c1_id GROUP BY v.vec_id),
        |sizes AS (SELECT c1_id, COUNT(*) AS cell FROM a21 GROUP BY c1_id)
@@ -899,7 +838,7 @@ object AnnSql {
 
   /** Spark dialect (codegen'd graft_cosine) and DuckDB mirror. */
   private[llm] def hierSingleQuerySpark(qid: Long, nprobe: Int = 3, p1: Int = 2): String =
-    hierSingleQueryCtes((a, b) => s"graft_cosine($a, $b)", qid, nprobe, p1)
+    hierSingleQueryCtes(graftCos, qid, nprobe, p1)
 
   private[llm] def hierSingleQueryDuck(qid: Long, nprobe: Int = 3, p1: Int = 2): String =
     hierSingleQueryCtes(duckCos, qid, nprobe, p1)
@@ -922,8 +861,7 @@ object AnnSql {
   private[graft] def stageHierIndex(
       s: org.apache.spark.sql.SparkSession, d: String, p1: Int = 2): Unit = {
     graft.queries.Tables.registerAll(s, d)
-    val chain = hierAsnCtes(
-      "embeddings", "embedding", (a, b) => s"graft_cosine($a, $b)", desc = true, p1)
+    val chain = hierAsnCtes("embeddings", "embedding", graftCos, desc = true, p1)
     hierIndex(s, d) {
       // unreferenced CTEs are pruned, so the two small extracts never run
       // the N-sized v1 window — only the asn build pays it, once
@@ -1643,7 +1581,7 @@ object AnnSql {
     // join is against the N^(1/4)-row cell table; centroid scoring and the
     // within-cluster pair join are hash equi-joins — PlanAuditSpec pins it.)
 
-  def semDedupSpark: String = semDedupSql((a, b) => s"graft_cosine($a, $b)")
+  def semDedupSpark: String = semDedupSql(graftCos)
   def semDedupDuck: String = semDedupSql(duckCos)
 
   /** Coreset / prototype selection: the m most-central members of every
@@ -1667,7 +1605,7 @@ object AnnSql {
        |SELECT cent_id, CAST(rank AS INT) AS rank, vec_id, ROUND(ccos, 6) AS cent_cos
        |FROM r WHERE rank <= $m ORDER BY cent_id, rank""".stripMargin
 
-  def coresetSpark(m: Int): String = coresetSql((a, b) => s"graft_cosine($a, $b)", m)
+  def coresetSpark(m: Int): String = coresetSql(graftCos, m)
   def coresetDuck(m: Int): String = coresetSql(duckCos, m)
 
   /** IVF index MAINTENANCE — hot-list split proposal: as a corpus grows
@@ -1716,7 +1654,7 @@ object AnnSql {
        |       CAST(SUM(side) AS BIGINT) AS n1, CAST(SUM(1 - side) AS BIGINT) AS n2
        |FROM sp GROUP BY cent_id ORDER BY cent_id""".stripMargin
 
-  def listRebalanceSpark: String = listRebalanceSql((a, b) => s"graft_cosine($a, $b)")
+  def listRebalanceSpark: String = listRebalanceSql(graftCos)
   def listRebalanceDuck: String = listRebalanceSql(duckCos)
 
   /** Near-duplicate pairs by cosine ≥ threshold. Blocking key = (label,

@@ -365,11 +365,7 @@ object LlmQueries {
 
     // Exact dedup: one hash-groupBy (map-side combined); representative =
     // min doc_id per content hash.
-    "q_dedup_exact" -> sql2(
-      """SELECT md5(lower(trim(text))) AS content_hash, MIN(doc_id) AS keep_id,
-        |COUNT(*) AS n_copies
-        |FROM documents GROUP BY md5(lower(trim(text)))
-        |ORDER BY keep_id""".stripMargin,
+    "q_dedup_exact" -> sql(
       """SELECT md5(lower(trim(text))) AS content_hash, MIN(doc_id) AS keep_id,
         |COUNT(*) AS n_copies
         |FROM documents GROUP BY md5(lower(trim(text)))

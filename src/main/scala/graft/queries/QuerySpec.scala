@@ -7,10 +7,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * datafusion-flight-sql-server/src/service.rs:171 — or a DataFrame program
   * where SQL can't express the operator) plus the DuckDB-equivalent oracle
   * SQL (`None` → the driver records a weaker rows-only check).
+  * `text` is the Spark SQL a SQL-text spec runs (`None` for a DataFrame
+  * program).
   */
 final case class QuerySpec(
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    text: Option[String] = None)
 
 object QuerySpec {
 
@@ -18,11 +21,11 @@ object QuerySpec {
     * registration of the fixture tables) and as the DuckDB oracle.
     */
   def sql(text: String): QuerySpec =
-    QuerySpec((s, d) => { Tables.registerAll(s, d); s.sql(text) }, Some(text))
+    QuerySpec((s, d) => { Tables.registerAll(s, d); s.sql(text) }, Some(text), Some(text))
 
   /** SQL-text query with dialect differences between Spark SQL and DuckDB. */
   def sql2(spark: String, duck: String): QuerySpec =
-    QuerySpec((s, d) => { Tables.registerAll(s, d); s.sql(spark) }, Some(duck))
+    QuerySpec((s, d) => { Tables.registerAll(s, d); s.sql(spark) }, Some(duck), Some(spark))
 
   /** DataFrame-form program (operator not expressible as a single SQL text)
     * with a DuckDB oracle.

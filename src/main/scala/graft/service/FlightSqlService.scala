@@ -1,7 +1,5 @@
 package graft.service
 
-import org.apache.arrow.vector.types.pojo.{Schema => ArrowSchema}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.SparkArrowBridge
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -85,22 +83,19 @@ class FlightSqlService(
         throw Status.internal(s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
 
-  /** Analyzed result schema without execution, with optional table_name
-    * field metadata (A10 + A23, service.rs:313-347 / 1044-1083).
+  /** The lazy result stream of a planned DataFrame, with optional
+    * table_name field metadata (A10 + A23, service.rs:313-347 / 1044-1083).
+    * Its `arrowSchema` is the schema FlightInfo and prepare report, known
+    * without execution; the plan runs only when the frames after the
+    * schema frame are pulled.
     */
-  private def schemaForPlan(df: DataFrame): ArrowSchema = {
-    val base = SparkArrowBridge.toArrowSchema(
-      df.schema, df.sparkSession.sessionState.conf.sessionLocalTimeZone)
-    if (!config.schemaWithMetadata) base
-    else ArrowCodec.withFieldMetadata(base, fieldMetadata(df))
-  }
-
-  private def fieldMetadata(df: DataFrame): Seq[Map[String, String]] =
-    if (!config.schemaWithMetadata) Seq.empty
-    else SparkArrowBridge.outputQualifiers(df).map {
-      case (_, Some(q)) => Map("table_name" -> q)
-      case _ => Map.empty[String, String]
-    }
+  private def stream(df: DataFrame): ArrowCodec.EncodedStream =
+    ArrowCodec.encodeStream(df,
+      if (!config.schemaWithMetadata) Seq.empty
+      else SparkArrowBridge.outputQualifiers(df).map {
+        case (_, Some(q)) => Map("table_name" -> q)
+        case _ => Map.empty[String, String]
+      })
 
   // ---- handshake (A5): auth belongs to transport middleware ----
   def doHandshake(): Nothing =
@@ -130,11 +125,13 @@ class FlightSqlService(
     }
 
   /** Schema + the ticket that carries the command back to DoGet, possibly
-    * on another instance; nothing executes (service.rs:313-386).
+    * on another instance (service.rs:313-386). Nothing executes, commands
+    * included: the schema is that of the stream DoGet would pull, whose
+    * first frame is these same bytes.
     */
   private def queryInfo(cmd: QueryCommand, meta: Meta): FlightInfo = wrap {
-    val df = planQuery(provider.session(meta), cmd, typeUnbound = true)
-    FlightInfo(ArrowCodec.encodeSchema(schemaForPlan(df)), CommandTicket(cmd).encode)
+    val served = stream(planQuery(provider.session(meta), cmd, typeUnbound = true))
+    FlightInfo(ArrowCodec.encodeSchema(served.arrowSchema), CommandTicket(cmd).encode)
   }
 
   def getFlightInfoStatement(sql: String, meta: Meta = noMeta): FlightInfo =
@@ -173,9 +170,7 @@ class FlightSqlService(
   def doGet(ticketBytes: Array[Byte], meta: Meta = noMeta): ArrowCodec.EncodedStream = wrap {
     val spark = provider.session(meta)
     CommandTicket.decode(ticketBytes).command match {
-      case cmd: QueryCommand =>
-        val df = planQuery(spark, cmd, typeUnbound = false)
-        ArrowCodec.encodeStream(df, fieldMetadata(df))
+      case cmd: QueryCommand => stream(planQuery(spark, cmd, typeUnbound = false))
       case CommandGetCatalogs() => ArrowCodec.encodeStream(Metadata.catalogs(spark))
       case cmd: CommandGetDbSchemas => ArrowCodec.encodeStream(Metadata.dbSchemas(spark, cmd))
       case cmd: CommandGetTables => ArrowCodec.encodeStream(Metadata.tables(spark, cmd))
@@ -195,7 +190,7 @@ class FlightSqlService(
         StructType(paramFields), spark.sessionState.conf.sessionLocalTimeZone)
       PreparedStatementResult(
         QueryHandle(sql, None).encode,
-        ArrowCodec.encodeSchema(schemaForPlan(planned.df)),
+        ArrowCodec.encodeSchema(stream(planned.df).arrowSchema),
         ArrowCodec.encodeSchema(paramSchema))
     }
 
@@ -237,13 +232,16 @@ class FlightSqlService(
   }
 
   /** DDL/SET arrive via the prepared-update path; row count is always −1
-    * (service.rs:864-875). DoGet-style statement updates stay unimplemented
-    * for parity (A31).
+    * (service.rs:864-875). The statement runs here, where its planned
+    * stream is drained, as DoGet's would be; planning it at prepare ran
+    * nothing. DoGet-style statement updates stay unimplemented for parity
+    * (A31).
     */
   def doPutPreparedStatementUpdate(handleBytes: Array[Byte], meta: Meta = noMeta): Long = wrap {
     val spark = provider.session(meta)
     val handle = QueryHandle.decode(handleBytes)
-    Params.plan(spark, handle.query, handle.parameters, sqlOptions) // commands execute eagerly
+    ArrowCodec.encodeStream(Params.plan(spark, handle.query, handle.parameters, sqlOptions).df)
+      .frames.foreach(_ => ())
     -1L
   }
 

@@ -4,10 +4,12 @@ import org.apache.arrow.memory.BufferAllocator
 import org.apache.arrow.vector.types.pojo.{Schema => ArrowSchema}
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{functions, DataFrame, SparkSession}
+import org.apache.spark.sql.{functions, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.CommandExecutionMode
 import org.apache.spark.sql.execution.arrow.ArrowConverters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.ArrowUtils
@@ -40,7 +42,8 @@ object SparkArrowBridge {
     * (`ArrowConverters.toBatchIterator`, on a child of Spark's shared
     * allocator that the task frees on completion); the driver pulls the
     * encoded partitions lazily, one job each, in partition order — never a
-    * full collect. Physical planning happens on this call.
+    * full collect. Physical planning happens on this call, and so does a
+    * command's side effect: this is where a served plan executes.
     */
   def arrowBatches(df: DataFrame, maxRowsPerBatch: Long): Iterator[Array[Byte]] = {
     val schema = df.schema
@@ -66,9 +69,19 @@ object SparkArrowBridge {
   def literal(spark: SparkSession, value: Any): Expression =
     spark.asInstanceOf[ClassicSparkSession].expression(functions.lit(value))
 
-  /** Wrap an (already parsed/verified) logical plan as a DataFrame —
-    * triggers analysis only; execution stays lazy.
+  /** Wrap an (already parsed/verified) logical plan as an analyzed,
+    * unexecuted DataFrame. `Dataset.ofRows` plans in
+    * `CommandExecutionMode.ALL`, which runs a command (INSERT, DROP VIEW,
+    * SET …) as soon as the Dataset exists; this is the same call in mode
+    * SKIP, so a command runs like a query, when its `executedPlan`
+    * executes in `arrowBatches`.
     */
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    val session = spark.asInstanceOf[ClassicSparkSession]
+    session.withActive {
+      val qe = session.sessionState.executePlan(plan, CommandExecutionMode.SKIP)
+      qe.assertAnalyzed()
+      new ClassicDataset[Row](qe, () => RowEncoder.encoderFor(qe.analyzed.schema))
+    }
+  }
 }

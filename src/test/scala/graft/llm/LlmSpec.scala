@@ -173,7 +173,6 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("perceptron probe training: update rule exact on a separable pair; fixture signal learned") {
-    import org.apache.spark.sql.functions._
     // Micro fixture: two origin-separable vectors along dim 0. Round 1
     // (w = 0) misclassifies both, the averaged update is (+1000·1 +
     // (−1)·(−1000)) / 2 = 1000 on dim 0; rounds 2-3 classify both

@@ -565,4 +565,53 @@ class FlightSqlServiceSpec extends AnyFunSuite {
       service.doGet(CommandTicket(CommandStatementQuery(sql)).encode).toBytes)
     assert(e.code == Status.Internal)
   }
+
+  /** A parquet table `probe_ins(i INT)` in a fresh directory, dropped after. */
+  private def withProbeTable(body: => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("probe_ins_").toUri
+    spark.sql("DROP TABLE IF EXISTS probe_ins")
+    spark.sql(s"CREATE TABLE probe_ins (i INT) USING parquet LOCATION '$dir'")
+    try body finally spark.sql("DROP TABLE IF EXISTS probe_ins")
+  }
+
+  private def probeRows: Long = spark.table("probe_ins").count()
+
+  test("GetFlightInfo of an INSERT inserts nothing; draining its DoGet stream inserts one row") {
+    withProbeTable {
+      val info = service.getFlightInfoStatement("INSERT INTO probe_ins VALUES (1)")
+      assert(probeRows == 0)
+      val stream = service.doGet(info.ticket)
+      assert(probeRows == 0)
+      stream.toBytes
+      assert(probeRows == 1)
+    }
+  }
+
+  test("a DoGet stream of an INSERT pulled no further than its schema frame inserts nothing") {
+    withProbeTable {
+      val info = service.getFlightInfoStatement("INSERT INTO probe_ins VALUES (1)")
+      val frames = service.doGet(info.ticket).frames
+      assert(frames.next().sameElements(info.schemaBytes))
+      assert(probeRows == 0)
+    }
+  }
+
+  test("preparing DROP VIEW leaves the view; the prepared update drops it") {
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW probe_v AS SELECT 1 AS x")
+    try {
+      val created = service.createPreparedStatement("DROP VIEW probe_v")
+      assert(spark.catalog.tableExists("probe_v"))
+      assert(service.doPutPreparedStatementUpdate(created.handle) == -1L)
+      assert(!spark.catalog.tableExists("probe_v"))
+    } finally spark.catalog.dropTempView("probe_v")
+  }
+
+  test("SHOW, DESCRIBE and EXPLAIN stream their rows at DoGet, under the FlightInfo schema") {
+    for (sql <- Seq("SHOW TABLES", "DESCRIBE TABLE users", "EXPLAIN SELECT 1")) withClue(sql) {
+      val info = service.getFlightInfoStatement(sql)
+      val frames = service.doGet(info.ticket).frames.toSeq
+      assert(info.schemaBytes.sameElements(frames.head))
+      assert(ArrowCodec.decode(frames.flatten.toArray).rows.nonEmpty)
+    }
+  }
 }

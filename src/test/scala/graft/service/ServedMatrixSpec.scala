@@ -1,0 +1,30 @@
+package graft.service
+
+import org.apache.spark.sql.graftbridge.UnsafeRows
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{SparkEntry, TestSpark}
+import graft.engine.StaticSessionProvider
+
+/** Every SQL-text spec of the operator matrix, served: its Spark SQL goes
+  * through GetFlightInfo and DoGet at sf0.001, and the decoded stream must
+  * hold `spec.run`'s rows, byte for byte and in order, under the schema
+  * GetFlightInfo reported.
+  */
+class ServedMatrixSpec extends AnyFunSuite {
+
+  private val sf = "/root/testdata/sf0.001"
+  private lazy val spark = TestSpark.spark
+  private lazy val service = new FlightSqlService(new StaticSessionProvider(spark))
+
+  for ((name, spec) <- SparkEntry.specs.toSeq.sortBy(_._1); text <- spec.text)
+    test(s"$name is served with spec.run's rows under the FlightInfo schema") {
+      val expected = UnsafeRows.collected(spec.run(spark, sf)) // registers the tables too
+      val info = service.getFlightInfoStatement(text)
+      val frames = service.doGet(info.ticket).frames.toVector
+      assert(info.schemaBytes.sameElements(frames.head))
+      val served = UnsafeRows.decoded(frames.flatten.toArray)
+      assert(served.size == expected.size)
+      assert(served == expected)
+    }
+}
