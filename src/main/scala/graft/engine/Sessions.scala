@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.BindFilterLiterals
 
 /** Per-request session construction (SURVEY §2.A A2/A28; mirrors
   * SessionStateProvider, datafusion-flight-sql-server/src/session.rs:9-31).
@@ -24,8 +25,10 @@ final class StaticSessionProvider(base: SparkSession) extends SessionProvider {
   // Engine functions are part of the SQL surface every client sees (the
   // config-driven path is graft.plans.GraftSparkSessionExtension via
   // spark.sql.extensions; registering here covers sessions built without
-  // that conf).
+  // that conf), and so is the planner strategy that compiles each served
+  // query shape once.
   graft.functions.GraftFunctions.register(base)
+  BindFilterLiterals.install(base)
 
   override def session(requestMetadata: Map[String, String]): SparkSession = base
 }

@@ -6,10 +6,11 @@ import org.apache.arrow.vector.types.pojo.{Schema => ArrowSchema}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{functions, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.CommandExecutionMode
+import org.apache.spark.sql.execution.{CommandExecutionMode, LocalTableScanExec}
 import org.apache.spark.sql.execution.arrow.ArrowConverters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.ArrowUtils
@@ -38,21 +39,27 @@ object SparkArrowBridge {
     ArrowUtils.rootAllocator.newChildAllocator(name, 0, Long.MaxValue)
 
   /** The query result as serialized Arrow record-batch messages of at most
-    * `maxRowsPerBatch` rows. Each partition is encoded inside its own task
-    * (`ArrowConverters.toBatchIterator`, on a child of Spark's shared
-    * allocator that the task frees on completion); the driver pulls the
-    * encoded partitions lazily, one job each, in partition order — never a
-    * full collect. Physical planning happens on this call, and so does a
-    * command's side effect: this is where a served plan executes.
+    * `maxRowsPerBatch` rows. A local relation (metadata results, a `VALUES`
+    * list) is encoded on the driver, with no Spark job, and drained at
+    * once so its allocator closes (as Spark Connect's
+    * `SparkConnectPlanExecution` does). Otherwise each partition is encoded
+    * inside its own task (`ArrowConverters.toBatchIterator`, on a child of
+    * Spark's shared allocator that the task frees on completion); the
+    * driver pulls the encoded partitions lazily, one job each, in partition
+    * order — never a full collect. Physical planning happens on this call,
+    * and so does a command's side effect: this is where a served plan
+    * executes.
     */
   def arrowBatches(df: DataFrame, maxRowsPerBatch: Long): Iterator[Array[Byte]] = {
     val schema = df.schema
     val timeZoneId = df.sparkSession.sessionState.conf.sessionLocalTimeZone
-    df.asInstanceOf[ClassicDataset[_]].queryExecution.executedPlan.execute()
-      .mapPartitionsInternal(rows => ArrowConverters.toBatchIterator(rows, schema,
-        maxRowsPerBatch, timeZoneId, errorOnDuplicatedFieldNames = false,
-        largeVarTypes = false, TaskContext.get()))
-      .toLocalIterator
+    def encode(rows: Iterator[InternalRow], context: TaskContext) =
+      ArrowConverters.toBatchIterator(rows, schema, maxRowsPerBatch, timeZoneId,
+        errorOnDuplicatedFieldNames = false, largeVarTypes = false, context)
+    df.asInstanceOf[ClassicDataset[_]].queryExecution.executedPlan match {
+      case local: LocalTableScanExec => encode(local.executeCollect().iterator, null).toVector.iterator
+      case plan => plan.execute().mapPartitionsInternal(encode(_, TaskContext.get())).toLocalIterator
+    }
   }
 
   /** Output column name → table qualifier (alias or table name) from the

@@ -145,6 +145,12 @@ class ArrowCodecSpec extends AnyFunSuite {
     // Natural completion.
     assert(ArrowCodec.decode(ArrowCodec.encodeStream(ok).toBytes).rows.size == 10000)
     assert(shared.getAllocatedMemory == start)
+
+    // A local relation, encoded on the driver, abandoned after its batch.
+    val local = ArrowCodec.encodeStream(spark.sql("SELECT * FROM VALUES (1), (2) t(x)")).frames
+    local.next()
+    local.next()
+    assert(shared.getAllocatedMemory == start)
   }
 
   test("junk bytes fail decode cleanly and release their allocator (no leak, no hang)") {

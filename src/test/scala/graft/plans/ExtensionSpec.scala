@@ -1,14 +1,19 @@
 package graft.plans
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.BindFilterLiterals
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.engine.StaticSessionProvider
 
 /** The config-driven extension surface: a session built with
   * `spark.sql.extensions=graft.plans.GraftSparkSessionExtension` has the
-  * graft functions without any imperative registration, and the
-  * canonicalization rule rewrites commutative cosine calls.
+  * graft functions without any imperative registration, the
+  * canonicalization rule rewrites commutative cosine calls, and filter
+  * literals are bound, as they are in a session a `StaticSessionProvider`
+  * wraps.
   */
 class ExtensionSpec extends AnyFunSuite {
 
@@ -93,5 +98,42 @@ class ExtensionSpec extends AnyFunSuite {
       val v2 = s.sql("SELECT graft_cosine(a, b) AS c FROM v2").collect().head.getDouble(0)
       assert(v == v2)
     }
+  }
+
+  private def strategies(s: SparkSession): Int =
+    s.sessionState.planner.strategies.count(_.isInstanceOf[BindFilterLiterals])
+
+  /** Codegen compiles of a lookup with a second, fresh key, after a first. */
+  private def secondLookupCompiles(s: SparkSession, column: String): Long = {
+    def lookup(key: Int) = s.read.parquet("/root/testdata/sf0.001/orders.parquet")
+      .where(s"$column = $key").collect()
+    lookup(1)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    lookup(2)
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  test("the extension's session binds filter literals: a second key compiles nothing") {
+    withExtensionSession { s =>
+      assert(strategies(s) == 1)
+      assert(secondLookupCompiles(s, "o_orderkey") == 0)
+      new StaticSessionProvider(s) // finds the extension's strategy and adds none
+      assert(strategies(s) == 1)
+    }
+  }
+
+  test("a provider-wrapped session binds filter literals: a second key compiles nothing") {
+    val s = TestSpark.spark.newSession()
+    assert(strategies(s) == 0)
+    new StaticSessionProvider(s)
+    assert(secondLookupCompiles(s, "o_custkey") == 0)
+  }
+
+  test("two providers on one session install one strategy") {
+    val s = TestSpark.spark.newSession()
+    new StaticSessionProvider(s)
+    new StaticSessionProvider(s)
+    assert(strategies(s) == 1)
+    assert(s.experimental.extraStrategies.count(_.isInstanceOf[BindFilterLiterals]) == 1)
   }
 }

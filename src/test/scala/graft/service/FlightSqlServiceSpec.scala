@@ -1,5 +1,6 @@
 package graft.service
 
+import org.apache.spark.graftbridge.Jobs
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -362,6 +363,15 @@ class FlightSqlServiceSpec extends AnyFunSuite {
     val result = ArrowCodec.decode(service.doGet(
       service.getFlightInfoTableTypes().ticket).toBytes)
     assert(result.rows.map(_.head) == Seq("BASE TABLE", "VIEW", "TEMPORARY"))
+  }
+
+  test("GetTableTypes and a VALUES query stream their constant rows without a Spark job") {
+    def served(ticket: Array[Byte]) =
+      Jobs.counted(spark.sparkContext)(ArrowCodec.decode(service.doGet(ticket).toBytes).rows)
+    assert(served(service.getFlightInfoTableTypes().ticket) ==
+      (Seq(Seq("BASE TABLE"), Seq("VIEW"), Seq("TEMPORARY")), 0))
+    assert(served(service.getFlightInfoStatement("SELECT * FROM VALUES (1, 'a'), (2, 'b') t(i, s)").ticket) ==
+      (Seq(Seq(1, "a"), Seq(2, "b")), 0))
   }
 
   test("catalogs endpoint lists spark_catalog (service.rs:616-636)") {
