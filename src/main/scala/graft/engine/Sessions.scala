@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.BindFilterLiterals
+import org.apache.spark.sql.graftbridge.GraftStrategies
 
 /** Per-request session construction (SURVEY §2.A A2/A28; mirrors
   * SessionStateProvider, datafusion-flight-sql-server/src/session.rs:9-31).
@@ -25,10 +25,10 @@ final class StaticSessionProvider(base: SparkSession) extends SessionProvider {
   // Engine functions are part of the SQL surface every client sees (the
   // config-driven path is graft.plans.GraftSparkSessionExtension via
   // spark.sql.extensions; registering here covers sessions built without
-  // that conf), and so is the planner strategy that compiles each served
-  // query shape once.
+  // that conf), and so are the planner strategies that compile each served
+  // query shape once and run a small result in one task or none.
   graft.functions.GraftFunctions.register(base)
-  BindFilterLiterals.install(base)
+  GraftStrategies.install(base)
 
   override def session(requestMetadata: Map[String, String]): SparkSession = base
 }

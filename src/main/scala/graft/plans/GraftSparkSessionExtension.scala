@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import org.apache.spark.sql.graftbridge.{BindFilterLiterals, CosineSimilarity}
+import org.apache.spark.sql.graftbridge.{CosineSimilarity, GraftStrategies}
 
 import graft.functions.GraftFunctions
 
@@ -14,7 +14,8 @@ import graft.functions.GraftFunctions
   * `spark.sql.extensions=graft.plans.GraftSparkSessionExtension` and every
   * session gets the graft functions (no imperative
   * `GraftFunctions.register` call needed) plus the engine's optimizer
-  * rules and the planner strategy that binds filter literals. This is the
+  * rules and the planner strategies (filter literals bound, small results
+  * run in one task or none). This is the
   * public, config-driven way to ship Catalyst
   * extensions — the Spark-native analogue of the reference's per-session
   * function-registration hook (examples/bearer_auth_flight_sql.rs:95-114),
@@ -27,7 +28,7 @@ class GraftSparkSessionExtension extends (SparkSessionExtensions => Unit) {
         (new FunctionIdentifier(name), new ExpressionInfo(GraftFunctions.getClass.getName, name), build))
     }
     ext.injectOptimizerRule(_ => CanonicalizeCosine)
-    ext.injectPlannerStrategy(new BindFilterLiterals(_))
+    GraftStrategies.builders.foreach(ext.injectPlannerStrategy)
   }
 }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, In, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.types._
 
 /** A non-null primitive literal whose generated code reads the value from
@@ -39,7 +39,7 @@ case class BoundLiteral(value: Any, dataType: DataType) extends LeafExpression {
   * re-plans the stages above a materialized exchange through the session
   * planner, and a preparation rule never sees those stages.
   */
-final class BindFilterLiterals(session: SparkSession) extends SparkStrategy {
+final class BindFilterLiterals(session: SparkSession) extends GraftStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case _: Filter | Project(_, _: Filter) =>
       // every instance of this strategy is skipped, so a double install cannot recurse
@@ -54,16 +54,6 @@ final class BindFilterLiterals(session: SparkSession) extends SparkStrategy {
 }
 
 object BindFilterLiterals {
-
-  /** Prepends the strategy to the session's extra strategies unless its
-    * planner already has one (a session built with
-    * `graft.plans.GraftSparkSessionExtension`, or an earlier install).
-    */
-  def install(session: SparkSession): Unit = session.experimental.synchronized {
-    if (!session.sessionState.planner.strategies.exists(_.isInstanceOf[BindFilterLiterals]))
-      session.experimental.extraStrategies =
-        new BindFilterLiterals(session) +: session.experimental.extraStrategies
-  }
 
   /** The comparison operands and `IN` list elements of `condition` that are
     * non-null primitive, date or timestamp literals, as [[BoundLiteral]]s.

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.BindFilterLiterals
+import org.apache.spark.sql.graftbridge.{BindFilterLiterals, PlanSmallResults}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -11,9 +11,9 @@ import graft.engine.StaticSessionProvider
 /** The config-driven extension surface: a session built with
   * `spark.sql.extensions=graft.plans.GraftSparkSessionExtension` has the
   * graft functions without any imperative registration, the
-  * canonicalization rule rewrites commutative cosine calls, and filter
-  * literals are bound, as they are in a session a `StaticSessionProvider`
-  * wraps.
+  * canonicalization rule rewrites commutative cosine calls, and graft's
+  * planner strategies are installed once each, as they are in a session a
+  * `StaticSessionProvider` wraps.
   */
 class ExtensionSpec extends AnyFunSuite {
 
@@ -100,8 +100,11 @@ class ExtensionSpec extends AnyFunSuite {
     }
   }
 
-  private def strategies(s: SparkSession): Int =
-    s.sessionState.planner.strategies.count(_.isInstanceOf[BindFilterLiterals])
+  /** The session planner's instances of each graft strategy. */
+  private def strategies(s: SparkSession): (Int, Int) = {
+    val all = s.sessionState.planner.strategies
+    (all.count(_.isInstanceOf[BindFilterLiterals]), all.count(_.isInstanceOf[PlanSmallResults]))
+  }
 
   /** Codegen compiles of a lookup with a second, fresh key, after a first. */
   private def secondLookupCompiles(s: SparkSession, column: String): Long = {
@@ -115,25 +118,26 @@ class ExtensionSpec extends AnyFunSuite {
 
   test("the extension's session binds filter literals: a second key compiles nothing") {
     withExtensionSession { s =>
-      assert(strategies(s) == 1)
+      assert(strategies(s) == ((1, 1)))
       assert(secondLookupCompiles(s, "o_orderkey") == 0)
-      new StaticSessionProvider(s) // finds the extension's strategy and adds none
-      assert(strategies(s) == 1)
+      new StaticSessionProvider(s) // finds the extension's strategies and adds none
+      assert(strategies(s) == ((1, 1)))
     }
   }
 
   test("a provider-wrapped session binds filter literals: a second key compiles nothing") {
     val s = TestSpark.spark.newSession()
-    assert(strategies(s) == 0)
+    assert(strategies(s) == ((0, 0)))
     new StaticSessionProvider(s)
     assert(secondLookupCompiles(s, "o_custkey") == 0)
   }
 
-  test("two providers on one session install one strategy") {
+  test("two providers on one session install one instance of each strategy") {
     val s = TestSpark.spark.newSession()
     new StaticSessionProvider(s)
     new StaticSessionProvider(s)
-    assert(strategies(s) == 1)
-    assert(s.experimental.extraStrategies.count(_.isInstanceOf[BindFilterLiterals]) == 1)
+    assert(strategies(s) == ((1, 1)))
+    assert(s.experimental.extraStrategies.map(_.getClass) ==
+      Seq(classOf[BindFilterLiterals], classOf[PlanSmallResults]))
   }
 }

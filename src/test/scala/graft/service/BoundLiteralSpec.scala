@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.graftbridge.{BoundLiteral, UnsafeRows}
+import org.apache.spark.sql.graftbridge.{BoundLiteral, PlanSmallResults, UnsafeRows}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Sessions, Staging, TestSpark}
@@ -38,7 +38,14 @@ class BoundLiteralSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     s
   }
   private lazy val bound = session()
-  private lazy val unbound = session()
+  /** Plans sorts as `bound` does (its provider installs `PlanSmallResults`
+    * too), so the two sessions differ only in binding.
+    */
+  private lazy val unbound = {
+    val s = session()
+    s.experimental.extraStrategies = Seq(new PlanSmallResults(s))
+    s
+  }
   private lazy val service = new FlightSqlService(new StaticSessionProvider(bound))
 
   private val cases = Seq(

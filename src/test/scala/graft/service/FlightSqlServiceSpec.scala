@@ -372,6 +372,7 @@ class FlightSqlServiceSpec extends AnyFunSuite {
       (Seq(Seq("BASE TABLE"), Seq("VIEW"), Seq("TEMPORARY")), 0))
     assert(served(service.getFlightInfoStatement("SELECT * FROM VALUES (1, 'a'), (2, 'b') t(i, s)").ticket) ==
       (Seq(Seq(1, "a"), Seq(2, "b")), 0))
+    assert(served(service.getFlightInfoStatement("SELECT 1 AS one").ticket) == ((Seq(Seq(1)), 0)))
   }
 
   test("catalogs endpoint lists spark_catalog (service.rs:616-636)") {

@@ -1,6 +1,6 @@
 package graft.service
 
-import org.apache.spark.sql.graftbridge.{BindFilterLiterals, UnsafeRows}
+import org.apache.spark.sql.graftbridge.{GraftStrategy, UnsafeRows}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, TestSpark}
@@ -9,8 +9,9 @@ import graft.engine.StaticSessionProvider
 /** Every SQL-text spec of the operator matrix, served: its Spark SQL goes
   * through GetFlightInfo and DoGet at sf0.001, and the decoded stream must
   * hold `spec.run`'s rows, byte for byte and in order, under the schema
-  * GetFlightInfo reported. `spec.run` plans with no filter literal bound,
-  * so the served rows are checked against an independent plan.
+  * GetFlightInfo reported. `spec.run` plans with no graft planner strategy
+  * (no filter literal bound, every global sort as Spark plans it), so the
+  * served rows are checked against an independent plan.
   */
 class ServedMatrixSpec extends AnyFunSuite {
 
@@ -18,15 +19,15 @@ class ServedMatrixSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val service = new FlightSqlService(new StaticSessionProvider(spark))
 
-  private def unbound[A](body: => A): A = {
+  private def withoutGraftStrategies[A](body: => A): A = {
     val strategies = spark.experimental.extraStrategies
-    spark.experimental.extraStrategies = strategies.filterNot(_.isInstanceOf[BindFilterLiterals])
+    spark.experimental.extraStrategies = strategies.filterNot(_.isInstanceOf[GraftStrategy])
     try body finally spark.experimental.extraStrategies = strategies
   }
 
   for ((name, spec) <- SparkEntry.specs.toSeq.sortBy(_._1); text <- spec.text)
     test(s"$name is served with spec.run's rows under the FlightInfo schema") {
-      val expected = unbound(UnsafeRows.collected(spec.run(spark, sf))) // registers the tables too
+      val expected = withoutGraftStrategies(UnsafeRows.collected(spec.run(spark, sf))) // registers the tables too
       val info = service.getFlightInfoStatement(text)
       val frames = service.doGet(info.ticket).frames.toVector
       assert(info.schemaBytes.sameElements(frames.head))
