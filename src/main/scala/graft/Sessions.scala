@@ -8,8 +8,9 @@ object Sessions {
   /** `SPARK_GRAFT_CPUS` (default 4): the mains' cores and shuffle width. */
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
-  /** The one session [[Bench]], [[Verify]] and [[PlanDump]] run under, so
-    * plans dumped and results verified are the ones the bench times.
+  /** The one session builder: [[Bench]], [[Verify]], [[PlanDump]], the
+    * `graft.examples` mains and the test suites run under it, so plans
+    * dumped and results verified are the ones the bench times.
     */
   def local(cpus: Int = Sessions.cpus): SparkSession = {
     val spark = SparkSession.builder()

@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Sessions
 import graft.llm.AnnSql
 
 /** Runnable walk through the production ANN index lifecycle, composing
@@ -21,14 +20,7 @@ import graft.llm.AnnSql
 object AnnIndexExample {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ann-index-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     graft.queries.Tables.registerAll(spark, sfDir)
 
     println("== 1. sampled k-means training step (bounded Lloyd budget) ==")

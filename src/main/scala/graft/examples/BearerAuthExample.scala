@@ -2,6 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Sessions
 import graft.engine.SessionProvider
 import graft.ipc.ArrowCodec
 import graft.service.{FlightSqlService, Status}
@@ -40,13 +41,7 @@ final class BearerAuthSessionProvider(
 
 object BearerAuthExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bearer-auth-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
 
     val provider = new BearerAuthSessionProvider(
       spark, Map("alice-token" -> "alice", "bob-token" -> "bob"))

@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Sessions
 
 /** End-to-end corpus preparation: the composed pipeline a training-data
   * user runs daily, built ONLY from this library's operators — clean →
@@ -19,14 +20,7 @@ import org.apache.spark.sql.functions._
   */
 object CorpusPrepExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-corpus-prep-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     graft.queries.Tables.registerAll(spark, dir)
 

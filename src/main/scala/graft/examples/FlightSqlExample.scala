@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Sessions
 import graft.engine.StaticSessionProvider
 import graft.ipc.ArrowCodec
 import graft.protocol.Commands.CommandGetTables
@@ -16,14 +15,7 @@ import graft.service.FlightSqlService
   */
 object FlightSqlExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-flight-sql-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
 
     // examples/test.csv fixture shape: foo,bar / a,1 / b,2 / c,3
     val csv = java.nio.file.Files.createTempFile("graft-example", ".csv")

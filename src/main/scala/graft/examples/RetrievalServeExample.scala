@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Runnable walk through the two-stage retrieval serving stack, composing
   * the engine's oracle-checked operators in the order a real deployment
@@ -25,14 +25,7 @@ import org.apache.spark.sql.SparkSession
 object RetrievalServeExample {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-retrieval-serve-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
 
     println("== 1. lexical candidates: BM25 top-20 ==")
     val bm25 = graft.SparkEntry.queries("q_text_bm25")(spark, sfDir).collect()

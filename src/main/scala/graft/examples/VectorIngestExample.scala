@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Sessions
 import graft.streaming.VectorIngest
 
 /** Runnable walk through live vector ingest, composing the streaming side
@@ -22,14 +21,7 @@ import graft.streaming.VectorIngest
 object VectorIngestExample {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-vector-ingest-example")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
 
     println("== 1. index artifacts from the corpus subset ==")
     val idx = VectorIngest.buildIndex(spark, sfDir)

@@ -174,7 +174,7 @@ object MinHashDedup {
 
   def incrementalNearDuplicates(
       newDocs: DataFrame, index: CorpusIndex, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(newDocs.sparkSession)
+    org.apache.spark.sql.graftbridge.GraftSession.install(newDocs.sparkSession)
     val left = banded(newDocs).withColumn("salt",
       explode(array((0 until saltFactor).map(lit): _*)))
     val cands = left.as("a")
@@ -245,7 +245,7 @@ object MinHashDedup {
     * in generic eval at ~7 µs/pair — it was the dominant verify cost).
     */
   def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+    org.apache.spark.sql.graftbridge.GraftSession.install(docs.sparkSession)
     val wordArrays = docs.select(
       col("doc_id"), array_sort(array_distinct(split(col("text"), " "))).as("words"))
     candidatePairs(docs)

@@ -64,7 +64,7 @@ object PrefixJaccard {
     val t = lit(tNum.toDouble / tDen) // same IEEE literal as the SQL oracle's 0.9
     // codegen'd sorted-merge intersection count — size(array_intersect)
     // is a per-row hash-set build in generic eval, ~20x slower here
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+    org.apache.spark.sql.graftbridge.GraftSession.install(docs.sparkSession)
     cand
       .join(broadcast(sets.select(col("doc_id").as("id1"), col("ws").as("ws1"))), "id1")
       .join(broadcast(sets.select(col("doc_id").as("id2"), col("ws").as("ws2"))), "id2")
@@ -119,7 +119,7 @@ object PrefixJaccard {
       .distinct()
 
     val sets = w.groupBy("doc_id").agg(array_sort(collect_set("word")).as("ws"))
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+    org.apache.spark.sql.graftbridge.GraftSession.install(docs.sparkSession)
     cand
       .join(broadcast(sets.select(col("doc_id").as("contained"), col("ws").as("wsa"))), "contained")
       .join(broadcast(sets.select(col("doc_id").as("container"), col("ws").as("wsb"))), "container")

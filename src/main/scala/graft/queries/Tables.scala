@@ -107,11 +107,10 @@ object Tables {
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     // The engine's native expressions (graft_ln_scaled / graft_exp_micro /
-    // graft_cosine, …) are part of the session surface every inventory
-    // query may reference — registered here (only names the session does
-    // not resolve yet) exactly like the per-session function registration the
-    // reference performs in its SessionProvider.
-    graft.functions.GraftFunctions.register(spark)
+    // graft_cosine, …), its optimizer rule and its planner strategies are
+    // part of every session graft plans on, so the matrix plans as the
+    // service does; install adds only what the session lacks.
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     if (lastDir.get(spark) != dir) {
       // Fault-isolated per table: one broken fixture (round 6: a regenerated
       // events.parquet) must not take down queries over the other nine

@@ -1,7 +1,7 @@
 package graft.service
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftbridge.SparkArrowBridge
+import org.apache.spark.sql.graftbridge.{GraftSession, SparkArrowBridge}
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.catalog.Metadata
@@ -75,6 +75,15 @@ class FlightSqlService(
   private type Meta = Map[String, String]
   private val noMeta: Meta = Map.empty
 
+  /** The provider's session for this request, with everything graft adds
+    * to a session installed: a tenant's fresh session plans like any other.
+    */
+  private def session(meta: Meta): SparkSession = {
+    val spark = provider.session(meta)
+    GraftSession.install(spark)
+    spark
+  }
+
   private def wrap[T](body: => T): T =
     try body
     catch {
@@ -130,7 +139,7 @@ class FlightSqlService(
     * first frame is these same bytes.
     */
   private def queryInfo(cmd: QueryCommand, meta: Meta): FlightInfo = wrap {
-    val served = stream(planQuery(provider.session(meta), cmd, typeUnbound = true))
+    val served = stream(planQuery(session(meta), cmd, typeUnbound = true))
     FlightInfo(ArrowCodec.encodeSchema(served.arrowSchema), CommandTicket(cmd).encode)
   }
 
@@ -150,25 +159,25 @@ class FlightSqlService(
       CommandTicket(cmd).encode)
 
   def getFlightInfoCatalogs(meta: Meta = noMeta): FlightInfo = wrap {
-    metadataInfo(CommandGetCatalogs(), Metadata.catalogsSchema, provider.session(meta))
+    metadataInfo(CommandGetCatalogs(), Metadata.catalogsSchema, session(meta))
   }
 
   def getFlightInfoDbSchemas(cmd: CommandGetDbSchemas, meta: Meta = noMeta): FlightInfo = wrap {
-    metadataInfo(cmd, Metadata.dbSchemasSchema, provider.session(meta))
+    metadataInfo(cmd, Metadata.dbSchemasSchema, session(meta))
   }
 
   def getFlightInfoTables(cmd: CommandGetTables, meta: Meta = noMeta): FlightInfo = wrap {
-    metadataInfo(cmd, Metadata.tablesSchema(cmd.includeSchema), provider.session(meta))
+    metadataInfo(cmd, Metadata.tablesSchema(cmd.includeSchema), session(meta))
   }
 
   def getFlightInfoTableTypes(meta: Meta = noMeta): FlightInfo = wrap {
-    metadataInfo(CommandGetTableTypes(), Metadata.tableTypesSchema, provider.session(meta))
+    metadataInfo(CommandGetTableTypes(), Metadata.tableTypesSchema, session(meta))
   }
 
   // ---- DoGet: ticket dispatch (A6/A7/A14-A17, service.rs:209-311) ----
 
   def doGet(ticketBytes: Array[Byte], meta: Meta = noMeta): ArrowCodec.EncodedStream = wrap {
-    val spark = provider.session(meta)
+    val spark = session(meta)
     CommandTicket.decode(ticketBytes).command match {
       case cmd: QueryCommand => stream(planQuery(spark, cmd, typeUnbound = false))
       case CommandGetCatalogs() => ArrowCodec.encodeStream(Metadata.catalogs(spark))
@@ -182,7 +191,7 @@ class FlightSqlService(
 
   def createPreparedStatement(sql: String, meta: Meta = noMeta): PreparedStatementResult =
     wrap {
-      val spark = provider.session(meta)
+      val spark = session(meta)
       val planned = Params.plan(spark, sql, None, sqlOptions, typeUnbound = true)
       val paramFields =
         planned.parameterTypes.map { case (name, t) => StructField(name, t, nullable = false) }
@@ -238,7 +247,7 @@ class FlightSqlService(
     * (A31).
     */
   def doPutPreparedStatementUpdate(handleBytes: Array[Byte], meta: Meta = noMeta): Long = wrap {
-    val spark = provider.session(meta)
+    val spark = session(meta)
     val handle = QueryHandle.decode(handleBytes)
     ArrowCodec.encodeStream(Params.plan(spark, handle.query, handle.parameters, sqlOptions).df)
       .frames.foreach(_ => ())

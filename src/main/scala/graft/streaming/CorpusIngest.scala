@@ -78,7 +78,7 @@ object CorpusIngest {
   def dedupedIngest(
       spark: SparkSession, dir: String,
       index: MinHashDedup.CorpusIndex, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     // one crawl batch per trigger
     val incoming = EventStream.replay(spark, stage(spark, dir), Map("maxFilesPerTrigger" -> "1"))
       .withColumn("new_words", array_sort(array_distinct(split(col("text"), " "))))

@@ -123,7 +123,7 @@ object VectorIngest {
 
   def buildIndex(spark: SparkSession, dir: String): CellIndex =
     cellIndex(spark, dir) {
-      graft.functions.GraftFunctions.register(spark)
+      org.apache.spark.sql.graftbridge.GraftSession.install(spark)
       // a DEDICATED view name: the shared `embeddings` fixture view is
       // shadowable by test fixtures on the same session, and an index
       // silently built from a shadow would mis-route every ingested vector
@@ -145,7 +145,7 @@ object VectorIngest {
     * squared distance to the list centroid.
     */
   def assignIngest(spark: SparkSession, dir: String, index: CellIndex): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
 
     // the cell table as a literal array expression — the quantizer
     // metadata every ingest executor holds (N^(1/4) x dim doubles)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation, Project, Sort}
-import org.apache.spark.sql.execution.{CoalesceExec, LocalTableScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, LocalTableScanExec, SortExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Planner strategy for results small enough to need no parallelism.
@@ -30,7 +30,7 @@ import org.apache.spark.sql.internal.SQLConf
   * expression it could evaluate; one it left (`1/0`) is planned by Spark
   * and fails at execution, as before.
   */
-final class PlanSmallResults(session: SparkSession) extends GraftStrategy {
+final class PlanSmallResults(session: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Sort(order, true, child, _) if !child.isStreaming &&
         child.stats.sizeInBytes <= session.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) =>

@@ -8,17 +8,7 @@ import org.apache.spark.sql.types._
   * — see FIXTURES.md §1).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
 
   /** users(id int!, name string!) ×3 — integration_test.rs:20-35. */
   def registerUsers(s: SparkSession): Unit = {
@@ -41,8 +31,12 @@ object TestSpark {
     s.createDataFrame(rows, schema).createOrReplaceTempView("orders")
   }
 
+  /** A new child session of [[spark]] holding the reference's `users` and
+    * `orders`, so they never shadow the fixture views `Tables.registerAll`
+    * keeps on the shared session.
+    */
   def fixtures(): SparkSession = {
-    val s = spark
+    val s = spark.newSession()
     registerUsers(s)
     registerOrders(s)
     s

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.graftbridge.GraftSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.Row
@@ -26,7 +27,7 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("matches the SQL aggregate/zip_with fold bit-for-bit") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val df = vecs(
       1L -> Seq(0.1f, -0.2f, 0.3f, 0.7f),
       2L -> Seq(0.5f, 0.1f, -0.3f, 0.2f),
@@ -47,7 +48,7 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("graft_dot_d on integer-valued double arrays is exact (k-means contract)") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     vecs(
       1L -> Seq(0.123f, -0.456f, 0.789f, 0.001f),
       2L -> Seq(-0.5f, 0.25f, 0.125f, 0.999f)).createOrReplaceTempView("vecs_dd")
@@ -66,7 +67,7 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("identical vectors give 1.0; nulls propagate") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     vecs(1L -> Seq(0.3f, 0.4f), 2L -> null).createOrReplaceTempView("vecs_null")
     val self = spark.sql("SELECT graft_cosine(v, v) FROM vecs_null WHERE id = 1").collect()
     assert(math.abs(self.head.getDouble(0) - 1.0) < 1e-12)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.graftbridge.GraftSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -14,7 +15,7 @@ class SortedOverlapSpec extends AnyFunSuite {
 
   test("equals size(array_intersect) on random sorted word sets") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val rng = new scala.util.Random(11)
     val vocab = ('a' to 'z').map(_.toString) ++ Seq("ü", "日本", "", "zz")
     val rows = Seq.fill(300) {
@@ -28,7 +29,7 @@ class SortedOverlapSpec extends AnyFunSuite {
   }
 
   test("nulls propagate; empty arrays overlap nothing") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val r = spark.sql(
       """SELECT graft_overlap(array('x'), CAST(NULL AS ARRAY<STRING>)) AS n,
         |       graft_overlap(CAST(array() AS ARRAY<STRING>), array('x')) AS e""".stripMargin).head

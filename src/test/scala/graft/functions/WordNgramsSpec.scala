@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.graftbridge.GraftSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -13,7 +14,7 @@ class WordNgramsSpec extends AnyFunSuite {
 
   test("emits positioned n-grams via LATERAL VIEW; short/null rows emit nothing") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     Seq((1L, "a b c d"), (2L, "x"), (3L, null))
       .toDF("id", "t").createOrReplaceTempView("ng_v")
 

@@ -18,7 +18,7 @@ class ClusterValiditySpec extends AnyFunSuite {
   test("q_cluster_purity: JVM replay from the contingency table; bounds hold") {
     val sess = spark.newSession()
     graft.queries.Tables.registerAll(sess, sf)
-    graft.functions.GraftFunctions.register(sess)
+    org.apache.spark.sql.graftbridge.GraftSession.install(sess)
     val ct = sess.sql(AnnSql.purityContingencySpark).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
 
@@ -56,7 +56,7 @@ class ClusterValiditySpec extends AnyFunSuite {
   test("q_cluster_silhouette: quantization + rollup replay from the pair table; bounds hold") {
     val sess = spark.newSession()
     graft.queries.Tables.registerAll(sess, sf)
-    graft.functions.GraftFunctions.register(sess)
+    org.apache.spark.sql.graftbridge.GraftSession.install(sess)
     val pairs = sess.sql(AnnSql.silhouettePairsSpark).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
 

@@ -16,7 +16,7 @@ class GraphSearchSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
 
   private lazy val brute = {
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     graft.queries.Tables.registerAll(spark, sf)
     spark.sql(
       """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 7)

@@ -158,7 +158,7 @@ class LlmSpec extends AnyFunSuite {
     assert(got.nonEmpty)
     got.foreach { case (_, ql, _, nl) => assert(ql != nl, "a negative must be cross-label") }
     val mined = got.map(r => (r._1, r._3)).toSet
-    graft.functions.GraftFunctions.register(s)
+    org.apache.spark.sql.graftbridge.GraftSession.install(s)
     val brute = s.sql(
       """WITH q AS (SELECT vec_id AS qid, embedding AS qe, label AS ql
         |           FROM embeddings WHERE vec_id % 50 = 0)
@@ -178,7 +178,7 @@ class LlmSpec extends AnyFunSuite {
     // (−1)·(−1000)) / 2 = 1000 on dim 0; rounds 2-3 classify both
     // correctly and leave w unchanged -> w = (1000, 0, ..., 0).
     val s = spark.newSession()
-    graft.functions.GraftFunctions.register(s)
+    org.apache.spark.sql.graftbridge.GraftSession.install(s)
     val vecs = Seq(
       (1, Array(1.0f) ++ Array.fill(63)(0.0f)),
       (0, Array(-1.0f) ++ Array.fill(63)(0.0f)))
@@ -247,7 +247,7 @@ class LlmSpec extends AnyFunSuite {
   test("PQ ADC and IVF-PQ search rank true near neighbors highly (recall vs brute force)") {
     val sf = "/root/testdata/sf0.001"
     graft.queries.Tables.registerAll(spark, sf)
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     val brute = spark.sql(AnnSql.l2BruteSpark(5)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap
@@ -274,7 +274,7 @@ class LlmSpec extends AnyFunSuite {
   test("hierarchical IVF keeps flat IVF's recall (vs brute-force cosine)") {
     val sf = "/root/testdata/sf0.001"
     graft.queries.Tables.registerAll(spark, sf)
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     def topk(sql: String): Map[Long, Set[Long]] =
       spark.sql(sql).collect().map(r => r.getLong(0) -> r.getLong(1))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -417,7 +417,7 @@ class LlmSpec extends AnyFunSuite {
     // modulus selects a constant fraction — still linear in N); here
     // |sample| = ceil(2500/3) = 834 <= 1000.
     val s = TestSpark.spark.newSession()
-    graft.functions.GraftFunctions.register(s)
+    org.apache.spark.sql.graftbridge.GraftSession.install(s)
     s.range(2500).selectExpr(
       "id AS vec_id",
       "CAST(transform(sequence(1, 64), j -> CAST(pmod(xxhash64(id, j), 1000) AS DOUBLE) / 1000.0 - 0.5) AS ARRAY<FLOAT>) AS embedding",
@@ -455,7 +455,7 @@ class LlmSpec extends AnyFunSuite {
     }
     import spark.implicits._
     rows.toDF("vec_id", "embedding", "label").createOrReplaceTempView("embeddings")
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     try {
       def topk(sql: String): Map[Long, Set[Long]] =
         spark.sql(sql).collect().map(r => r.getLong(0) -> r.getLong(2))

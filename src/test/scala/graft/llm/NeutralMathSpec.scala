@@ -60,7 +60,7 @@ class NeutralMathSpec extends AnyFunSuite {
     }
     val cases = structured ++ random ++ hunters
     val values = cases.map { case (n, d) => s"($n, $d)" }.mkString(", ")
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     val sql =
       s"""WITH src AS (SELECT col1 AS num, col2 AS den FROM VALUES $values),
          |${NeutralMath.lnScaledCtes("c", "src", "num, den", "num, den", "num", "den", "o", "1.0E6")}
@@ -95,7 +95,7 @@ class NeutralMathSpec extends AnyFunSuite {
     val xs = (Seq(0L, 1L, 999999L, 1000000L, 1000001L, 28999999L) ++
       Seq.fill(200)(rnd.nextLong(29000000L))).distinct
     val values = xs.map(x => s"($x)").mkString(", ")
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     val sql =
       s"""WITH src AS (SELECT col1 AS x FROM VALUES $values),
          |${NeutralMath.expMicroCtes("c", "src", "x", "x", "x", "o")}

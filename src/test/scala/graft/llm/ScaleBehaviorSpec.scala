@@ -16,7 +16,7 @@ class ScaleBehaviorSpec extends AnyFunSuite {
     val n = 20000L
     // isolated session: the synthetic corpus shadows the `embeddings` view
     val s = TestSpark.spark.newSession()
-    graft.functions.GraftFunctions.register(s)
+    org.apache.spark.sql.graftbridge.GraftSession.install(s)
     s.range(n).selectExpr(
       "id AS vec_id",
       // deterministic pseudo-random vector, uniform in [-0.5, 0.5) per
@@ -55,7 +55,7 @@ class ScaleBehaviorSpec extends AnyFunSuite {
     // structure.
     val n = 20000L
     val s = TestSpark.spark.newSession()
-    graft.functions.GraftFunctions.register(s)
+    org.apache.spark.sql.graftbridge.GraftSession.install(s)
     s.range(n).selectExpr(
       "id AS vec_id",
       "CAST(transform(sequence(1, 64), j -> CAST(pmod(xxhash64(id, j), 1000) AS DOUBLE) / 1000.0 - 0.5) AS ARRAY<FLOAT>) AS embedding",
@@ -84,7 +84,7 @@ class ScaleBehaviorSpec extends AnyFunSuite {
       // ~20 deterministic words per doc
       "concat_ws(' ', transform(sequence(0, 19), j -> concat('w', CAST(pmod(xxhash64(id, j), 997) AS STRING)))) AS text")
       .createOrReplaceTempView("docs_tmix_scale")
-    graft.functions.GraftFunctions.register(s) // n^0.3 rides graft_ln_scaled/graft_exp_micro
+    org.apache.spark.sql.graftbridge.GraftSession.install(s) // n^0.3 rides graft_ln_scaled/graft_exp_micro
     val rows = s.sql(LlmQueries.temperatureMixSparkSql("docs_tmix_scale")).collect()
     assert(rows.length == 6)
     val byName = rows.map(r => r.getString(0) -> r).toMap

@@ -138,7 +138,7 @@ class SearchRankSpec extends AnyFunSuite {
       0L -> "vector vector filler filler",
       1L -> "vector filler filler filler filler filler filler filler",
       2L -> "noise noise noise noise")
-    graft.functions.GraftFunctions.register(spark) // idf rides graft_ln_scaled
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark) // idf rides graft_ln_scaled
     val got = spark.sql(SearchRank.bm25SparkSql("sr_bm25"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     def bm25(tf: Double, dl: Double): Double = {
@@ -290,7 +290,7 @@ class SearchRankSpec extends AnyFunSuite {
     assert(rr.map(x => x._5 -> x._2).toMap == hy.map(x => x._1 -> x._2).toMap,
       "rrf_rk column must reproduce the hybrid ranking")
     // logits are the real probe scores: recompute one candidate's dot
-    graft.functions.GraftFunctions.register(s2)
+    org.apache.spark.sql.graftbridge.GraftSession.install(s2)
     graft.queries.Tables.registerAll(s2, sf)
     val w = s2.sql(AnnSql.probeTrainSpark()).collect()
       .map(r => r.get(0).toString.toLong -> r.getLong(1)).toMap

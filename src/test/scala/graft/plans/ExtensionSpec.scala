@@ -2,18 +2,19 @@ package graft.plans
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.{BindFilterLiterals, PlanSmallResults}
+import org.apache.spark.sql.graftbridge.{BindFilterLiterals, Carried, GraftSession, PlanSmallResults}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.engine.StaticSessionProvider
+import graft.service.FlightSqlService
 
 /** The config-driven extension surface: a session built with
   * `spark.sql.extensions=graft.plans.GraftSparkSessionExtension` has the
   * graft functions without any imperative registration, the
   * canonicalization rule rewrites commutative cosine calls, and graft's
-  * planner strategies are installed once each, as they are in a session a
-  * `StaticSessionProvider` wraps.
+  * planner strategies are there once each, as they are in a session
+  * `GraftSession.install` equipped, however often it ran.
   */
 class ExtensionSpec extends AnyFunSuite {
 
@@ -54,7 +55,7 @@ class ExtensionSpec extends AnyFunSuite {
     }
   }
 
-  test("the extension installs every function GraftFunctions lists") {
+  test("the extension installs every function GraftSession lists") {
     val calls = Map(
       "graft_cosine" -> "SELECT graft_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F))",
       "graft_dot" -> "SELECT graft_dot(array(1.0F, 2.0F), array(3.0D, 4.0D))",
@@ -64,7 +65,7 @@ class ExtensionSpec extends AnyFunSuite {
         "SELECT ng FROM VALUES ('a b c') t(text) LATERAL VIEW graft_ngrams(text, 2) g AS pos, ng",
       "graft_ln_scaled" -> "SELECT graft_ln_scaled(CAST(1 AS BIGINT), CAST(1 AS BIGINT), 1.0E6)",
       "graft_exp_micro" -> "SELECT graft_exp_micro(CAST(0 AS BIGINT))")
-    assert(calls.keySet == graft.functions.GraftFunctions.all.map(_._1).toSet)
+    assert(calls.keySet == GraftSession.functions.map(_._1).toSet)
     withExtensionSession { s =>
       calls.foreach { case (name, sql) => assert(s.sql(sql).collect().nonEmpty, name) }
     }
@@ -100,12 +101,6 @@ class ExtensionSpec extends AnyFunSuite {
     }
   }
 
-  /** The session planner's instances of each graft strategy. */
-  private def strategies(s: SparkSession): (Int, Int) = {
-    val all = s.sessionState.planner.strategies
-    (all.count(_.isInstanceOf[BindFilterLiterals]), all.count(_.isInstanceOf[PlanSmallResults]))
-  }
-
   /** Codegen compiles of a lookup with a second, fresh key, after a first. */
   private def secondLookupCompiles(s: SparkSession, column: String): Long = {
     def lookup(key: Int) = s.read.parquet("/root/testdata/sf0.001/orders.parquet")
@@ -116,27 +111,36 @@ class ExtensionSpec extends AnyFunSuite {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
+  /** All 7 functions, the rule once and each strategy once. */
+  private val once = (7, Seq(1), Seq(1, 1))
+
   test("the extension's session binds filter literals: a second key compiles nothing") {
     withExtensionSession { s =>
-      assert(strategies(s) == ((1, 1)))
+      assert(Carried(s) == once)
       assert(secondLookupCompiles(s, "o_orderkey") == 0)
-      new StaticSessionProvider(s) // finds the extension's strategies and adds none
-      assert(strategies(s) == ((1, 1)))
+      // install, through the service and registerAll, finds the extension's
+      // functions, rule and strategies and adds none; a child shares them
+      new FlightSqlService(new StaticSessionProvider(s)).getFlightInfoCatalogs()
+      graft.queries.Tables.registerAll(s, "/root/testdata/sf0.001")
+      assert(Carried(s) == once)
+      assert(s.experimental.extraStrategies.isEmpty && s.experimental.extraOptimizations.isEmpty)
+      assert(Carried(s.newSession()) == once)
     }
   }
 
   test("a provider-wrapped session binds filter literals: a second key compiles nothing") {
     val s = TestSpark.spark.newSession()
-    assert(strategies(s) == ((0, 0)))
-    new StaticSessionProvider(s)
+    assert(Carried.noStrategies(s))
+    new FlightSqlService(new StaticSessionProvider(s)).getFlightInfoStatement("SELECT 1 AS one")
+    assert(Carried(s) == once)
     assert(secondLookupCompiles(s, "o_custkey") == 0)
   }
 
-  test("two providers on one session install one instance of each strategy") {
+  test("install twice leaves each function, the rule and each strategy once") {
     val s = TestSpark.spark.newSession()
-    new StaticSessionProvider(s)
-    new StaticSessionProvider(s)
-    assert(strategies(s) == ((1, 1)))
+    GraftSession.install(s)
+    GraftSession.install(s)
+    assert(Carried(s) == once)
     assert(s.experimental.extraStrategies.map(_.getClass) ==
       Seq(classOf[BindFilterLiterals], classOf[PlanSmallResults]))
   }

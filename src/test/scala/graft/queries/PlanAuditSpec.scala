@@ -128,7 +128,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("hierarchical IVF scores O(sqrt nlist) centroids per vector (q_ann_ivf_hier)") {
     import graft.llm.AnnSql
     graft.queries.Tables.registerAll(spark, sf)
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     val r = spark.sql(AnnSql.ivfHierBoundSpark()).collect().head
     val (nlist, nlist1, maxCell, maxEvals) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))

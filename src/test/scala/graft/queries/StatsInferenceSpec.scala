@@ -491,7 +491,7 @@ class StatsInferenceSpec extends AnyFunSuite {
     val rows2 = draws("a", 0.0, 400) ++ draws("b", 0.0, 400) ++ draws("c", 0.0, 400) ++
       draws("shifted", 160000.0, 40)
     s2.createDataFrame(rows2.asJava, schema).createOrReplaceTempView("events")
-    graft.functions.GraftFunctions.register(s2)
+    org.apache.spark.sql.graftbridge.GraftSession.install(s2)
     val got = s2.sql(StatsInference.bhFdrSql(
       graft.llm.NeutralMath.SparkKernel, "explode(sequence(0, 63))", "DIV"))
       .collect().map(r => r.getString(0) -> r.getInt(6)).toMap

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.graftbridge.{BoundLiteral, PlanSmallResults, UnsafeRows}
+import org.apache.spark.sql.graftbridge.{BoundLiteral, Carried, PlanSmallResults, UnsafeRows}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Sessions, Staging, TestSpark}
@@ -38,8 +38,9 @@ class BoundLiteralSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     s
   }
   private lazy val bound = session()
-  /** Plans sorts as `bound` does (its provider installs `PlanSmallResults`
-    * too), so the two sessions differ only in binding.
+  /** Plans sorts as `bound` does (the service installs `PlanSmallResults`
+    * on it too), so the two sessions differ only in binding. Neither the
+    * service nor `Tables.registerAll` ever sees this session.
     */
   private lazy val unbound = {
     val s = session()
@@ -89,6 +90,7 @@ class BoundLiteralSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       }
       assert(served == expected)
       assert(bindsLiteral(text) == !unbindable(where))
+      assert(Carried(unbound)._3 == Seq(0, 1)) // the reference binds nothing
     }
 
   for (where <- cases)

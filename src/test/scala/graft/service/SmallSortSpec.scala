@@ -8,7 +8,7 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.graftbridge.UnsafeRows
+import org.apache.spark.sql.graftbridge.{Carried, UnsafeRows}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Sessions, Staging, TestSpark}
@@ -37,6 +37,7 @@ class SmallSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     s
   }
   private lazy val served = session()
+  /** The reference: no service and no `Tables.registerAll` ever sees it. */
   private lazy val plain = session()
   private lazy val service = new FlightSqlService(new StaticSessionProvider(served))
 
@@ -75,6 +76,7 @@ class SmallSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "SELECT id, k, v, s FROM small_sort ORDER BY s DESC, v NULLS LAST, id DESC"))
     test(s"$text serves the rows, in order, of a session without graft strategies") {
       val expected = UnsafeRows.collected(plain.sql(text))
+      assert(Carried.noStrategies(plain))
       assert(expected.size > 1)
       assert(doGet(text)._1 == expected)
     }

@@ -40,7 +40,7 @@ class VectorIngestSpec extends AnyFunSuite {
     // centroid tier (equi-joined, never shipped) carries the sqrt(N)
     // growth.
     val s = TestSpark.spark.newSession()
-    graft.functions.GraftFunctions.register(s)
+    org.apache.spark.sql.graftbridge.GraftSession.install(s)
     val base = java.nio.file.Paths.get(
       s"target/fixtures/vecingest_scale_${System.nanoTime()}")
     s.range(20000).selectExpr(
@@ -64,7 +64,7 @@ class VectorIngestSpec extends AnyFunSuite {
   }
 
   test("streamed assignment equals the batch closed form (Spark-side)") {
-    graft.functions.GraftFunctions.register(spark)
+    org.apache.spark.sql.graftbridge.GraftSession.install(spark)
     // FORCED re-register: an earlier suite may have shadowed `embeddings`
     // on the shared session (the leak this spec originally caught)
     graft.queries.Tables.reregisterAll(spark, sf)

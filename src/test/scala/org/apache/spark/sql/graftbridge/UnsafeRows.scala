@@ -24,6 +24,15 @@ object UnsafeRows {
     unsafe(df.asInstanceOf[ClassicDataset[_]].queryExecution.executedPlan.executeCollect().iterator,
       df.schema)
 
+  /** The rows `df`'s analyzed plan collects when it is optimized and
+    * planned anew, by the session's strategies as they are now.
+    */
+  def replanned(df: DataFrame): Seq[UnsafeRow] = {
+    val ds = df.asInstanceOf[ClassicDataset[_]]
+    val replan = ds.sparkSession.sessionState.executePlan(ds.queryExecution.analyzed)
+    unsafe(replan.executedPlan.executeCollect().iterator, df.schema)
+  }
+
   private def unsafe(rows: Iterator[InternalRow], schema: StructType): Seq[UnsafeRow] = {
     val project = UnsafeProjection.create(schema)
     rows.map(r => project(r).copy()).toVector
