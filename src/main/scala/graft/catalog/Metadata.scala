@@ -86,10 +86,8 @@ object Metadata {
         // schema (or failing) for tables in other databases.
         val qualified =
           if (t.database != null && t.database.nonEmpty) s"${t.database}.${t.name}" else t.name
-        val arrowSchema = org.apache.spark.sql.graftbridge.SparkArrowBridge
-          .toArrowSchema(spark.table(qualified).schema,
-            spark.sessionState.conf.sessionLocalTimeZone)
-        Row(catalogName, dbName, t.name, tableType, ArrowCodec.encodeSchema(arrowSchema))
+        Row(catalogName, dbName, t.name, tableType,
+          ArrowCodec.encodeSchema(spark.table(qualified).schema, spark))
       } else Row(catalogName, dbName, t.name, tableType)
     }
     df(spark, tablesSchema(cmd.includeSchema), rows)

@@ -4,13 +4,16 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.antlr.v4.runtime.{CharStreams, Token}
+import org.apache.arrow.flatbuf.MessageHeader
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NamedParameter, UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions.{BinaryOperator, Cast, Expression, In, Literal}
 import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftbridge.SparkArrowBridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ipc.ArrowCodec
@@ -135,28 +138,68 @@ object Params {
       .sortBy(_._1) // BTreeMap iteration order = lexicographic by name
   }
 
-  /** Decoded prepared-statement parameters, after the reference's rules
-    * (service.rs:1162-1191): strip a leading `$` from each field name; if
-    * every name is numeric → positional (sorted by index), else named.
+  /** A parameter stream the reference refuses at DoPut (service.rs:826-853). */
+  final case class InvalidParameters(message: String) extends RuntimeException(message)
+
+  /** The schema and first two rows of a parameter stream, read once the
+    * reference's three schema distinctions hold (service.rs:826-853 +
+    * decode_schema at service.rs:1123-1141): a batch before any schema, a
+    * second schema mid-stream and no schema at all each get their own
+    * message, as does a field of an Arrow type Spark cannot read. A
+    * corrupt batch BODY past well-formed headers is no `InvalidParameters`:
+    * the reference, too, propagates mid-stream Arrow decode errors as
+    * decoder errors.
+    */
+  private def read(ipc: Array[Byte]): (StructType, Seq[InternalRow]) = {
+    val kinds =
+      try ArrowCodec.messageHeaderTypes(ipc) // bounds every length before Arrow allocates it
+      catch {
+        case e: Exception =>
+          throw InvalidParameters(s"parameter flight data must have a schema: ${e.getMessage}")
+      }
+    val firstSchema = kinds.indexOf(MessageHeader.Schema)
+    val firstBatch = kinds.indexOf(MessageHeader.RecordBatch)
+    if (firstBatch >= 0 && (firstSchema < 0 || firstBatch < firstSchema))
+      throw InvalidParameters("parameter flight data must have a known schema")
+    if (kinds.count(_ == MessageHeader.Schema) > 1)
+      throw InvalidParameters("parameter flight data must contain a single schema")
+    if (firstSchema < 0)
+      throw InvalidParameters("parameter flight data must have a schema")
+    try SparkArrowBridge.fromIPC(ipc, maxRows = 2)
+    catch {
+      case e: SparkThrowable if e.getCondition == "UNSUPPORTED_ARROWTYPE" =>
+        throw InvalidParameters(s"parameter flight data has a type Spark cannot read: ${e.getMessage}")
+    }
+  }
+
+  /** DoPut's checks of a parameter stream: `read`'s, and at most one row
+    * (service.rs:849-853).
+    */
+  def verifyParameters(ipc: Array[Byte]): Unit =
+    if (read(ipc)._2.size > 1) throw InvalidParameters("parameters should contain a single row")
+
+  /** Decoded prepared-statement parameters, each the literal of its Arrow
+    * field's Spark type, after the reference's rules (service.rs:1162-1191):
+    * strip a leading `$` from each field name; if every name is numeric →
+    * positional (sorted by index), else named. The first row binds; no row
+    * binds nothing.
     */
   sealed trait ParamValues
-  final case class Positional(values: Seq[Any]) extends ParamValues
-  final case class Named(values: Map[String, Any]) extends ParamValues
+  final case class Positional(values: Seq[Literal]) extends ParamValues
+  final case class Named(values: Map[String, Literal]) extends ParamValues
 
   def decodeParamValues(ipc: Array[Byte]): Option[ParamValues] = {
-    val decoded = ArrowCodec.decode(ipc, maxRows = 1)
-    if (decoded.rows.isEmpty) return None
-    val row = decoded.rows.head
-    val names = decoded.schema.getFields
-    val entries = (0 until names.size()).map { i =>
-      val name = names.get(i).getName.stripPrefix("$")
-      (name, name.toIntOption, row(i))
-    }
-    Some(
+    val (schema, rows) = read(ipc)
+    rows.headOption.map { row =>
+      val entries = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        val name = f.name.stripPrefix("$")
+        (name, name.toIntOption, Literal(if (row.isNullAt(i)) null else row.get(i, f.dataType), f.dataType))
+      }
       if (entries.nonEmpty && entries.forall(_._2.isDefined))
         Positional(entries.sortBy(_._2.get).map(_._3))
       else
-        Named(entries.map(e => e._1 -> e._3).toMap))
+        Named(entries.map(e => e._1 -> e._3).toMap)
+    }
   }
 
   /** A planned SQL text: the analyzed, unexecuted DataFrame (a command
@@ -170,8 +213,7 @@ object Params {
     * value's literal in place of its marker, then analyze (the reference's
     * sql_to_logical_plan + verify_plan + with_param_values,
     * service.rs:170-175). Values bind by the rules of `decodeParamValues`,
-    * positional value i to `$<i>`, each converted exactly as
-    * `SparkSession.sql(text, args)` converts an argument (`functions.lit`).
+    * positional value i to `$<i>`, each a literal of its field's type.
     *
     * With `typeUnbound`, a placeholder without a value becomes a NULL of its
     * inferred type, the way the reference plans a placeholder query for its
@@ -187,14 +229,13 @@ object Params {
     val (rewritten, markers) = rewrite(sql)
     val parsed = spark.sessionState.sqlParser.parsePlan(rewritten)
     SqlGate.verify(parsed, options)
-    val values: Map[String, Any] = parameters.filter(_.nonEmpty).flatMap(decodeParamValues) match {
+    val values: Map[String, Literal] = parameters.filter(_.nonEmpty).flatMap(decodeParamValues) match {
       case Some(Positional(vs)) =>
         vs.zipWithIndex.map { case (v, i) => s"$markerPrefix${i + 1}" -> v }.toMap
       case Some(Named(vs)) => vs.map { case (k, v) => s"$markerPrefix$k" -> v }
       case None => Map.empty
     }
-    val bound =
-      substitute(parsed, values.map { case (m, v) => m -> SparkArrowBridge.literal(spark, v) })
+    val bound = substitute(parsed, values)
     val unbound = markers -- values.keys
     val types =
       if (typeUnbound && unbound.nonEmpty) parameterTypes(spark, bound, unbound) else Seq.empty

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.command._
   *
   * The verifier is a plain function over the PARSED plan (validation, not
   * rewrite — the reference applies zero rewrite rules of its own, §4.1);
-  * defaults allow everything, matching SQLOptions::default. Each node falls
+  * defaults allow every class, matching SQLOptions::default. Each node falls
   * in one of four classes, by Spark's plan types:
   *  - DML: the write nodes (INSERT, V2 writes, DELETE/UPDATE/MERGE,
   *    INSERT OVERWRITE DIRECTORY, TRUNCATE, LOAD DATA), under `allowDml`;
@@ -22,9 +22,10 @@ import org.apache.spark.sql.execution.command._
   *  - DDL: every other Spark `Command`, plus `CALL`, under `allowDdl`.
   * The DDL class is the fail-closed default: a command class the gate does
   * not name (ADD JAR, CREATE TEMPORARY FUNCTION, any command a later Spark
-  * adds) is DDL. EXECUTE IMMEDIATE and SQL-script bodies hide their inner
-  * statements from the parsed plan, so they pass only when all three
-  * classes are allowed.
+  * adds) is DDL. EXECUTE IMMEDIATE and SQL-script bodies are refused
+  * whatever the options: they hide their inner statements from the parsed
+  * plan, and Spark's analyzer runs those statements while it plans, so a
+  * served one would run at GetFlightInfo and again at DoGet.
   */
 final case class SqlOptions(
     allowDdl: Boolean = true,
@@ -40,8 +41,8 @@ object SqlGate {
     * and the plans that read-only commands supervise.
     */
   def verify(plan: LogicalPlan, options: SqlOptions): Unit = {
-    val allowed = Map(
-      "DDL" -> options.allowDdl, "DML" -> options.allowDml, "statement" -> options.allowStatements)
+    val allowed = Map("DDL" -> options.allowDdl, "DML" -> options.allowDml,
+      "statement" -> options.allowStatements, "nested statement" -> false)
     plan.foreachWithSubqueries { node =>
       classes(node).find(!allowed(_)).foreach(kind => throw PlanRejected(kind, node.nodeName))
       node match {
@@ -51,9 +52,9 @@ object SqlGate {
     }
   }
 
-  /** The option classes a node needs; empty for queries and read-only commands. */
+  /** The classes a node needs allowed; empty for queries and read-only commands. */
   private def classes(node: LogicalPlan): Seq[String] = node match {
-    case _: UnresolvedExecuteImmediate | _: CompoundPlanStatement => Seq("DDL", "DML", "statement")
+    case _: UnresolvedExecuteImmediate | _: CompoundPlanStatement => Seq("nested statement")
     case _: InsertIntoStatement | _: V2WriteCommand | _: RowLevelWrite | _: DeleteFromTable |
         _: UpdateTable | _: MergeIntoTable | _: InsertIntoDir | _: TruncateTable |
         _: TruncatePartition | _: LoadData => Seq("DML")

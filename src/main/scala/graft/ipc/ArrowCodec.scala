@@ -8,19 +8,23 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.flatbuf.Message
-import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter, ReadChannel, WriteChannel}
+import org.apache.arrow.vector.ipc.{ArrowStreamWriter, ReadChannel, WriteChannel}
 import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
 import org.apache.arrow.vector.types.pojo.{Field, FieldType, Schema => ArrowSchema}
-import org.apache.arrow.vector.util.Text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.graftbridge.SparkArrowBridge
+import org.apache.spark.sql.types.StructType
 
 /** Arrow IPC data plane (SURVEY §2.A A4/A18/A24): DataFrame → IPC stream
-  * bytes, IPC bytes → rows (for prepared-statement parameters), and the
-  * standalone schema message codec used in FlightInfo / prepared-statement
-  * results (mirrors encode_schema/decode_schema,
+  * bytes, IPC bytes → Spark rows (prepared-statement parameters, federated
+  * results, clients), and the standalone schema message codec used in
+  * FlightInfo / prepared-statement results (mirrors
+  * encode_schema/decode_schema,
   * datafusion-flight-sql-server/src/service.rs:1032-1041, 1123-1141).
+  * Both directions are Spark's `ArrowConverters`, so a value crosses the
+  * wire with the one Arrow↔Spark type mapping.
   *
   * Encoding is streaming: each partition is encoded into record batches
   * inside its own Spark task (SparkArrowBridge.arrowBatches) and the Spark driver
@@ -72,9 +76,7 @@ object ArrowCodec {
   def encodeStream(
       df: DataFrame,
       fieldMetadata: Seq[Map[String, String]] = Seq.empty): EncodedStream = {
-    val arrowSchema = withFieldMetadata(
-      SparkArrowBridge.toArrowSchema(df.schema, df.sparkSession.sessionState.conf.sessionLocalTimeZone),
-      fieldMetadata)
+    val arrowSchema = withFieldMetadata(toArrowSchema(df.schema, df.sparkSession), fieldMetadata)
     val frames = Iterator.single(encodeSchema(arrowSchema)) ++
       SparkArrowBridge.arrowBatches(df, batchSize) ++
       Iterator.single(endOfStream)
@@ -87,34 +89,23 @@ object ArrowCodec {
     out.toByteArray
   }
 
-  /** Decoded IPC stream: schema + row-major values (Arrow `Text` → String).
-    * Used for prepared-statement parameters and tests — results stay
-    * streaming, only small payloads pass through here.
+  /** The schema and rows of an IPC stream, in Spark's types, read by
+    * Spark's own reader after every length the stream claims is bounded.
+    */
+  def read(bytes: Array[Byte]): (StructType, Seq[InternalRow]) = {
+    messageHeaderTypes(bytes) // bounds every length before Arrow allocates it
+    SparkArrowBridge.fromIPC(bytes, Int.MaxValue)
+  }
+
+  /** Decoded IPC stream: the Arrow schema and row-major values, each the
+    * external value `collect()` returns for its Spark type.
     */
   final case class DecodedStream(schema: ArrowSchema, rows: Seq[Seq[Any]])
 
-  /** At most `maxRows` rows are materialized: a batch of a type without
-    * buffers (Null) can claim billions of rows in a few bytes.
-    */
-  def decode(bytes: Array[Byte], maxRows: Int = Int.MaxValue): DecodedStream = {
-    messageHeaderTypes(bytes) // bounds every length before Arrow allocates it
-    val allocator = SparkArrowBridge.childAllocator("graft-decode")
-    val reader = new ArrowStreamReader(new ByteArrayInputStream(bytes), allocator)
-    try {
-      val root = reader.getVectorSchemaRoot
-      val schema = root.getSchema
-      val rows = ArrayBuffer.empty[Seq[Any]]
-      while (rows.size < maxRows && reader.loadNextBatch()) {
-        val vectors = root.getFieldVectors.asScala
-        (0 until math.min(root.getRowCount, maxRows - rows.size)).foreach { i =>
-          rows += vectors.map(v => normalize(v.getObject(i))).toSeq
-        }
-      }
-      DecodedStream(schema, rows.toSeq)
-    } finally {
-      reader.close()
-      allocator.close()
-    }
+  def decode(bytes: Array[Byte]): DecodedStream = {
+    val (schema, rows) = read(bytes)
+    val external = CatalystTypeConverters.createToScalaConverter(schema)
+    DecodedStream(decodeSchema(bytes), rows.map(external(_).asInstanceOf[Row].toSeq))
   }
 
   /** Header types of every message in an IPC stream, in order (values from
@@ -122,12 +113,12 @@ object ArrowCodec {
     * marker). Lets the service reproduce the reference's exact
     * parameter-stream error distinctions — batch-before-schema vs second
     * schema vs no schema at all (service.rs:826-853, 1123-1141) — which a
-    * plain ArrowStreamReader pass cannot tell apart.
+    * plain Arrow reader pass cannot tell apart.
     *
     * It walks the stream's framing without allocating and refuses a
     * metadata or body length beyond the bytes left, an `IOException`:
     * Arrow's own reader allocates whatever length a message claims before
-    * reading it, so `decode` runs this check first.
+    * reading it, so every read runs this check first.
     */
   def messageHeaderTypes(bytes: Array[Byte]): Seq[Byte] = {
     val in = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -151,13 +142,15 @@ object ArrowCodec {
     kinds.toSeq
   }
 
-  private def normalize(v: Any): Any = v match {
-    case t: Text => t.toString
-    case l: java.util.List[_] => l.asScala.map(normalize).toSeq
-    case other => other
-  }
-
   // ---- standalone schema message codec (A24) ----
+
+  /** A Spark schema as an Arrow schema, timestamps in the session time zone. */
+  private def toArrowSchema(schema: StructType, spark: SparkSession): ArrowSchema =
+    SparkArrowBridge.toArrowSchema(schema, spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** A Spark schema's schema message, as `encodeStream` would frame it. */
+  def encodeSchema(schema: StructType, spark: SparkSession): Array[Byte] =
+    encodeSchema(toArrowSchema(schema, spark))
 
   def encodeSchema(schema: ArrowSchema): Array[Byte] = {
     val out = new ByteArrayOutputStream()

@@ -91,11 +91,8 @@ object ExtraQueries {
     * is re-registered as a DataFrame (§2.B.1 Arrow IPC scan).
     */
   private def arrowIpcScan(s: SparkSession, d: String): DataFrame = {
-    val bytes = ArrowCodec.encodeStream(Tables.region(s, d)).toBytes
-    val decoded = ArrowCodec.decode(bytes)
-    val schema = org.apache.spark.sql.graftbridge.SparkArrowBridge.fromArrowSchema(decoded.schema)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(decoded.rows.map(Row.fromSeq).asJava, schema)
+    val (schema, rows) = ArrowCodec.read(ArrowCodec.encodeStream(Tables.region(s, d)).toBytes)
+    org.apache.spark.sql.graftbridge.SparkArrowBridge.localRelation(s, schema, rows)
       .orderBy("r_regionkey")
   }
 

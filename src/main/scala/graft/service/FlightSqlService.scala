@@ -153,10 +153,7 @@ class FlightSqlService(
     queryInfo(CommandStatementSubstraitPlan(plan), meta)
 
   private def metadataInfo(cmd: Command, schema: StructType, spark: SparkSession): FlightInfo =
-    FlightInfo(
-      ArrowCodec.encodeSchema(SparkArrowBridge.toArrowSchema(
-        schema, spark.sessionState.conf.sessionLocalTimeZone)),
-      CommandTicket(cmd).encode)
+    FlightInfo(ArrowCodec.encodeSchema(schema, spark), CommandTicket(cmd).encode)
 
   def getFlightInfoCatalogs(meta: Meta = noMeta): FlightInfo = wrap {
     metadataInfo(CommandGetCatalogs(), Metadata.catalogsSchema, session(meta))
@@ -195,48 +192,24 @@ class FlightSqlService(
       val planned = Params.plan(spark, sql, None, sqlOptions, typeUnbound = true)
       val paramFields =
         planned.parameterTypes.map { case (name, t) => StructField(name, t, nullable = false) }
-      val paramSchema = SparkArrowBridge.toArrowSchema(
-        StructType(paramFields), spark.sessionState.conf.sessionLocalTimeZone)
       PreparedStatementResult(
         QueryHandle(sql, None).encode,
         ArrowCodec.encodeSchema(stream(planned.df).arrowSchema),
-        ArrowCodec.encodeSchema(paramSchema))
+        ArrowCodec.encodeSchema(StructType(paramFields), spark))
     }
 
   /** Parameters arrive as a one-schema, ≤1-row Arrow IPC stream and ride
-    * back to the client inside the new handle (service.rs:810-862).
+    * back to the client inside the new handle (service.rs:810-862); a
+    * stream `Params.verifyParameters` refuses is an invalid argument, with
+    * the reference's message.
     */
   def doPutPreparedStatementQuery(
       handleBytes: Array[Byte],
       parameterStream: Array[Byte],
       meta: Meta = noMeta): Array[Byte] = wrap {
     val handle = QueryHandle.decode(handleBytes)
-    // Replicate the reference's three parameter-stream error distinctions
-    // (service.rs:826-853 + decode_schema at service.rs:1123-1141): a batch
-    // before any schema, a second schema mid-stream, and no schema at all
-    // each get their own message.
-    val schemaHeader = org.apache.arrow.flatbuf.MessageHeader.Schema
-    val batchHeader = org.apache.arrow.flatbuf.MessageHeader.RecordBatch
-    val kinds =
-      try ArrowCodec.messageHeaderTypes(parameterStream)
-      catch {
-        case e: Exception =>
-          throw Status.invalidArgument(s"parameter flight data must have a schema: ${e.getMessage}")
-      }
-    val firstSchema = kinds.indexOf(schemaHeader)
-    if (kinds.exists(_ == batchHeader) &&
-        (firstSchema < 0 || kinds.indexOf(batchHeader) < firstSchema))
-      throw Status.invalidArgument("parameter flight data must have a known schema")
-    if (kinds.count(_ == schemaHeader) > 1)
-      throw Status.invalidArgument("parameter flight data must contain a single schema")
-    if (firstSchema < 0)
-      throw Status.invalidArgument("parameter flight data must have a schema")
-    // A corrupt batch BODY past well-formed headers decodes outside the
-    // invalid-argument guard and surfaces as Internal — matching the
-    // reference, where mid-stream Arrow decode errors propagate as decoder
-    // errors rather than the three classified invalid-argument cases.
-    if (ArrowCodec.decode(parameterStream, maxRows = 2).rows.size > 1)
-      throw Status.invalidArgument("parameters should contain a single row")
+    try Params.verifyParameters(parameterStream)
+    catch { case e: Params.InvalidParameters => throw Status.invalidArgument(e.message) }
     handle.copy(parameters = Some(parameterStream)).encode
   }
 

@@ -1,8 +1,6 @@
 package graft.service
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.SparkArrowBridge
 import org.apache.spark.sql.types.StructType
 
@@ -17,6 +15,8 @@ import graft.ipc.ArrowCodec
   * server emits a single endpoint per query (service.rs:337), so the merge
   * degenerates to that one stream here too. Execution is lazy on the
   * service side (the plan runs as the stream is pulled, lib.rs:69-83).
+  * The streams are read by Spark's own Arrow reader (`ArrowCodec.read`),
+  * and their rows, already in Spark's types, become a local relation.
   */
 class RemoteSqlClient(
     service: FlightSqlService,
@@ -33,11 +33,8 @@ class RemoteSqlClient(
     * full DataSourceV2 integration each endpoint becomes one partition.
     */
   def executeInfo(info: FlightInfo): DataFrame = {
-    val schema = sparkSchema(info.schemaBytes)
-    val rows = info.endpoints.flatMap { t =>
-      ArrowCodec.decode(service.doGet(t).toBytes).rows.map(Row.fromSeq)
-    }.asJava
-    spark.createDataFrame(rows, schema)
+    val rows = info.endpoints.flatMap(t => ArrowCodec.read(service.doGet(t).toBytes)._2)
+    SparkArrowBridge.localRelation(spark, sparkSchema(info.schemaBytes), rows)
   }
 
   /** Schema discovery via `select * from {t} limit 1` — GetFlightInfo only,

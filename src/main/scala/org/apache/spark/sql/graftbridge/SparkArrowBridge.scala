@@ -1,25 +1,25 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.arrow.memory.BufferAllocator
 import org.apache.arrow.vector.types.pojo.{Schema => ArrowSchema}
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{functions, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{CommandExecutionMode, LocalTableScanExec}
 import org.apache.spark.sql.execution.arrow.ArrowConverters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.ArrowUtils
 
 /** Bridge into Spark's `private[sql]` Arrow and plan machinery (SURVEY
-  * §7.4): Spark's own schema converter and batch encoder handle every type
-  * in our surface — lists, decimals, timestamps — identically to what
-  * Spark's Python/R interop emits, so the IPC layer never writes vectors
-  * itself.
+  * §7.4): Spark's own schema converter, batch encoder and stream reader
+  * handle every type in our surface — lists, structs, maps, decimals,
+  * dates, timestamps — identically to what Spark's Python/R interop emits,
+  * so the IPC layer never reads or writes vectors itself.
   */
 object SparkArrowBridge {
 
@@ -32,11 +32,29 @@ object SparkArrowBridge {
   def fromArrowSchema(schema: ArrowSchema): StructType =
     ArrowUtils.fromArrowSchema(schema)
 
-  /** A child of Spark's shared Arrow allocator for one driver-side decode;
-    * the caller closes it when the decode ends.
+  /** The schema and first `maxRows` rows of an Arrow IPC stream, read by
+    * Spark's own reader (`ArrowConverters.fromIPCStream`) into Spark's
+    * types and copied off Arrow memory as `UnsafeRow`s; the reader's
+    * allocator is closed on every path. Arrow allocates whatever length a
+    * message claims, so the caller bounds the stream first
+    * (`ArrowCodec.messageHeaderTypes`). A type Spark cannot read fails
+    * with `UNSUPPORTED_ARROWTYPE`, naming it. The copy is interpreted, not
+    * generated: a generated projection per result schema would fill
+    * `CodeGenerator`'s cache, which served query shapes share. Every field
+    * is read as nullable, whatever the sender declared.
     */
-  def childAllocator(name: String): BufferAllocator =
-    ArrowUtils.rootAllocator.newChildAllocator(name, 0, Long.MaxValue)
+  def fromIPC(bytes: Array[Byte], maxRows: Int): (StructType, Seq[InternalRow]) = {
+    val (rows, schema) = ArrowConverters.fromIPCStream(bytes)
+    try {
+      val copy = InterpretedUnsafeProjection.createProjection(
+        schema.fields.toSeq.zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, nullable = true) })
+      (schema, rows.take(maxRows).map(copy(_).copy()).toVector)
+    } finally rows.close()
+  }
+
+  /** Rows in Spark's types as the DataFrame of a local relation. */
+  def localRelation(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** The query result as serialized Arrow record-batch messages of at most
     * `maxRowsPerBatch` rows. A local relation (metadata results, a `VALUES`
@@ -69,12 +87,6 @@ object SparkArrowBridge {
   def outputQualifiers(df: DataFrame): Seq[(String, Option[String])] =
     df.asInstanceOf[ClassicDataset[_]].queryExecution.analyzed.output
       .map(a => a.name -> a.qualifier.lastOption)
-
-  /** A bound query parameter as the literal `SparkSession.sql(text, args)`
-    * makes of it: `functions.lit`'s expression.
-    */
-  def literal(spark: SparkSession, value: Any): Expression =
-    spark.asInstanceOf[ClassicSparkSession].expression(functions.lit(value))
 
   /** Wrap an (already parsed/verified) logical plan as an analyzed,
     * unexecuted DataFrame. `Dataset.ofRows` plans in

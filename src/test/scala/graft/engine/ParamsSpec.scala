@@ -3,6 +3,7 @@ package graft.engine
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 
 import graft.TestSpark
@@ -97,7 +98,7 @@ class ParamsSpec extends AnyFunSuite {
   test("all-numeric names decode as positional, sorted by index (service.rs:1174-1183)") {
     val ipc = paramStream(Seq("$2" -> StringType, "$1" -> IntegerType), Row("x", 7))
     Params.decodeParamValues(ipc) match {
-      case Some(Params.Positional(values)) => assert(values == Seq(7, "x"))
+      case Some(Params.Positional(values)) => assert(values == Seq(Literal(7), Literal("x")))
       case other => fail(s"expected positional, got $other")
     }
   }
@@ -105,9 +106,27 @@ class ParamsSpec extends AnyFunSuite {
   test("non-numeric names decode as a named map with $ stripped (service.rs:1184-1191)") {
     val ipc = paramStream(Seq("$min_amount" -> IntegerType, "$2" -> StringType), Row(5, "y"))
     Params.decodeParamValues(ipc) match {
-      case Some(Params.Named(values)) => assert(values == Map("min_amount" -> 5, "2" -> "y"))
+      case Some(Params.Named(values)) =>
+        assert(values == Map("min_amount" -> Literal(5), "2" -> Literal("y")))
       case other => fail(s"expected named, got $other")
     }
+  }
+
+  test("a value of every Arrow type Spark reads binds and returns as sent") {
+    val sent = spark.sql(
+      """SELECT CAST(1 AS TINYINT) AS `$1`, CAST(2 AS SMALLINT) AS `$2`, 3 AS `$3`, 4L AS `$4`,
+        |CAST(5.5 AS FLOAT) AS `$5`, 6.5D AS `$6`, CAST(7.25 AS DECIMAL(12,3)) AS `$7`,
+        |'eight' AS `$8`, X'09' AS `$9`, true AS `$10`, DATE'2020-01-11' AS `$11`,
+        |TIMESTAMP'2020-01-12 12:00:00.000012' AS `$12`,
+        |TIMESTAMP_NTZ'2020-01-13 13:00:00' AS `$13`, NULL AS `$14`,
+        |INTERVAL '1-3' YEAR TO MONTH AS `$15`, INTERVAL '2 03:04:05.000006' DAY TO SECOND AS `$16`,
+        |array(17, NULL) AS `$17`, named_struct('a', 18, 'b', 'x') AS `$18`,
+        |map('k', 19.5D) AS `$19`, make_interval(0, 1, 0, 2, 0, 0, 0.000003) AS `$20`""".stripMargin)
+    val ipc = ArrowCodec.encodeStream(sent).toBytes
+    val selected = (1 to 20).map(i => s"$$$i AS c$i").mkString("SELECT ", ", ", "")
+    val bound = Params.plan(spark, selected, Some(ipc)).df
+    assert(bound.schema.map(_.dataType) == sent.schema.map(_.dataType))
+    assert(bound.collect().toSeq == sent.collect().toSeq)
   }
 
   test("bind executes with positional parameters") {

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Plan-verifier gate (SURVEY §4.4.1; SQLOptions semantics of
-  * service.rs:170-175): validation only, defaults allow everything.
+  * service.rs:170-175): validation only, defaults allow every class;
+  * statements that hide an inner statement are never allowed.
   */
 class SqlGateSpec extends AnyFunSuite {
 
@@ -30,9 +31,15 @@ class SqlGateSpec extends AnyFunSuite {
     SqlGate.verify(parse("SELECT 1"), SqlOptions())
     SqlGate.verify(parse("CREATE TABLE t(i INT) USING parquet"), SqlOptions())
     SqlGate.verify(parse("SET spark.sql.ansi.enabled=true"), SqlOptions())
-    for (sql <- bypasses ++ Seq("EXECUTE IMMEDIATE 'SELECT 1'", "BEGIN SELECT 1; END",
-        "INSERT INTO t VALUES (1)", "DROP VIEW v"))
+    for (sql <- bypasses ++ Seq("INSERT INTO t VALUES (1)", "DROP VIEW v"))
       withClue(sql)(SqlGate.verify(parse(sql), SqlOptions()))
+  }
+
+  test("EXECUTE IMMEDIATE and SQL scripts are refused whatever the options") {
+    for (opts <- Seq(SqlOptions(), denyAll);
+        sql <- Seq("EXECUTE IMMEDIATE 'SELECT 1'", "BEGIN SELECT 1; END",
+          "EXPLAIN EXECUTE IMMEDIATE 'SELECT 1'"))
+      withClue(s"$opts $sql")(intercept[SqlGate.PlanRejected](SqlGate.verify(parse(sql), opts)))
   }
 
   test("allowDdl=false rejects CREATE/DROP but not queries") {

@@ -29,18 +29,32 @@ class ArrowCodecSpec extends AnyFunSuite {
       StructField("s", StringType, nullable = true),
       StructField("b", BooleanType, nullable = true),
       StructField("bin", BinaryType, nullable = true),
-      StructField("arr", ArrayType(FloatType), nullable = true)))
+      StructField("arr", ArrayType(FloatType), nullable = true),
+      StructField("date", DateType, nullable = true),
+      StructField("ts", TimestampType, nullable = true),
+      StructField("ntz", TimestampNTZType, nullable = true),
+      StructField("dec", DecimalType(10, 2), nullable = true),
+      StructField("st", StructType(Seq(StructField("a", IntegerType), StructField("b", StringType)))),
+      StructField("m", MapType(StringType, DoubleType), nullable = true),
+      StructField("strs", ArrayType(StringType), nullable = true),
+      StructField("none", NullType, nullable = true)))
     val rows = java.util.Arrays.asList(
-      Row(1, 2L, 3.5, 4.5f, "hello", true, Array[Byte](1, 2), Seq(0.1f, 0.2f)),
-      Row(2, null, null, null, null, null, null, null))
+      Row(1, 2L, 3.5, 4.5f, "hello", true, Array[Byte](1, 2), Seq(0.1f, 0.2f),
+        java.sql.Date.valueOf("2020-01-01"),
+        java.sql.Timestamp.from(java.time.Instant.parse("2020-01-01T12:00:00.000001Z")),
+        java.time.LocalDateTime.of(2020, 1, 1, 12, 0, 0, 1000), new java.math.BigDecimal("12.50"),
+        Row(1, "x"), Map("k" -> 2.5), Seq("p", null, "q"), null),
+      Row(2, null, null, null, null, null, null, null, null, null, null, null, null, null, null, null))
     val df = spark.createDataFrame(rows, schema)
     val decoded = ArrowCodec.decode(ArrowCodec.encodeStream(df).toBytes)
-    assert(decoded.schema.getFields.size == 8)
+    assert(decoded.schema.getFields.size == 16)
+    assert(decoded.rows.map(Row.fromSeq) == df.collect().toSeq) // collect()'s values, every type
     assert(decoded.rows.size == 2)
     val r0 = decoded.rows.find(_.head == 1).get
     assert(r0(1) == 2L && r0(2) == 3.5 && r0(3) == 4.5f && r0(4) == "hello" && r0(5) == true)
     assert(r0(6).asInstanceOf[Array[Byte]].toSeq == Seq[Byte](1, 2))
     assert(r0(7) == Seq(0.1f, 0.2f))
+    assert(r0(8) == java.sql.Date.valueOf("2020-01-01") && r0(11) == new java.math.BigDecimal("12.50"))
     val r1 = decoded.rows.find(_.head == 2).get
     assert(r1.tail.forall(_ == null))
   }
@@ -167,6 +181,21 @@ class ArrowCodecSpec extends AnyFunSuite {
     }
     // allocator health: a full valid round-trip still works after the junk
     assert(ArrowCodec.decode(valid).rows.size == 100)
+  }
+
+  test("a stream the reader refuses closes the reader's allocator") {
+    val shared = SharedArrowMemory.allocator
+    val (children, start) = (shared.getChildAllocators.size, shared.getAllocatedMemory)
+    val one = ArrowCodec.encodeStream(spark.range(10).toDF("id")).frames.toVector
+    val two = ArrowCodec.encodeStream(spark.range(10).selectExpr("id", "id AS j")).frames.toVector
+    val refused = Seq(
+      SharedArrowMemory.uint32Stream("u", 7), // a type Spark cannot read: refused at the schema
+      (one.head +: two.tail).flatten.toArray) // two-column batches under a one-column schema
+    for (bytes <- refused) {
+      intercept[Exception](ArrowCodec.read(bytes))
+      assert(shared.getChildAllocators.size == children)
+      assert(shared.getAllocatedMemory == start)
+    }
   }
 
   test("timestamp columns round-trip (µs precision)") {

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Sessions, Staging, TestSpark}
 import graft.engine.{Params, StaticSessionProvider}
+import graft.ipc.ArrowCodec
 
 /** Filter literals bound as generated-code references serve exactly the
   * rows, EXPLAIN text and pushed filters of an unbound session: the edge
@@ -86,7 +87,7 @@ class BoundLiteralSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val expected = withConf(unbound)(UnsafeRows.collected(unbound.sql(text)))
       val served = withConf(bound) {
         val frames = service.doGet(service.getFlightInfoStatement(text).ticket).toBytes
-        UnsafeRows.decoded(frames)
+        ArrowCodec.read(frames)._2
       }
       assert(served == expected)
       assert(bindsLiteral(text) == !unbindable(where))

@@ -1,6 +1,7 @@
 package graft.service
 
 import org.apache.spark.graftbridge.Jobs
+import org.apache.spark.sql.graftbridge.SharedArrowMemory
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -293,6 +294,35 @@ class FlightSqlServiceSpec extends AnyFunSuite {
     assert(ArrowCodec.decode(service.doGet(info.ticket).toBytes).rows == Seq(Seq(null)))
   }
 
+  test("DATE and TIMESTAMP prepared parameters bind as their types and return the matching row") {
+    import org.apache.spark.sql.types.{DateType, TimestampType}
+    spark.sql(
+      """CREATE OR REPLACE TEMPORARY VIEW dated AS SELECT * FROM VALUES
+        |(1, DATE'2020-01-01', TIMESTAMP'2020-01-01 12:00:00'),
+        |(2, DATE'2020-01-02', TIMESTAMP'2020-01-02 12:00:00.000001') t(id, d, ts)""".stripMargin)
+    def run(sql: String, bytes: Array[Byte]): Seq[Seq[Any]] = {
+      val created = service.createPreparedStatement(sql)
+      val handle = service.doPutPreparedStatementQuery(created.handle, bytes)
+      val info = service.getFlightInfoPreparedStatement(handle)
+      ArrowCodec.decode(service.doGet(info.ticket).toBytes).rows
+    }
+    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2020-01-02T12:00:00.000001Z"))
+    assert(run("SELECT id FROM dated WHERE d = $1",
+      param(DateType, java.sql.Date.valueOf("2020-01-02"))) == Seq(Seq(2)))
+    assert(run("SELECT id FROM dated WHERE ts = $1", param(TimestampType, ts)) == Seq(Seq(2)))
+    assert(run("SELECT id, d FROM dated WHERE d < $1",
+      param(DateType, java.sql.Date.valueOf("2020-01-02"))) ==
+      Seq(Seq(1, java.sql.Date.valueOf("2020-01-01"))))
+  }
+
+  test("a parameter of an Arrow type Spark cannot read is an invalid argument at DoPut, naming it") {
+    val created = service.createPreparedStatement("SELECT name FROM users WHERE id = $1")
+    val e = intercept[Status](
+      service.doPutPreparedStatementQuery(created.handle, SharedArrowMemory.uint32Stream("$1", 7)))
+    assert(e.code == Status.InvalidArgument)
+    assert(e.message.contains("Int(32, false)"), e.message)
+  }
+
   test("register_sql_info is a no-op hook (service.rs:1013)") {
     service.registerSqlInfo(0, "anything") // must not throw, registers nothing
     // the SqlInfo surface stays unimplemented exactly as before
@@ -525,13 +555,17 @@ class FlightSqlServiceSpec extends AnyFunSuite {
     } finally spark.catalog.dropTempView("replan_probe")
   }
 
-  private def intParam(field: String, v: Int): Array[Byte] = {
+  /** A one-row parameter stream of one field with the given type and value. */
+  private def param(t: org.apache.spark.sql.types.DataType, v: Any, field: String = "$1"): Array[Byte] = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
     ArrowCodec.encodeStream(spark.createDataFrame(
       java.util.Arrays.asList(Row(v)),
-      StructType(Seq(StructField(field, IntegerType, nullable = false))))).toBytes
+      StructType(Seq(StructField(field, t, nullable = false))))).toBytes
   }
+
+  private def intParam(field: String, v: Int): Array[Byte] =
+    param(org.apache.spark.sql.types.IntegerType, v, field)
 
   test("a $ inside a backtick-quoted alias is not a placeholder, at GetFlightInfo or DoGet") {
     val info = service.getFlightInfoStatement("SELECT 1 AS `a$1`")
@@ -604,6 +638,21 @@ class FlightSqlServiceSpec extends AnyFunSuite {
       val frames = service.doGet(info.ticket).frames
       assert(frames.next().sameElements(info.schemaBytes))
       assert(probeRows == 0)
+    }
+  }
+
+  test("EXECUTE IMMEDIATE and a SQL script are refused under the default options: nothing runs") {
+    withProbeTable {
+      for (sql <- Seq("EXECUTE IMMEDIATE 'INSERT INTO probe_ins VALUES (9)'",
+          "BEGIN INSERT INTO probe_ins VALUES (9); END")) withClue(sql) {
+        val e1 = intercept[Status](service.getFlightInfoStatement(sql))
+        assert(e1.message.contains("nested statement"))
+        assert(probeRows == 0)
+        val e2 = intercept[Status](
+          service.doGet(CommandTicket(CommandStatementQuery(sql)).encode).toBytes)
+        assert(e2.message.contains("nested statement"))
+        assert(probeRows == 0)
+      }
     }
   }
 

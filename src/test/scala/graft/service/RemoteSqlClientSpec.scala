@@ -44,6 +44,17 @@ class RemoteSqlClientSpec extends AnyFunSuite {
     assert(merged.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 3))
   }
 
+  test("DATE, TIMESTAMP and STRUCT columns federate with the values a local collect returns") {
+    val sql = """SELECT id, DATE'2020-01-01' + id AS d,
+                 |TIMESTAMP'2020-01-01 12:00:00.000001' AS ts,
+                 |named_struct('n', name, 'k', id * 10) AS st
+                 |FROM users ORDER BY id""".stripMargin
+    val remote = client.execute(sql)
+    assert(remote.schema == spark.sql(sql).schema)
+    assert(remote.collect().toSeq == spark.sql(sql).collect().toSeq)
+    assert(remote.collect().head.getDate(1) == java.sql.Date.valueOf("2020-01-02"))
+  }
+
   test("tableSchema via LIMIT 1 trick, no data pulled (A35)") {
     val schema = client.tableSchema("users")
     assert(schema.fields.map(f => (f.name, f.dataType)).toSeq ==

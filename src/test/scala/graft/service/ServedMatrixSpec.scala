@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, TestSpark}
 import graft.engine.StaticSessionProvider
+import graft.ipc.ArrowCodec
 
 /** Every SQL-text spec of the operator matrix, served: its Spark SQL goes
   * through GetFlightInfo and DoGet at sf0.001, and the decoded stream must
@@ -35,7 +36,7 @@ class ServedMatrixSpec extends AnyFunSuite {
       val info = service.getFlightInfoStatement(text)
       val frames = service.doGet(info.ticket).frames.toVector
       assert(info.schemaBytes.sameElements(frames.head))
-      val served = UnsafeRows.decoded(frames.flatten.toArray)
+      val served = ArrowCodec.read(frames.flatten.toArray)._2
       assert(served.size == expected.size)
       assert(served == expected)
     }

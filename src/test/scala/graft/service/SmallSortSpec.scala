@@ -2,7 +2,7 @@ package graft.service
 
 import org.apache.spark.graftbridge.Jobs
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, TakeOrderedAndProjectExec}
@@ -13,6 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Sessions, Staging, TestSpark}
 import graft.engine.{Params, StaticSessionProvider}
+import graft.ipc.ArrowCodec
 
 /** A served global sort over a small input runs in one task: the child is
   * coalesced to one partition under the sort, so no range exchange, no
@@ -50,7 +51,7 @@ class SmallSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def doGet(text: String) = {
     val ticket = service.getFlightInfoStatement(text).ticket
     val (frames, jobs) = Jobs.counted(served.sparkContext)(service.doGet(ticket).toBytes)
-    (UnsafeRows.decoded(frames), jobs)
+    (ArrowCodec.read(frames)._2, jobs)
   }
 
   private def plan(text: String): SparkPlan =
@@ -86,8 +87,8 @@ class SmallSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   for (text <- Seq("SELECT k, id, v FROM small_sort ORDER BY k",
       "SELECT v, id, s FROM small_sort ORDER BY v DESC NULLS LAST"))
     test(s"$text serves the rows of a session without graft strategies, keys in order") {
-      def key(rows: Seq[UnsafeRow]) = rows.map(r => Option.when(!r.isNullAt(0))(r.getLong(0)))
-      def counts(rows: Seq[UnsafeRow]) = rows.groupMapReduce(identity)(_ => 1)(_ + _)
+      def key(rows: Seq[InternalRow]) = rows.map(r => Option.when(!r.isNullAt(0))(r.getLong(0)))
+      def counts(rows: Seq[InternalRow]) = rows.groupMapReduce(identity)(_ => 1)(_ + _)
       val expected = UnsafeRows.collected(plain.sql(text))
       val served = doGet(text)._1
       assert(key(served) == key(expected))
